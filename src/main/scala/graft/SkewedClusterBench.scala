@@ -38,6 +38,8 @@ object SkewedClusterBench {
   def main(args: Array[String]): Unit = {
     val nRows = args.headOption.map(_.toLong).getOrElse(16000000L)
     val nBuckets = args.drop(1).headOption.map(_.toInt).getOrElse(64)
+    // the cold side spreads over buckets 1..n-1 (n - 1 is a divisor)
+    require(nBuckets >= 2, s"nBuckets must be >= 2: $nBuckets")
     val hotPcts = args.drop(2).headOption.getOrElse("0,10,30,50")
       .split(",").map(_.trim.toInt).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

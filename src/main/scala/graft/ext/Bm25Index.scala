@@ -38,8 +38,10 @@ object Bm25Index {
   private def postingsRoot(root: String) = s"$root/postings"
   private def docstatsRoot(root: String) = s"$root/docstats"
 
-  /** Run `postingsSide` on the helper thread while `stageDocstats`
-    * stages the doc-stats write on the caller thread; then — only after
+  /** Run `postingsSide` on the shared driver pool ([[graft.lake.Overlap]])
+    * while `stageDocstats` stages the doc-stats write on the caller
+    * thread (when the pool is saturated the postings side runs inline
+    * first, which only loses the overlap); then — only after
     * the postings side has FULLY landed — run the doc-stats publish
     * thunk. Publish order is the module's crash contract: doc-stats is
     * the table published LAST (the streaming ledger's anchor), so a
@@ -51,9 +53,7 @@ object Bm25Index {
                               (stageDocstats: => (T, () => Unit)): T = {
     val pFut = scala.concurrent.Future(postingsSide)(graft.lake.Overlap.ec)
     val staged = scala.util.Try(stageDocstats)
-    scala.concurrent.Await.ready(pFut,
-      scala.concurrent.duration.Duration.Inf)
-    pFut.value.get.get // rethrow the postings failure FIRST
+    graft.lake.Overlap.all(Seq(pFut)) // rethrow the postings failure FIRST
     val (out, publish) = staged.get
     publish()
     out

@@ -59,20 +59,6 @@ object BucketedUpsert {
                                  sorted: Boolean, verCol: String = "",
                                  keyType: String = "")
 
-  /** Parsed-manifest memo keyed on the published snapshot DIRECTORY
-    * (r21 optimization, guide §5 "the driver should do almost no data
-    * work"): a published `v<tag>` dir is immutable — tags strictly
-    * increase per root, publish never rewrites a dir the pointer ever
-    * named, and GC only deletes — so its parsed entries can be reused
-    * for the life of the JVM. One applyBatch previously paid 2-3
-    * manifest collect jobs (tag guard, key-type pin, prev entries) and
-    * every read re-parsed the same dir; with the memo (seeded at
-    * publish time with the entries just written) steady-state manifest
-    * access is a ConcurrentHashMap hit, zero Spark jobs. Bounded: a
-    * pathological many-tables session clears it at 8192 dirs. */
-  private val manifestMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Entry]]()
-
   private[lake] def manifestEntries(spark: SparkSession, root: String): Seq[Entry] =
     Snapshot.resolve(spark, root) match {
       case None => Seq.empty
@@ -87,58 +73,24 @@ object BucketedUpsert {
       case Some(dir) => parseManifest(spark, dir)
     }
 
-  /** Memo key = dir + its live-file listing (name, len, mtime, content
-    * stamp): a republished-after-crash orphan dir (same path, new bytes
-    * — the one way a v<tag> dir's content can legally change) misses
-    * the memo instead of serving stale entries, even when the rewrite
-    * lands same-length within the filesystem's mtime granularity
-    * (VERDICT r21 #3 — the stamp hashes each file's first+last 64
-    * bytes, which for parquet cover the footer's end). One driver
-    * listStatus + a short read per live file — far cheaper than the
-    * collect job it replaces. */
-  private def manifestKey(spark: SparkSession, dir: String): Option[String] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try Some(dir + "|" + fs.listStatus(p).filter(s => s.isFile && {
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }).map(s => s"${s.getPath.getName}:${s.getLen}:" +
-        s"${s.getModificationTime}:${FileStats.contentStamp(fs, s)}")
-      .sorted.mkString(","))
-    catch { case _: java.io.FileNotFoundException => None }
-  }
-
+  /** Manifest rows come through the localize memo
+    * ([[FileStats.localizedRows]]): a published `v<tag>` dir is
+    * immutable, and [[Snapshot.publishRows]] seeds the memo with the
+    * rows it writes, so steady-state manifest access is a memo hit with
+    * zero Spark jobs. Legacy manifests lack the later columns. */
   private def parseManifest(spark: SparkSession, dir: String): Seq[Entry] = {
-    val key = manifestKey(spark, dir)
-    val hit = key.map(manifestMemo.get).orNull
-    if (hit != null) return hit
-    val df = spark.read.parquet(dir)
-    val hasTag = df.columns.contains("data_tag")
-    val hasKey = df.columns.contains("key_col")
-    val hasSorted = df.columns.contains("sorted_by_key")
-    val hasVer = df.columns.contains("version_col")
-    val hasKt = df.columns.contains("key_dtype")
-    val cols = Seq("bucket", "path", "n_buckets") ++
-      (if (hasTag) Seq("data_tag") else Nil) ++
-      (if (hasKey) Seq("key_col") else Nil) ++
-      (if (hasSorted) Seq("sorted_by_key") else Nil) ++
-      (if (hasVer) Seq("version_col") else Nil) ++
-      (if (hasKt) Seq("key_dtype") else Nil)
-    val parsed = df.select(cols.head, cols.tail: _*).collect().map { r =>
-      var i = 3
-      val dt = if (hasTag) { val v = r.getLong(i); i += 1; v }
-               else entryTag(r.getString(1))
-      val kc = if (hasKey) { val v = r.getString(i); i += 1; v } else ""
-      val so = if (hasSorted) { val v = r.getBoolean(i); i += 1; v } else false
-      val vc = if (hasVer) { val v = r.getString(i); i += 1; v } else ""
-      val kt = if (hasKt) r.getString(i) else ""
-      Entry(r.getInt(0), r.getString(1), r.getInt(2), dt, kc, so, vc, kt)
+    val (schema, rows) = FileStats.localizedRows(spark, dir).getOrElse {
+      val df = spark.read.parquet(dir); (df.schema, df.collect()) }
+    val at = schema.fieldNames.zipWithIndex.toMap.withDefaultValue(-1)
+    rows.map { r =>
+      def opt[A](c: String, absent: => A): A =
+        if (at(c) < 0) absent else r.getAs[A](at(c))
+      val path = r.getString(at("path"))
+      Entry(r.getInt(at("bucket")), path, r.getInt(at("n_buckets")),
+        opt("data_tag", entryTag(path)), opt("key_col", ""),
+        opt("sorted_by_key", false), opt("version_col", ""),
+        opt("key_dtype", ""))
     }.toSeq
-    key.foreach { k =>
-      if (manifestMemo.size > 8192) manifestMemo.clear()
-      manifestMemo.put(k, parsed)
-    }
-    parsed
   }
 
   private val manifestSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -161,18 +113,13 @@ object BucketedUpsert {
 
   private def publishEntries(spark: SparkSession, entries: Seq[Entry],
                              root: String, tag: Long, keep: Int): Unit = {
-    // rows are already on the driver — publish without a Spark job (r21)
+    // rows are already on the driver — publish without a Spark job (r21);
+    // publishRows also seeds the memo, so the next read pays no job
     Snapshot.publishRows(spark, manifestSchema,
       entries.map(e => org.apache.spark.sql.Row(
         e.bucket, e.path, e.nBuckets, e.dataTag, e.keyCol,
         e.sorted, e.verCol, e.keyType)),
       root, tag, keep)
-    // seed the memo with what was just published: the dir is immutable
-    // from here on and the next manifestEntries must not pay a read job
-    manifestKey(spark, s"$root/v$tag").foreach { k =>
-      if (manifestMemo.size > 8192) manifestMemo.clear()
-      manifestMemo.put(k, entries)
-    }
   }
 
   /** The bucket-route contract: the route is pmod(murmur3(key), n),
@@ -955,15 +902,14 @@ object BucketedUpsert {
     val fragmented = prev.groupBy(_.bucket).filter(_._2.size > 1)
     val fragmentedEntries = fragmented.values.flatten.toSeq
     val sizeByPath: Map[String, Long] = {
-      import scala.concurrent.{Await, Future}
-      import FileStats.metaEc // shared daemon pool (VERDICT r21 #9)
+      import Overlap.ec // the shared pool (VERDICT r21 #9)
       // bounded wait (ADVICE r18): one hung FileSystem RPC must fail
       // the compaction LOUDLY, not stall the driver forever. The bound
       // is generous — listStatus of flat dirs is milliseconds each —
       // and the failure names the listing so an operator can find the
       // stuck store path.
-      try Await.result(
-        Future.traverse(fragmentedEntries)(e => Future(e.path -> bytesOf(e.path))),
+      try Overlap.all(fragmentedEntries.map(e =>
+        scala.concurrent.Future(e.path -> bytesOf(e.path))),
         scala.concurrent.duration.Duration(10, "min")).toMap
       catch {
         case e: java.util.concurrent.TimeoutException =>

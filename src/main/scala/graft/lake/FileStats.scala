@@ -30,20 +30,7 @@ object FileStats {
   private def minName(c: String) = s"min_$c"
   private def maxName(c: String) = s"max_$c"
 
-  /** ONE bounded daemon pool for driver-side metadata fan-out (footer
-    * reads, tree walks, fragment sizing) — VERDICT r21: the hot paths
-    * (every bucketed-read planning, every delete batch) created and
-    * tore down a fresh 16-thread pool per call. Shared and never shut
-    * down: tasks are short FS/footer operations that never submit to
-    * the pool themselves, so sharing cannot deadlock; daemon threads
-    * keep a hung RPC from pinning the JVM open, and each call site
-    * keeps its own loud Await bound. */
-  private[lake] val metaPool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(16,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-meta"); t.setDaemon(true); t })
-  private[lake] implicit val metaEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(metaPool)
+  import Overlap.ec // metadata fan-out; each call site bounds its wait
 
   // Tree fingerprints: a deterministic digest (file count, total
   // bytes, max mtime) of the data tree a manifest was built over,
@@ -87,18 +74,13 @@ object FileStats {
     val hp = new org.apache.hadoop.fs.Path(dataDir)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hp)) return Seq.empty
-    def hidden(p: org.apache.hadoop.fs.Path): Boolean =
-      p.getName.startsWith("_") || p.getName.startsWith(".")
-    import scala.concurrent.{Await, Future}
-    // shared daemon pool (metaPool): the bound below still fails loudly
-    // on a hung listStatus, and daemon threads keep it from pinning the
-    // JVM open (review r19)
+    // the bound below fails loudly on a hung listStatus (review r19)
     val out = scala.collection.mutable.ArrayBuffer[FileMeta]()
     var dirs: Seq[org.apache.hadoop.fs.Path] = Seq(hp)
     while (dirs.nonEmpty) {
       val listed =
-        try Await.result(
-          Future.traverse(dirs)(d => Future(fs.listStatus(d).toSeq)),
+        try Overlap.all(
+          dirs.map(d => scala.concurrent.Future(fs.listStatus(d).toSeq)),
           scala.concurrent.duration.Duration(10, "min")).flatten
         catch {
           case e: java.util.concurrent.TimeoutException =>
@@ -116,6 +98,16 @@ object FileStats {
     }
     out.toSeq
   }
+
+  private def hidden(p: org.apache.hadoop.fs.Path): Boolean =
+    p.getName.startsWith("_") || p.getName.startsWith(".")
+
+  /** The live (non-hidden) files directly under dir `p` — the set a
+    * parquet scan of it reads. */
+  private def liveFiles(fs: org.apache.hadoop.fs.FileSystem,
+                        p: org.apache.hadoop.fs.Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(p).toSeq.filter(s => s.isFile && !hidden(s.getPath))
 
   /** ORDER-INDEPENDENT per-file digest (ADVICE r17): the old aggregate
     * (count, total bytes, max mtime) missed a same-size in-place
@@ -334,42 +326,72 @@ object FileStats {
       case _: java.io.IOException => s"io-miss-${System.nanoTime()}"
     }
 
-  private[lake] def localizedParquet(spark: SparkSession,
-                                     dir: String): DataFrame = {
+  /** Memo key of `dir` — the dir plus its live-file listing (name,
+    * len, mtime, content stamp) — with the listing's total bytes; None
+    * when the dir is missing or holds no live file. */
+  private def localKey(spark: SparkSession,
+                       dir: String): Option[(String, Long)] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val listed =
-      try fs.listStatus(p).filter(s => s.isFile && {
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      })
-      catch { case _: java.io.FileNotFoundException =>
-        return spark.read.parquet(dir) } // keep the reader's error shape
-    if (listed.isEmpty) return spark.read.parquet(dir)
-    val key = dir + "|" + listed.map(s =>
+      try liveFiles(fs, p)
+      catch { case _: java.io.FileNotFoundException => return None }
+    if (listed.isEmpty) None
+    else Some((dir + "|" + listed.map(s =>
         s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}:" +
           contentStamp(fs, s))
-      .sorted.mkString(",")
-    if (localTooBig.contains(key)) return spark.read.parquet(dir)
-    val hit = localMemo.get(key)
-    if (hit != null)
-      return spark.createDataFrame(
-        java.util.Arrays.asList(hit._2: _*), hit._1)
-    if (listed.map(_.getLen).sum > LocalizeMaxBytes ||
-        footerRowCount(spark, Seq(dir)) > LocalizeMaxRows) {
-      localTooBig.add(key)
-      return spark.read.parquet(dir)
-    }
-    val df = spark.read.parquet(dir)
-    val rows = df.collect()
+      .sorted.mkString(","), listed.map(_.getLen).sum))
+  }
+
+  private def remember(key: String,
+                       schema: org.apache.spark.sql.types.StructType,
+                       rows: Array[org.apache.spark.sql.Row]): Unit = {
     if (localMemo.size > 4096 ||
         localMemoRows.get() + rows.length > LocalMemoRowBudget) {
       localMemo.clear(); localTooBig.clear(); localMemoRows.set(0L)
     }
-    localMemo.put(key, (df.schema, rows))
+    localMemo.put(key, (schema, rows))
     localMemoRows.addAndGet(rows.length.toLong)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
+
+  /** The rows of the small parquet dir `dir` with their schema, from
+    * the memo or read once and memoized; None when the dir is missing,
+    * empty, or past the localize bounds (callers then read it the
+    * distributed way). */
+  private[lake] def localizedRows(spark: SparkSession, dir: String)
+      : Option[(org.apache.spark.sql.types.StructType,
+                Array[org.apache.spark.sql.Row])] = {
+    val (key, bytes) = localKey(spark, dir).getOrElse(return None)
+    if (localTooBig.contains(key)) return None
+    val hit = localMemo.get(key)
+    if (hit != null) return Some(hit)
+    if (bytes > LocalizeMaxBytes ||
+        footerRowCount(spark, Seq(dir)) > LocalizeMaxRows) {
+      localTooBig.add(key)
+      return None
+    }
+    val df = spark.read.parquet(dir)
+    val rows = df.collect()
+    remember(key, df.schema, rows)
+    Some((df.schema, rows))
+  }
+
+  /** Seed the memo with `rows` just written to `dir`, which must be
+    * immutable from here on, so its first read pays no job. */
+  private[lake] def seedLocalized(spark: SparkSession, dir: String,
+                                  schema: org.apache.spark.sql.types.StructType,
+                                  rows: Seq[org.apache.spark.sql.Row]): Unit =
+    localKey(spark, dir).foreach { case (key, _) =>
+      remember(key, schema, rows.toArray) }
+
+  private[lake] def localizedParquet(spark: SparkSession,
+                                     dir: String): DataFrame =
+    localizedRows(spark, dir) match {
+      case Some((schema, rows)) =>
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      // too big, or missing/empty: keep the reader's shape and error
+      case None => spark.read.parquet(dir)
+    }
 
   /** `df.distinct()` with a driver-side fast path (r21): when `df` is
     * already a localized LocalRelation, dedupe the rows in Scala and
@@ -408,18 +430,13 @@ object FileStats {
         val fs = p.getFileSystem(conf)
         val st = fs.getFileStatus(p)
         if (st.isFile) Seq(st)
-        else fs.listStatus(p).toSeq.filter(s => s.isFile && {
-          val n = s.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        })
+        else liveFiles(fs, p)
       }
       catch { case _: java.io.IOException => return false }
     if (files.isEmpty || files.size > 1024) return false
-    // shared daemon pool (metaPool) — this runs at every bucketed-read
-    // planning, where a per-call pool was pure allocation churn
     val schemas =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.traverse(files) { st =>
+      try Overlap.all(
+        files.map { st =>
           scala.concurrent.Future {
             val key = s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
             val hit = footerSchemaMemo.get(key)
@@ -475,17 +492,14 @@ object FileStats {
       else {
         val st = fs.getFileStatus(p)
         if (st.isFile) Seq(st)
-        else fs.listStatus(p).toSeq.filter(s => s.isFile && {
-          val n = s.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        })
+        else liveFiles(fs, p)
       }
     }
-    // footer opens in parallel on the shared daemon pool (metaPool):
-    // one footer per file is metadata-priced but not free serially — a
-    // 16-bucket rewrite counts 32 dirs' footers per delete batch
-    scala.concurrent.Await.result(
-      scala.concurrent.Future.traverse(files) { st =>
+    // footer opens in parallel on the shared pool: one footer per file
+    // is metadata-priced but not free serially — a 16-bucket rewrite
+    // counts 32 dirs' footers per delete batch
+    Overlap.all(
+      files.map { st =>
         scala.concurrent.Future {
           val in = org.apache.parquet.hadoop.util.HadoopInputFile
             .fromStatus(st, conf)

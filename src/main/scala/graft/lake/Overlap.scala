@@ -1,31 +1,43 @@
 package graft.lake
 
-/** Driver-side helper for OVERLAPPING independent Spark actions (guide
-  * §2.6: actions are only sequential because the driver calls them
-  * sequentially — submitting independent jobs from two driver threads
-  * lets the second job's tasks back-fill executors freed by the first
-  * job's tail). Used where one operator performs several INDEPENDENT
-  * writes/builds (stats + bloom index builds, the BM25 two-table
-  * apply): the operations must not share mutable state beyond the
+import java.util.concurrent.{SynchronousQueue, ThreadPoolExecutor, TimeUnit}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.{Duration, FiniteDuration}
+
+/** The driver's ONE thread pool: metadata fan-out (tree walks, footer
+  * reads, fragment sizing) and OVERLAPPED independent Spark actions
+  * (guide §2.6: submitting independent jobs from two driver threads lets
+  * one job's tasks back-fill executors freed by the other's tail).
+  * Overlapped operations must share no mutable state beyond the
   * engine's concurrent-safe memos.
   *
-  * Cached daemon pool: these threads only SUBMIT Spark jobs and block,
-  * so they are cheap; idle threads retire, and daemon status keeps a
-  * hung action from pinning the JVM open.
+  * At most 16 daemon threads, idle ones retire. The hand-off queue with
+  * CALLER-RUNS on saturation keeps nesting deadlock-free: an overlapped
+  * action fans its metadata reads out on this same pool and waits for
+  * them, so with a queueing pool 16 such actions could each wait on
+  * tasks parked in the queue. Here every submitted task is either
+  * running on a pool thread or runs inline on the submitter.
   */
 private[graft] object Overlap {
 
-  implicit val ec: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newCachedThreadPool(
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-overlap"); t.setDaemon(true); t }))
+  implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(
+    new ThreadPoolExecutor(0, 16, 60L, TimeUnit.SECONDS,
+      new SynchronousQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-meta"); t.setDaemon(true); t },
+      new ThreadPoolExecutor.CallerRunsPolicy()))
 
   /** Await every future (so no action is left running behind the
-    * caller), then rethrow the FIRST failure if any. */
-  def all[T](futs: Seq[scala.concurrent.Future[T]]): Seq[T] = {
-    futs.foreach(f => scala.concurrent.Await.ready(f,
-      scala.concurrent.duration.Duration.Inf))
+    * caller), then rethrow the FIRST failure if any. A finite `bound`
+    * caps the whole wait and throws TimeoutException past it. Each
+    * future is awaited directly: `Future.traverse`'s continuation chain
+    * would, under caller-runs, unwind inline on one stack. */
+  def all[T](futs: Seq[Future[T]], bound: Duration = Duration.Inf): Seq[T] = {
+    val deadline = bound match {
+      case f: FiniteDuration => Some(f.fromNow)
+      case _ => None
+    }
+    futs.foreach(f => Await.ready(f, deadline.fold(bound)(_.timeLeft)))
     futs.map(_.value.get.get)
   }
 }

@@ -81,7 +81,14 @@ object Routing {
     * in its own manifest dir through its own atomic publish; they share
     * nothing but the immutable data tree), but the driver submits them
     * concurrently so each build's tasks back-fill the others' tails and
-    * the fixed per-action planning cost overlaps instead of summing. */
+    * the fixed per-action planning cost overlaps instead of summing.
+    *
+    * On failure the first error is rethrown only after every sibling
+    * build has settled, and the siblings that succeeded HAVE published
+    * their manifests: the call is not all-or-nothing. Each manifest
+    * publish is atomic on its own (a failed arm leaves its previous
+    * manifest live, or none), and a retry rebuilds every arm, so it
+    * converges. [[refreshIndexes]] behaves the same way. */
   def buildIndexes(spark: SparkSession, root: String, statsCols: Seq[String],
                    bloomCols: Seq[String], mLog2: Int = 16,
                    k: Int = 3): Unit = {
@@ -97,7 +104,9 @@ object Routing {
     * ingest-cycle companion of the freshness fail-fast: after files
     * land (or vanish), one call re-validates routing at O(changed
     * files) instead of a full rebuild. Returns (filesScanned,
-    * filesDropped) summed over the refreshed manifests. */
+    * filesDropped) summed over the refreshed manifests. A failed arm
+    * leaves the others' refreshed manifests published (see
+    * [[buildIndexes]]); a retry converges. */
   def refreshIndexes(spark: SparkSession, root: String): (Long, Long) = {
     // the caller is telling us the tree changed: drop Spark's cached
     // file statuses for it, or the delta scan (and every later read)

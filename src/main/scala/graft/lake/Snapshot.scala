@@ -144,13 +144,17 @@ object Snapshot {
 
   /** [[publish]] for rows already on the driver — writes the snapshot
     * file with [[LocalParquet]] (no Spark job) under the same pointer
-    * protocol. The schema must satisfy [[LocalParquet.supported]]. */
+    * protocol, and seeds the localize memo with those rows before the
+    * pointer flips, so the first read of the new snapshot pays no job.
+    * The schema must satisfy [[LocalParquet.supported]]. */
   private[lake] def publishRows(spark: SparkSession,
                                 schema: org.apache.spark.sql.types.StructType,
                                 rows: Seq[org.apache.spark.sql.Row],
                                 root: String, tag: Long, keep: Int): Unit =
-    publishWith(spark, root, tag, keep)(dir =>
-      LocalParquet.overwrite(spark, dir, schema, rows))
+    publishWith(spark, root, tag, keep) { dir =>
+      LocalParquet.overwrite(spark, dir, schema, rows)
+      FileStats.seedLocalized(spark, dir, schema, rows)
+    }
 
   private def publishWith(spark: SparkSession, root: String, tag: Long,
                           keep: Int)(write: String => Unit): Unit = {
