@@ -38,25 +38,48 @@ object Bm25Index {
   private def postingsRoot(root: String) = s"$root/postings"
   private def docstatsRoot(root: String) = s"$root/docstats"
 
-  /** Run `postingsSide` on the shared driver pool ([[graft.lake.Overlap]])
-    * while `stageDocstats` stages the doc-stats write on the caller
-    * thread (when the pool is saturated the postings side runs inline
-    * first, which only loses the overlap); then — only after
-    * the postings side has FULLY landed — run the doc-stats publish
-    * thunk. Publish order is the module's crash contract: doc-stats is
-    * the table published LAST (the streaming ledger's anchor), so a
-    * crash can never leave doc-stats published with postings missing.
-    * A postings failure therefore forbids the doc-stats publish; the
-    * staged data dir it abandons is exactly a crashed batch's state,
-    * healed by the existing replay contract. */
-  private def overlapTables[T](postingsSide: => Unit)
-                              (stageDocstats: => (T, () => Unit)): T = {
-    val pFut = scala.concurrent.Future(postingsSide)(graft.lake.Overlap.ec)
-    val staged = scala.util.Try(stageDocstats)
-    graft.lake.Overlap.all(Seq(pFut)) // rethrow the postings failure FIRST
-    val (out, publish) = staged.get
-    publish()
-    out
+  /** One table's half of an index write under one tag: the table
+    * root, the key the write buckets by, the frame whose keys it
+    * touches, and the staged write ([[BucketedUpsert.applyBatchStaged]]
+    * or [[BucketedUpsert.deleteKeysStaged]]) given the shared probe's
+    * touched-bucket set, or None to probe on its own. */
+  private final case class Side[+T](root: String, key: String, keys: DataFrame,
+                                    stage: Option[Set[Int]] => (T, () => Unit))
+
+  /** The one way the index writes its two tables. A side is None when
+    * it already landed under this tag (a crash replay) and is not run.
+    * With both sides present and both tables standing, ONE
+    * touched-bucket probe job serves both (r22, guide §1.2: first
+    * batches derive entries from the written dirs and probe nothing,
+    * so the shared probe fires exactly when both tables would each have
+    * paid their own distinct-collect job).
+    *
+    * The postings side stages AND publishes on the shared driver pool
+    * ([[graft.lake.Overlap]]) while the doc-stats side stages on the
+    * caller thread (when the pool is saturated the postings side runs
+    * inline first, which only loses the overlap); the doc-stats publish
+    * thunk runs only after the postings side has FULLY landed. Publish
+    * order is the module's crash contract: doc-stats is the table
+    * published LAST (the streaming ledger's anchor), so a crash can
+    * never leave doc-stats published with postings missing. A postings
+    * failure therefore forbids the doc-stats publish; the staged data
+    * dir it abandons is exactly a crashed batch's state, healed by the
+    * existing replay contract. Returns the doc-stats side's result. */
+  private def overlapTables[T](spark: SparkSession, postings: Option[Side[Any]],
+                               docstats: Option[Side[T]]): Option[T] = {
+    val shared = (for {
+      p <- postings; d <- docstats
+      np <- BucketedUpsert.bucketCountOption(spark, p.root)
+      nd <- BucketedUpsert.bucketCountOption(spark, d.root)
+    } yield BucketedUpsert.touchedBuckets(Seq((p.keys, p.key, np), (d.keys, d.key, nd))))
+      .fold(Seq[Option[Set[Int]]](None, None))(_.map(Some(_)))
+    val pFut = postings.map(p => scala.concurrent.Future {
+      val (_, publish) = p.stage(shared(0))
+      publish()
+    }(graft.lake.Overlap.ec))
+    val staged = scala.util.Try(docstats.map(_.stage(shared(1))))
+    graft.lake.Overlap.all(pFut.toSeq) // rethrow the postings failure FIRST
+    staged.get.map { case (out, publish) => publish(); out }
   }
 
   /** On-disk posting-key format tag (ADVICE r17, medium): "lp1" =
@@ -89,14 +112,8 @@ object Bm25Index {
   private def requireFormat(spark: SparkSession, root: String): Unit =
     if (graft.lake.Snapshot.resolve(spark, postingsRoot(root)).nonEmpty) {
       val p = fmtPath(root)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val rec =
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          try Some(new String(in.readAllBytes(), "UTF-8").trim)
-          finally in.close()
-        }
+      val rec = graft.lake.FileStats.readSidecar(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p).map(_.trim)
       require(rec.contains(PkFormat),
         s"BM25 index at $root carries posting-key format " +
           s"${rec.getOrElse("<none — predates the format marker>")}, " +
@@ -158,6 +175,17 @@ object Bm25Index {
         .getOrElse(nBucketsIfEmpty), tag)
   }
 
+  /** An upsert side: `batch` lands with the tag as its version. */
+  private def upsert(tableRoot: String, key: String, batch: DataFrame,
+                     nBuckets: Int, tag: Long): Side[Unit] =
+    Side(tableRoot, key, batch, touched => ((), BucketedUpsert.applyBatchStaged(
+      batch.withColumn("graft_ver", lit(tag)), tableRoot, key, "graft_ver",
+      nBuckets, tag, 2, touched)))
+
+  /** True when `tableRoot` has not yet published `tag` (or later). */
+  private def behind(spark: SparkSession, tableRoot: String, tag: Long) =
+    !graft.lake.Snapshot.currentTag(spark, tableRoot).exists(_ >= tag)
+
   private def ingest(spark: SparkSession, root: String, docs: DataFrame,
                      nBuckets: Int, tag: Long): Unit = {
     requireFormat(spark, root)
@@ -173,33 +201,13 @@ object Bm25Index {
       val tokens = graft.operators.SeqIds.pin(tokenize(docs))
       // the postings AGGREGATE is pinned too (r21): applyBatch executes
       // its batch twice (touched-bucket distinct + the resolve write),
-      // and without this pin the explode+groupBy ran once per pass
-      val postings = graft.operators.SeqIds.pin(
-        postingsFrom(tokens).withColumn("graft_ver", lit(tag)))
-      val docstats = tokens.select(col("doc_id"), col("dl"))
-        .withColumn("graft_ver", lit(tag))
-      // ONE touched-bucket probe job for BOTH tables (r22, guide §1.2):
-      // the per-table probes only run against a standing table (first
-      // batches derive entries from the written dirs instead), so the
-      // shared probe fires exactly when both tables would each have
-      // paid their own distinct-collect job.
-      val shared =
-        if (BucketedUpsert.bucketCountOption(spark, postingsRoot(root)).nonEmpty &&
-            BucketedUpsert.bucketCountOption(spark, docstatsRoot(root)).nonEmpty)
-          BucketedUpsert.touchedBuckets(Seq(
-            (postings, "pk", nBuckets), (docstats, "doc_id", nBuckets)))
-            .map(Option(_))
-        else Seq(None, None)
-      // overlap the two tables' independent writes; doc-stats still
-      // publishes LAST (r22, guide §2.6 — see overlapTables)
-      overlapTables {
-        BucketedUpsert.applyBatchTouched(postings,
-          postingsRoot(root), "pk", "graft_ver", nBuckets, tag, 2, shared(0))
-      } {
-        ((), BucketedUpsert.applyBatchStaged(docstats,
-          docstatsRoot(root), "doc_id", "graft_ver", nBuckets, tag, 2,
-          shared(1)))
-      }
+      // and without this pin the explode+groupBy ran once per pass.
+      // Both sides always run: a reused tag throws (requireTagAbove).
+      overlapTables(spark,
+        Some(upsert(postingsRoot(root), "pk",
+          graft.operators.SeqIds.pin(postingsFrom(tokens)), nBuckets, tag)),
+        Some(upsert(docstatsRoot(root), "doc_id",
+          tokens.select(col("doc_id"), col("dl")), nBuckets, tag)))
     } finally graft.operators.SeqIds.releaseSince(m)
   }
 
@@ -230,51 +238,19 @@ object Bm25Index {
       stampFormat(bs, root)
       val n = BucketedUpsert.bucketCountOption(bs, postingsRoot(root))
         .getOrElse(nBuckets)
-      def behind(tableRoot: String) =
-        !graft.lake.Snapshot.currentTag(bs, tableRoot).exists(_ >= batchId)
       // tokenize once per micro-batch, scoped release (same rationale
       // as the batch ingest — no releaseAll runs between batches)
       val m = graft.operators.SeqIds.mark()
       try {
         val tokens = graft.operators.SeqIds.pin(tokenize(batch))
-        val needP = behind(postingsRoot(root))
-        val needD = behind(docstatsRoot(root))
         // pinned: applyBatch executes its batch twice (see ingest)
-        val postings =
-          if (needP) Some(graft.operators.SeqIds.pin(
-            postingsFrom(tokens).withColumn("graft_ver", lit(batchId))))
-          else None
-        val docstats = tokens.select(col("doc_id"), col("dl"))
-          .withColumn("graft_ver", lit(batchId))
-        // ONE touched-bucket probe job for both tables when both are
-        // behind and standing (r22 — see ingest)
-        val shared =
-          if (needP && needD &&
-              BucketedUpsert.bucketCountOption(bs, postingsRoot(root)).nonEmpty &&
-              BucketedUpsert.bucketCountOption(bs, docstatsRoot(root)).nonEmpty)
-            BucketedUpsert.touchedBuckets(Seq(
-              (postings.get, "pk", n), (docstats, "doc_id", n)))
-              .map(Option(_))
-          else Seq(None, None)
-        if (needP && needD)
-          // overlap the two writes; doc-stats (the ledger anchor)
-          // still publishes LAST (r22, guide §2.6)
-          overlapTables {
-            BucketedUpsert.applyBatchTouched(postings.get,
-              postingsRoot(root), "pk", "graft_ver", n, batchId, 2, shared(0))
-          } {
-            ((), BucketedUpsert.applyBatchStaged(docstats,
-              docstatsRoot(root), "doc_id", "graft_ver", n, batchId, 2,
-              shared(1)))
-          }
-        else {
-          postings.foreach(p => BucketedUpsert.applyBatchTouched(
-            p, postingsRoot(root), "pk", "graft_ver", n, batchId, 2, shared(0)))
-          if (needD)
-            BucketedUpsert.applyBatchTouched(docstats,
-              docstatsRoot(root), "doc_id", "graft_ver", n, batchId, 2,
-              shared(1))
-        }
+        overlapTables(bs,
+          Option.when(behind(bs, postingsRoot(root), batchId))(
+            upsert(postingsRoot(root), "pk",
+              graft.operators.SeqIds.pin(postingsFrom(tokens)), n, batchId)),
+          Option.when(behind(bs, docstatsRoot(root), batchId))(
+            upsert(docstatsRoot(root), "doc_id",
+              tokens.select(col("doc_id"), col("dl")), n, batchId)))
       } finally graft.operators.SeqIds.releaseSince(m)
     }
 
@@ -302,8 +278,6 @@ object Bm25Index {
   def deleteDocs(spark: SparkSession, root: String, docs: DataFrame,
                  tag: Long): Long = {
     requireFormat(spark, root)
-    def behind(tableRoot: String) =
-      !graft.lake.Snapshot.currentTag(spark, tableRoot).exists(_ >= tag)
     // the >= skip exists ONLY for same-tag crash replays; a tag
     // strictly below BOTH tables' published state is a mis-assigned
     // (rewound/forgotten) tag — silently returning 0 would let the
@@ -314,51 +288,25 @@ object Bm25Index {
     landedMax.foreach(m => require(tag >= m,
       s"deleteDocs tag $tag is below the index's published v$m — a replay " +
         "carries the original tag; a new takedown needs a fresh one"))
+    def delete(tableRoot: String, key: String, keys: DataFrame) =
+      Side(tableRoot, key, keys,
+        BucketedUpsert.deleteKeysStaged(spark, tableRoot, key, keys, tag, 2, _))
     val m = graft.operators.SeqIds.mark()
     try {
-      val needP = behind(postingsRoot(root))
-      val needD = behind(docstatsRoot(root))
       // The derived pk set is pinned (r21): deleteKeys executes its
       // keys twice (touched-bucket distinct + the anti-join rewrite),
       // and the tokenize+explode+groupBy re-ran once per pass.
-      val pks =
-        if (needP) Some(graft.operators.SeqIds.pin(
-          postingsOf(docs).select("pk")))
-        else None
-      val docIds = docs.filter(col("text").isNotNull).select("doc_id")
-      // ONE touched-bucket probe job for both tables (r22): the normal
-      // takedown deletes from both, and the two distinct-collects were
-      // pure fixed-job-cost next to the shared tokenize.
-      val shared =
-        if (needP && needD)
-          BucketedUpsert.touchedBuckets(Seq(
-            (pks.get, "pk",
-              BucketedUpsert.bucketCount(spark, postingsRoot(root))),
-            (docIds, "doc_id",
-              BucketedUpsert.bucketCount(spark, docstatsRoot(root)))))
-            .map(Option(_))
-        else Seq(None, None)
-      // posting-row count is not a document count — tracked only as a
-      // side effect; the returned figure is doc-stats rows below.
-      if (needP && needD)
-        // overlap the two touched-bucket rewrites; doc-stats still
-        // publishes LAST (r22, guide §2.6 — same crash order as ingest)
-        overlapTables {
-          BucketedUpsert.deleteKeysTouched(
-            spark, postingsRoot(root), "pk", pks.get, tag, 2, shared(0))
-          ()
-        } {
-          BucketedUpsert.deleteKeysStaged(spark, docstatsRoot(root),
-            "doc_id", docIds, tag, 2, shared(1))
-        }
-      else {
-        pks.foreach(p => BucketedUpsert.deleteKeysTouched(
-          spark, postingsRoot(root), "pk", p, tag, 2, shared(0)))
-        if (needD)
-          BucketedUpsert.deleteKeysTouched(spark, docstatsRoot(root),
-            "doc_id", docIds, tag, 2, shared(1))
-        else 0L // docs already counted removed by the landed half
-      }
+      // Posting-row count is not a document count: the returned figure
+      // is doc-stats rows, 0 when that half already landed (the docs
+      // were counted removed by the call that landed it).
+      overlapTables(spark,
+        Option.when(behind(spark, postingsRoot(root), tag))(
+          delete(postingsRoot(root), "pk",
+            graft.operators.SeqIds.pin(postingsOf(docs).select("pk")))),
+        Option.when(behind(spark, docstatsRoot(root), tag))(
+          delete(docstatsRoot(root), "doc_id",
+            docs.filter(col("text").isNotNull).select("doc_id"))))
+        .getOrElse(0L)
     } finally graft.operators.SeqIds.releaseSince(m)
   }
 

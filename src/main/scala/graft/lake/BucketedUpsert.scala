@@ -510,16 +510,17 @@ object BucketedUpsert {
   def applyBatch(batch: DataFrame, root: String, key: String,
                  versionCol: String, nBuckets: Int, tag: Long,
                  keep: Int = 2): Unit =
-    applyBatchTouched(batch, root, key, versionCol, nBuckets, tag, keep, None)
+    applyBatchStaged(batch, root, key, versionCol, nBuckets, tag, keep, None)()
 
-  /** The touched-bucket sets of SEVERAL (frame, key, nBuckets) writes in
-    * ONE Spark job (r22, guide §1.2): a multi-table writer — the BM25
-    * index's postings+docstats pair — previously paid one
-    * distinct-collect job per table per batch for probes whose real
-    * work (a batch-sized distinct) is trivial next to the fixed per-job
-    * cost. The union'd aggregate collapses them into one action; each
-    * branch computes EXACTLY the expression the per-table probe did
-    * (`bucketOf(key, n)`), so the result is bit-identical per table. */
+  /** The touched-bucket sets (`bucketOf(key, n)` distinct) of one or
+    * SEVERAL (frame, key, nBuckets) writes in ONE Spark job (r22, guide
+    * §1.2). It is the only touched-bucket probe: every single-table
+    * write calls it with one frame, and a multi-table writer — the BM25
+    * index's postings+docstats pair — probes all its tables at once
+    * instead of paying one distinct-collect job per table per batch for
+    * probes whose real work (a batch-sized distinct) is trivial next to
+    * the fixed per-job cost. Each branch of the union'd aggregate is
+    * the one-frame probe, so the result is identical per table. */
   private[graft] def touchedBuckets(
       frames: Seq[(DataFrame, String, Int)]): Seq[Set[Int]] = {
     require(frames.nonEmpty, "at least one frame to probe")
@@ -532,29 +533,20 @@ object BucketedUpsert {
       byTable.getOrElse(i, Array.empty).map(_.getInt(1)).toSet)
   }
 
-  /** [[applyBatch]] with an OPTIONAL precomputed touched-bucket set —
-    * private plumbing for multi-table writers that probe all their
-    * tables in one job ([[touchedBuckets]]). CONTRACT: the set must be
-    * EXACTLY `batch.select(bucketOf(key, nBuckets)).distinct()` — a
-    * superset would publish manifest entries for bucket dirs the write
-    * never created; a subset would strand batch rows in dirs no entry
-    * references. Both callers derive it from the same expression via
-    * [[touchedBuckets]]. */
-  private[graft] def applyBatchTouched(batch: DataFrame, root: String,
-                                       key: String, versionCol: String,
-                                       nBuckets: Int, tag: Long, keep: Int,
-                                       precomputedTouched: Option[Set[Int]]): Unit =
-    applyBatchStaged(batch, root, key, versionCol, nBuckets, tag, keep,
-      precomputedTouched)()
-
-  /** [[applyBatchTouched]] SPLIT at the publish (r22, guide §2.6): runs
+  /** [[applyBatch]] SPLIT at the publish (r22, guide §2.6): runs
     * everything up to and including the data write and returns a thunk
     * that performs the manifest publish + GC. A multi-table writer (the
     * BM25 index) overlaps two tables' independent write jobs and still
     * publishes in its documented crash-order (docstats last — its
     * streaming ledger anchor). Until the thunk runs, the write is an
     * unreferenced `data/v<tag>` dir — exactly a crashed batch's state,
-    * which the existing replay contract already heals/overwrites. */
+    * which the existing replay contract already heals/overwrites.
+    *
+    * `precomputedTouched` lets such a writer probe all its tables in
+    * one job: it must be this table's [[touchedBuckets]] result (None =
+    * probe here, through the same function). A superset would publish
+    * entries for bucket dirs the write never created; a subset would
+    * strand batch rows in dirs no entry references. */
   private[graft] def applyBatchStaged(batch: DataFrame, root: String,
                                       key: String, versionCol: String,
                                       nBuckets: Int, tag: Long, keep: Int,
@@ -616,15 +608,12 @@ object BucketedUpsert {
       // died exactly this way on a zero-row leading file) — sweep the
       // empty write dir and leave the root untouched.
       resolveRouteWrite(batch.limit(0))
-      stampBucketFiles(spark, dataDir)
-      val dd = new Path(dataDir)
-      val fs = dd.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val written =
-        if (!fs.exists(dd)) Seq.empty[Int]
-        else fs.listStatus(dd).map(_.getPath.getName)
-          .filter(_.startsWith("graft_bucket="))
-          .map(_.stripPrefix("graft_bucket=").toInt).toSeq.sorted
-      if (written.isEmpty) { fs.delete(dd, true); return () => () }
+      val written = stampBucketFiles(spark, dataDir)
+      if (written.isEmpty) {
+        val dd = new Path(dataDir)
+        dd.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dd, true)
+        return () => ()
+      }
       val entries = written.map(entryOf)
       return () => { publishEntries(spark, entries, root, tag, keep)
                      gcData(spark, root) }
@@ -632,8 +621,7 @@ object BucketedUpsert {
     // touched buckets: a batch-sized distinct, bucket-count-bounded
     // result — or the caller's shared-probe set (same expression)
     val touched = precomputedTouched.getOrElse(
-      batch.select(bucketOf(col(key), nBuckets).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet)
+      touchedBuckets(Seq((batch, key, nBuckets))).head)
     val touchedEntries =
       if (touched.isEmpty) Seq.empty
       else {
@@ -693,14 +681,7 @@ object BucketedUpsert {
       .withColumn("graft_bucket", bucketOf(col(key), nBuckets))
       .sortWithinPartitions(col("graft_bucket"), col(key))
       .write.mode("overwrite").partitionBy("graft_bucket").parquet(dataDir)
-    stampBucketFiles(spark, dataDir)
-    val dd = new Path(dataDir)
-    val fs = dd.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val written =
-      if (!fs.exists(dd)) Seq.empty[Int]
-      else fs.listStatus(dd).map(_.getPath.getName)
-        .filter(_.startsWith("graft_bucket="))
-        .map(_.stripPrefix("graft_bucket=").toInt).toSeq.sorted
+    val written = stampBucketFiles(spark, dataDir)
     // empty FIRST batch creates nothing (same wedge guard as applyBatch)
     if (written.isEmpty && prev.isEmpty) return
     // the recorded version column: an explicit one wins; otherwise
@@ -1066,11 +1047,12 @@ object BucketedUpsert {
       coalesce(col(versionCol) <= horizon, lit(false))
     // bucket-count-bounded result; the scan reads only the columns the
     // predicate needs
-    val touched = read(spark, root).filter(expirable)
-      .select(bucketOf(col(key), n).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    rewriteBuckets(spark, root, prev, touched, _.filter(!expirable),
-      key, n, tag, keep)
+    val touched =
+      touchedBuckets(Seq((read(spark, root).filter(expirable), key, n))).head
+    val (removed, publish) = rewriteBuckets(spark, root, prev, touched,
+      _.filter(!expirable), key, n, tag, keep)
+    publish()
+    removed
   }
 
   /** Key-set delete — the GDPR/account-closure shape on a bucketed
@@ -1103,24 +1085,16 @@ object BucketedUpsert {
     * (the caller assigns every tag) are unaffected.
     */
   def deleteKeys(spark: SparkSession, root: String, key: String,
-                 keys: DataFrame, tag: Long, keep: Int = 2): Long =
-    deleteKeysTouched(spark, root, key, keys, tag, keep, None)
-
-  /** [[deleteKeys]] with an optional precomputed touched-bucket set —
-    * same shared-probe plumbing and exactness contract as
-    * [[applyBatchTouched]] (a subset would silently MISS deletes). */
-  private[graft] def deleteKeysTouched(spark: SparkSession, root: String,
-                                       key: String, keys: DataFrame,
-                                       tag: Long, keep: Int,
-                                       precomputedTouched: Option[Set[Int]]): Long = {
+                 keys: DataFrame, tag: Long, keep: Int = 2): Long = {
     val (removed, publish) =
-      deleteKeysStaged(spark, root, key, keys, tag, keep, precomputedTouched)
+      deleteKeysStaged(spark, root, key, keys, tag, keep, None)
     publish()
     removed
   }
 
-  /** [[deleteKeysTouched]] split at the publish — same staging contract
-    * as [[applyBatchStaged]] (r22, guide §2.6): the touched-bucket
+  /** [[deleteKeys]] split at the publish — same staging and
+    * shared-probe contract as [[applyBatchStaged]] (r22, guide §2.6;
+    * here a subset would silently MISS deletes): the touched-bucket
     * rewrite (and its footer row accounting) runs now; the returned
     * thunk publishes the manifest + GCs. */
   private[graft] def deleteKeysStaged(spark: SparkSession, root: String,
@@ -1139,44 +1113,30 @@ object BucketedUpsert {
     // delete-set-sized distinct, bucket-count-bounded result — or the
     // caller's shared-probe set (same expression)
     val touched = precomputedTouched.getOrElse(
-      keyDf.select(bucketOf(col(key), n).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet)
-    rewriteBucketsStaged(spark, root, prev, touched,
+      touchedBuckets(Seq((keyDf, key, n))).head)
+    rewriteBuckets(spark, root, prev, touched,
       _.join(keyDf, Seq(key), "left_anti"), key, n, tag, keep)
   }
 
   /** Shared touched-bucket rewrite: read the touched buckets, keep
-    * `survivorsOf`'s rows, land them as a new version dir, and publish
-    * a manifest where untouched entries carry their old paths verbatim.
-    * A fully-emptied bucket writes no leaf dir and simply DROPS OUT of
-    * the manifest (absent bucket = empty) — it is never referenced as
-    * a missing path. Returns the number of rows removed; counts are
-    * touched-slice-sized, the table is never scanned here.
+    * `survivorsOf`'s rows and land them as a new version dir now; the
+    * returned thunk publishes a manifest where untouched entries carry
+    * their old paths verbatim, then GCs ([[applyBatchStaged]]'s staging
+    * contract). A fully-emptied bucket writes no leaf dir and simply
+    * DROPS OUT of the manifest (absent bucket = empty) — it is never
+    * referenced as a missing path. Also returns the number of rows
+    * removed; counts are touched-slice-sized, the table is never
+    * scanned here.
     */
   private def rewriteBuckets(spark: SparkSession, root: String,
                              prev: Seq[Entry], touched: Set[Int],
                              survivorsOf: DataFrame => DataFrame,
                              key: String, n: Int, tag: Long,
-                             keep: Int): Long = {
-    val (removed, publish) = rewriteBucketsStaged(spark, root, prev, touched,
-      survivorsOf, key, n, tag, keep)
-    publish()
-    removed
-  }
-
-  /** [[rewriteBuckets]] split at the publish ([[applyBatchStaged]]'s
-    * staging contract): the rewrite and its footer accounting run now,
-    * the returned thunk publishes + GCs. */
-  private def rewriteBucketsStaged(spark: SparkSession, root: String,
-                                   prev: Seq[Entry], touched: Set[Int],
-                                   survivorsOf: DataFrame => DataFrame,
-                                   key: String, n: Int, tag: Long,
-                                   keep: Int): (Long, () => Unit) = {
+                             keep: Int): (Long, () => Unit) = {
     requireTagAbove(spark, root, tag, "rewrite")
     val prevTouched = prev.filter(e => touched(e.bucket))
-    var removed = 0L
-    val touchedEntries =
-      if (prevTouched.isEmpty) Seq.empty
+    val (removed, touchedEntries) =
+      if (prevTouched.isEmpty) (0L, Seq.empty[Entry])
       else {
         val base = readPaths(spark, root, prevTouched.map(_.path))
         val dataDir = s"$root/data/v$tag"
@@ -1185,14 +1145,7 @@ object BucketedUpsert {
           .repartition(col("graft_bucket"))
           .sortWithinPartitions(col("graft_bucket"), col(key))
           .write.mode("overwrite").partitionBy("graft_bucket").parquet(dataDir)
-        stampBucketFiles(spark, dataDir)
-        val dd = new Path(dataDir)
-        val fs = dd.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val present =
-          if (!fs.exists(dd)) Set.empty[Int]
-          else fs.listStatus(dd).map(_.getPath.getName)
-            .filter(_.startsWith("graft_bucket="))
-            .map(_.stripPrefix("graft_bucket=").toInt).toSet
+        val present = stampBucketFiles(spark, dataDir)
         // row counts from parquet FOOTERS, not Spark count() jobs
         // (r21): `removed` is before-minus-after over complete parquet
         // dirs, and every footer already records its exact row count —
@@ -1200,30 +1153,24 @@ object BucketedUpsert {
         // per delete batch
         val after =
           if (present.isEmpty) 0L
-          else footerRowCount(spark,
-            present.toSeq.sorted.map(b => s"$dataDir/graft_bucket=$b"))
-        removed = footerRowCount(spark, prevTouched.map(_.path)) - after
-        // distinct: a FRAGMENTED bucket has several prev entries — its
-        // rewrite must publish exactly one
+          else FileStats.footerRowCount(spark,
+            present.map(b => s"$dataDir/graft_bucket=$b"))
+        val before = FileStats.footerRowCount(spark, prevTouched.map(_.path))
         // the rewrite has no version-column param of its own — carry
         // the table's standing record forward
         val vc = prev.map(_.verCol).find(_.nonEmpty).getOrElse("")
         val kt = prev.map(_.keyType).find(_.nonEmpty).getOrElse("")
-        prevTouched.map(_.bucket).distinct.sorted.filter(present)
+        // distinct: a FRAGMENTED bucket has several prev entries — its
+        // rewrite must publish exactly one
+        (before - after, prevTouched.map(_.bucket).distinct.sorted
+          .filter(present.contains)
           .map(b => Entry(b, s"$dataDir/graft_bucket=$b", n, tag, key,
-            sorted = true, verCol = vc, keyType = kt))
+            sorted = true, verCol = vc, keyType = kt)))
       }
     val entries = prev.filterNot(e => touched(e.bucket)) ++ touchedEntries
     (removed, () => { publishEntries(spark, entries, root, tag, keep)
                       gcData(spark, root) })
   }
-
-  /** Exact row count of complete parquet dirs from their FOOTERS —
-    * see [[FileStats.footerRowCount]]. Valid here because the dirs are
-    * whole immutable bucket outputs: every row in every file counts,
-    * no filter/mask applies. */
-  private def footerRowCount(spark: SparkSession, dirs: Seq[String]): Long =
-    FileStats.footerRowCount(spark, dirs)
 
   /** Bucket-file-name regex Spark's scan uses (`BucketingUtils`): the
     * digits after the LAST underscore are the bucket id. */
@@ -1239,15 +1186,17 @@ object BucketedUpsert {
     * true by write construction. One rename per written file: a
     * metadata op on HDFS/local FS; on an object store one copy per
     * file, amortized by bucket-sized files (a committer that names
-    * files directly would remove even that).
+    * files directly would remove even that). Returns the bucket ids
+    * whose dirs the write created, ascending (none if `dataDir` is
+    * absent).
     */
-  private def stampBucketFiles(spark: SparkSession, dataDir: String): Unit = {
+  private def stampBucketFiles(spark: SparkSession, dataDir: String): Seq[Int] = {
     val dd = new Path(dataDir)
     val fs = dd.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dd)) return
+    if (!fs.exists(dd)) return Seq.empty
     fs.listStatus(dd)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("graft_bucket="))
-      .foreach { d =>
+      .map { d =>
         val b = d.getPath.getName.stripPrefix("graft_bucket=").toInt
         fs.listStatus(d.getPath).filter(_.isFile).foreach { f0 =>
           val name = f0.getPath.getName
@@ -1271,7 +1220,8 @@ object BucketedUpsert {
                   "aborting the write before its manifest publishes")
           }
         }
-      }
+        b
+      }.toSeq.sorted
   }
 
   /** The table as a NATIVE Spark bucketed relation: a

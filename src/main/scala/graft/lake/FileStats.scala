@@ -160,7 +160,8 @@ object FileStats {
   private val MPtr = "_mp"
 
   /** One reader for the tiny control files beside manifests (pointer,
-    * fingerprint, pending-append marker) — three hand-rolled
+    * fingerprint, pending-append marker, the BM25 index's posting-key
+    * format marker) — three hand-rolled
     * open/read/close blocks had already grown (review r18).
     *
     * BOUNDED RETRY on transient mid-flip states (r20 publish soak): on
@@ -173,8 +174,8 @@ object FileStats {
     * window), so a few short retries restore the atomic-read contract;
     * on HDFS-like stores the retry never triggers. Persistent failure
     * still surfaces loudly. */
-  private[lake] def readSidecar(fs: org.apache.hadoop.fs.FileSystem,
-                                p: org.apache.hadoop.fs.Path): Option[String] = {
+  private[graft] def readSidecar(fs: org.apache.hadoop.fs.FileSystem,
+                                 p: org.apache.hadoop.fs.Path): Option[String] = {
     var attempt = 0
     while (true) {
       try {
@@ -454,7 +455,7 @@ object FileStats {
               val s =
                 try {
                   val fm = r.getFooter.getFileMetaData
-                  fm.getSchema.toString + " " +
+                  fm.getSchema.toString + "\u0000" +
                     Option(fm.getKeyValueMetaData
                       .get("org.apache.spark.sql.parquet.row.metadata"))
                       .getOrElse("")

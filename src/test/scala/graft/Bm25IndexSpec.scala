@@ -250,4 +250,63 @@ class Bm25IndexSpec extends SparkSpec {
     // reads stay exempt: they never reconstruct pks
     assert(Bm25Index.topK(spark, root, Seq("the"), 5).count() <= 5)
   }
+
+  test("a failed postings side forbids the doc-stats publish (crash order)") {
+    val root = tmp()
+    Bm25Index.build(spark, root, docs.filter(col("doc_id") % 3 =!= 0),
+      nBuckets = 8, tag = 1)
+    def score = Bm25Index.topK(spark, root, Seq("dup", "spark", "merge"), 25)
+      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
+    val before = score
+    // put postings AHEAD of doc-stats: re-publish a few of its own rows
+    // verbatim at tag 3, which leaves every score as it was
+    val postings = BucketedUpsert.read(spark, s"$root/postings")
+    BucketedUpsert.applyBatch(postings.filter(col("doc_id") < 5),
+      s"$root/postings", "pk", "graft_ver", 8, tag = 3)
+    assert(score == before)
+    // tag 2 is stale for postings only: its side must throw, and the
+    // doc-stats side (staged meanwhile) must never publish
+    intercept[IllegalArgumentException](Bm25Index.append(spark, root,
+      docs.filter(col("doc_id") % 3 === 0), tag = 2))
+    assert(graft.lake.Snapshot.currentTag(spark, s"$root/docstats").contains(1L))
+    assert(score == before, "a failed append must not move any score")
+  }
+
+  test("streamingIngest replaying a half-applied batch lands only doc-stats") {
+    val base = java.nio.file.Files.createTempDirectory("bm25half-spec").toString
+    val src = s"$base/src"; val root = s"$base/idx"; val ckp = s"$base/ckp"
+    val sliceA = docs.filter(col("doc_id") % 2 === 0)
+    val sliceB = docs.filter(col("doc_id") % 2 =!= 0)
+    def updates = spark.readStream.schema(spark.read.parquet(src).schema)
+      .option("maxFilesPerTrigger", 1).parquet(src)
+    graft.queries.writeOrderedBatches(src, Seq(sliceA))
+    Bm25Index.streamingIngest(spark, updates, root, ckp, nBuckets = 8)
+    // simulate the crash window of batch 1: its postings half landed
+    // under the batch id, its doc-stats half did not (replicate the
+    // index's tokenize + length-prefixed pk derivation inline)
+    val half = sliceB.filter(col("text").isNotNull).distinct()
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .withColumn("dl", size(col("toks")).cast("double"))
+      .select(col("doc_id"), col("dl"), explode(col("toks")).as("tok"))
+      .groupBy("tok", "doc_id", "dl").agg(count(lit(1)).cast("double").as("tf"))
+      .withColumn("pk", concat(length(col("tok")), lit(":"), col("tok"),
+        lit("#"), col("doc_id")))
+      .withColumn("graft_ver", lit(1L))
+    BucketedUpsert.applyBatch(half, s"$root/postings", "pk", "graft_ver", 8, tag = 1)
+    val nPostings = BucketedUpsert.read(spark, s"$root/postings").count()
+    graft.queries.writeOrderedBatches(src, Seq(sliceB))
+    Bm25Index.streamingIngest(spark, updates, root, ckp, nBuckets = 8)
+    assert(graft.lake.Snapshot.currentTag(spark, s"$root/docstats").contains(1L))
+    assert(graft.lake.Snapshot.currentTag(spark, s"$root/postings").contains(1L),
+      "the landed postings half must not be re-applied")
+    assert(BucketedUpsert.read(spark, s"$root/postings").count() == nPostings)
+
+    val batchRoot = s"$base/batch-idx"
+    Bm25Index.build(spark, batchRoot, sliceA, nBuckets = 8, tag = 1)
+    Bm25Index.append(spark, batchRoot, sliceB, tag = 2)
+    def score(r: String) = Bm25Index.topK(spark, r, Seq("dup", "spark", "merge"), 25)
+      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
+    assert(score(root) == score(batchRoot),
+      "the healed stream must equal the batch lifecycle's index")
+  }
 }
