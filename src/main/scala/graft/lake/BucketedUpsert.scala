@@ -544,9 +544,9 @@ object BucketedUpsert {
     *
     * `precomputedTouched` lets such a writer probe all its tables in
     * one job: it must be this table's [[touchedBuckets]] result (None =
-    * probe here, through the same function). A superset would publish
-    * entries for bucket dirs the write never created; a subset would
-    * strand batch rows in dirs no entry references. */
+    * probe here, through the same function). A superset would rewrite
+    * buckets the batch never touches; a subset would leave such a
+    * bucket's old entry beside the unresolved new one. */
   private[graft] def applyBatchStaged(batch: DataFrame, root: String,
                                       key: String, versionCol: String,
                                       nBuckets: Int, tag: Long, keep: Int,
@@ -569,6 +569,14 @@ object BucketedUpsert {
       s"table at $root was bucketed with n=${e.nBuckets}, got $nBuckets — " +
         "the bucket count is fixed at table creation"))
     val dataDir = s"$root/data/v$tag"
+    // touched buckets: a batch-sized distinct, bucket-count-bounded
+    // result — or the caller's shared-probe set (same expression). The
+    // FIRST batch (r21) skips the probe: with no standing buckets to
+    // merge it is a full extra pass over the batch that buys nothing.
+    val touched =
+      if (prev.isEmpty) Set.empty[Int]
+      else precomputedTouched.getOrElse(
+        touchedBuckets(Seq((batch, key, nBuckets))).head)
     // ONE exchange for resolve + route (r21, guide §2.4): the explicit
     // hash repartition on the KEY into exactly nBuckets partitions IS
     // the bucket route (HashPartitioning's partition-id expression
@@ -579,62 +587,32 @@ object BucketedUpsert {
     // land one-bucket-per-task exactly as the old route-by-bucket
     // shuffle did. Before: exchange(key) for the window +
     // exchange(graft_bucket) for the route — the touched slice crossed
-    // the wire twice per batch.
-    def resolveRouteWrite(base: DataFrame): Unit =
-      base
-        .unionByName(batch, allowMissingColumns = true)
-        .repartition(nBuckets, col(key))
-        .withColumn("graft_rn", row_number().over(
-          Window.partitionBy(key).orderBy(desc(versionCol))))
-        .filter(col("graft_rn") === 1).drop("graft_rn")
-        .withColumn("graft_bucket", bucketOf(col(key), nBuckets))
-        // key-sorted within each bucket file: with every entry sorted
-        // (manifest flag), the bucketed scan also claims the sort
-        // order and co-bucketed joins elide their SortExec too
-        .sortWithinPartitions(col("graft_bucket"), col(key))
-        .write.mode("overwrite").partitionBy("graft_bucket").parquet(dataDir)
-    def entryOf(b: Int) =
-      Entry(b, s"$dataDir/graft_bucket=$b", nBuckets, tag, key,
-        sorted = true, verCol = versionCol, keyType = keyDt.json)
-    if (prev.isEmpty) {
-      // FIRST batch (r21): with no standing buckets to merge, the
-      // touched-bucket probe — a full extra pass over the batch — buys
-      // nothing; write the resolved batch and derive the entry set
-      // from the bucket dirs actually written (the appendFragment
-      // discovery). An empty first batch writes no bucket dirs and
-      // creates nothing: publishing a zero-entry manifest would make
-      // the table "exist" with no schema and no bucket count, wedging
-      // every consumer that resolves it (the streaming index ingests
-      // died exactly this way on a zero-row leading file) — sweep the
-      // empty write dir and leave the root untouched.
-      resolveRouteWrite(batch.limit(0))
-      val written = stampBucketFiles(spark, dataDir)
-      if (written.isEmpty) {
-        val dd = new Path(dataDir)
-        dd.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dd, true)
-        return () => ()
-      }
-      val entries = written.map(entryOf)
-      return () => { publishEntries(spark, entries, root, tag, keep)
-                     gcData(spark, root) }
-    }
-    // touched buckets: a batch-sized distinct, bucket-count-bounded
-    // result — or the caller's shared-probe set (same expression)
-    val touched = precomputedTouched.getOrElse(
-      touchedBuckets(Seq((batch, key, nBuckets))).head)
-    val touchedEntries =
-      if (touched.isEmpty) Seq.empty
+    // the wire twice per batch. Every batch key survives the resolve,
+    // so the buckets written are exactly the touched ones.
+    val written =
+      if (prev.nonEmpty && touched.isEmpty) Seq.empty
       else {
-        val prevTouched = prev.filter(e => touched(e.bucket))
-        val base = prevTouched match {
+        val base = prev.filter(e => touched(e.bucket)) match {
           case Seq() => batch.limit(0)
           case es => readPaths(spark, root, es.map(_.path))
         }
-        resolveRouteWrite(base)
-        stampBucketFiles(spark, dataDir)
-        touched.toSeq.sorted.map(entryOf)
+        writeBuckets(base
+          .unionByName(batch, allowMissingColumns = true)
+          .repartition(nBuckets, col(key))
+          .withColumn("graft_rn", row_number().over(
+            Window.partitionBy(key).orderBy(desc(versionCol))))
+          .filter(col("graft_rn") === 1).drop("graft_rn"),
+          dataDir, key, nBuckets)
       }
-    val entries = prev.filterNot(e => touched(e.bucket)) ++ touchedEntries
+    // an empty FIRST batch creates nothing ([[writeBuckets]] swept its
+    // dir): publishing a zero-entry manifest would make the table
+    // "exist" with no schema and no bucket count, wedging every
+    // consumer that resolves it (the streaming index ingests died
+    // exactly this way on a zero-row leading file)
+    if (prev.isEmpty && written.isEmpty) return () => ()
+    val entries = prev.filterNot(e => touched(e.bucket)) ++
+      written.map(bucketEntry(dataDir, _, nBuckets, tag, key, versionCol,
+        keyDt.json))
     () => { publishEntries(spark, entries, root, tag, keep)
             gcData(spark, root) }
   }
@@ -672,16 +650,12 @@ object BucketedUpsert {
       s"table at $root was bucketed with n=${e.nBuckets}, got $nBuckets — " +
         "the bucket count is fixed at table creation"))
     val dataDir = s"$root/data/v$tag"
-    batch
-      // hash-on-key into exactly nBuckets partitions IS the bucket
-      // route (see applyBatch) — same one exchange as the old
-      // route-by-bucket-id, but aligned so each task holds exactly its
-      // own bucket (no two-buckets-in-one-task hash collisions)
-      .repartition(nBuckets, col(key))
-      .withColumn("graft_bucket", bucketOf(col(key), nBuckets))
-      .sortWithinPartitions(col("graft_bucket"), col(key))
-      .write.mode("overwrite").partitionBy("graft_bucket").parquet(dataDir)
-    val written = stampBucketFiles(spark, dataDir)
+    // hash-on-key into exactly nBuckets partitions IS the bucket route
+    // (see applyBatch) — same one exchange as the old route-by-bucket-
+    // id, but aligned so each task holds exactly its own bucket (no
+    // two-buckets-in-one-task hash collisions)
+    val written = writeBuckets(batch.repartition(nBuckets, col(key)),
+      dataDir, key, nBuckets)
     // empty FIRST batch creates nothing (same wedge guard as applyBatch)
     if (written.isEmpty && prev.isEmpty) return
     // the recorded version column: an explicit one wins; otherwise
@@ -690,9 +664,8 @@ object BucketedUpsert {
     // entries — the head may predate version recording)
     val vc = if (versionCol.nonEmpty) versionCol
              else prev.map(_.verCol).find(_.nonEmpty).getOrElse("")
-    val entries = prev ++ written.map(b =>
-      Entry(b, s"$dataDir/graft_bucket=$b", nBuckets, tag, key,
-        sorted = true, verCol = vc, keyType = keyDt.json))
+    val entries = prev ++
+      written.map(bucketEntry(dataDir, _, nBuckets, tag, key, vc, keyDt.json))
     publishEntries(spark, entries, root, tag, keep)
     gcData(spark, root)
   }
@@ -724,6 +697,34 @@ object BucketedUpsert {
       .filter(col("graft_rn") === 1)
       .drop("graft_rn", "graft_frag_tag")
 
+  /** [[resolveScan]] bound to a table's recorded key and version
+    * columns. */
+  private[lake] case class MergeOnRead(key: String, versionCol: String)
+      extends (DataFrame => DataFrame) {
+    def apply(df: DataFrame): DataFrame = resolveScan(df, key, versionCol)
+  }
+
+  /** The merge-on-read choice every transparent reader makes: None when
+    * no bucket of `checked` holds more than one fragment (raw rows ARE
+    * the current rows), else the resolve through the key and version
+    * columns recorded anywhere in the table's `entries` — fail-fast if
+    * fragments exist but no version was recorded, because a raw read
+    * would return superseded rows. */
+  private[lake] def mergeOnRead(root: String, entries: Seq[Entry],
+                                checked: Seq[Entry]): Option[MergeOnRead] =
+    if (!hasFragments(checked)) None
+    else {
+      val vc = entries.map(_.verCol).find(_.nonEmpty).getOrElse(
+        throw new IllegalStateException(
+          s"table at $root is fragmented but its manifest records no " +
+            "version column — a raw read would return superseded rows; " +
+            "write batches with versionCol set, or mergeFragments first"))
+      val key = entries.map(_.keyCol).find(_.nonEmpty).getOrElse(
+        throw new IllegalStateException(
+          s"table at $root records no key column"))
+      Some(MergeOnRead(key, vc))
+    }
+
   /** The version column the table's writers recorded, if any — lets
     * readers resolve merge-on-read WITHOUT being re-told the table's
     * semantics at every call site ([[Routing.readWhere]]'s contract). */
@@ -742,7 +743,11 @@ object BucketedUpsert {
     * whole buckets resolving; a single fragment per bucket holds each
     * of its keys at most once). */
   private[graft] def isFragmented(spark: SparkSession, root: String): Boolean =
-    fragmentCounts(spark, root).values.exists(_ > 1)
+    hasFragments(manifestEntries(spark, root))
+
+  /** [[isFragmented]] over an already-fetched manifest. */
+  private def hasFragments(entries: Seq[Entry]): Boolean =
+    entries.groupBy(_.bucket).exists(_._2.size > 1)
 
   /** Fragments per bucket in the current manifest — the merge-on-read
     * cost driver a maintenance policy bounds (the soak asserts the
@@ -769,36 +774,41 @@ object BucketedUpsert {
   def mergeFragments(spark: SparkSession, root: String, key: String,
                      versionCol: String, tag: Long, keep: Int = 2): Int = {
     requireTagAbove(spark, root, tag, "compaction")
-    val prev = manifestEntries(spark, root)
+    compactRuns(spark, root, manifestEntries(spark, root), key, versionCol,
+      tag, keep)(identity)
+  }
+
+  /** The one compaction: `pickRuns` maps each fragmented bucket to the
+    * fragments it merges (a bucket it drops, or maps to fewer than two,
+    * is left as is); the runs are resolved and rewritten as one entry
+    * per bucket carrying the run's max data_tag, and every other entry
+    * is referenced verbatim. Resolution runs over the BUCKETED relation
+    * of the run fragments: the scan delivers HashPartitioning(key, n),
+    * so the per-key window ([[resolveScan]], with the TRUE per-row
+    * fragment tags) is an in-partition sort and the write lands each
+    * task's rows in its own bucket dir — ZERO exchange. */
+  private def compactRuns(spark: SparkSession, root: String, prev: Seq[Entry],
+                          key: String, versionCol: String, tag: Long,
+                          keep: Int)(
+      pickRuns: Map[Int, Seq[Entry]] => Map[Int, Seq[Entry]]): Int = {
     require(prev.nonEmpty, s"no published bucketed table under $root")
     val n = prev.head.nBuckets
-    val fragmented = prev.groupBy(_.bucket).filter(_._2.size > 1)
-    if (fragmented.isEmpty) return 0
+    val runs = pickRuns(prev.groupBy(_.bucket).filter(_._2.size > 1))
+      .filter(_._2.size >= 2)
+    if (runs.isEmpty) return 0
     val dataDir = s"$root/data/v$tag"
-    // resolve over the BUCKETED relation of the fragmented slice: the
-    // scan delivers HashPartitioning(key, n), so the per-key window is
-    // an in-partition sort and the write lands each task's rows in its
-    // own bucket dir — the whole compaction runs with ZERO exchange
-    bucketedReadEntries(spark, root, fragmented.values.flatten.toSeq, key)
-      .withColumn("graft_frag_tag",
-        regexp_extract(normFilePath, "/v(\\d+)/graft_bucket=", 1).cast("long"))
-      .withColumn("graft_rn", row_number().over(
-        Window.partitionBy(col(key))
-          .orderBy(desc(versionCol), desc("graft_frag_tag"))))
-      .filter(col("graft_rn") === 1).drop("graft_rn", "graft_frag_tag")
-      .withColumn("graft_bucket", bucketOf(col(key), n))
-      .sortWithinPartitions(col("graft_bucket"), col(key))
-      .write.mode("overwrite").partitionBy("graft_bucket").parquet(dataDir)
-    stampBucketFiles(spark, dataDir)
+    val runEntries = runs.values.flatten.toSeq
+    writeBuckets(resolveScan(bucketedReadEntries(spark, root, runEntries, key),
+      key, versionCol), dataDir, key, n)
     val kt = prev.map(_.keyType).find(_.nonEmpty).getOrElse("")
-    val merged = fragmented.map { case (b, frags) =>
-      Entry(b, s"$dataDir/graft_bucket=$b", n, frags.map(_.dataTag).max, key,
-        sorted = true, verCol = versionCol, keyType = kt)
+    val merged = runs.map { case (b, frags) =>
+      bucketEntry(dataDir, b, n, frags.map(_.dataTag).max, key, versionCol, kt)
     }.toSeq
-    val entries = prev.filterNot(e => fragmented.contains(e.bucket)) ++ merged
+    val mergedPaths = runEntries.map(_.path).toSet
+    val entries = prev.filterNot(e => mergedPaths.contains(e.path)) ++ merged
     publishEntries(spark, entries, root, tag, keep)
     gcData(spark, root)
-    fragmented.size
+    runs.size
   }
 
   /** [[bucketedJoin]] over RESOLVED views — the join for tables in the
@@ -806,33 +816,24 @@ object BucketedUpsert {
     * rows: each side resolves first (highest version per key), and
     * because the resolve window PRESERVES the scan's
     * HashPartitioning(key, n), the whole resolve-then-join pipeline
-    * still runs with ZERO Exchange on either side. */
+    * still runs with ZERO Exchange on either side (mismatched bucket
+    * counts: [[bucketedJoin]]'s one-sided rebucket is the only
+    * exchange anywhere in resolve-resolve-join). */
   def bucketedJoinResolved(spark: SparkSession, leftRoot: String,
                            rightRoot: String, key: String,
                            leftVersionCol: String, rightVersionCol: String,
                            joinType: String = "inner"): DataFrame = {
     val nL = bucketCount(spark, leftRoot)
     val nR = bucketCount(spark, rightRoot)
-    val l0 = readResolved(spark, leftRoot, key, leftVersionCol)
-    val r0 = readResolved(spark, rightRoot, key, rightVersionCol)
-    // mismatched bucket counts: same graceful one-sided rebucket as
-    // [[bucketedJoin]] — the resolve window preserved the smaller
-    // side's scan partitioning, so the single repartition is the only
-    // exchange anywhere in resolve-resolve-join
-    val (l, r) =
-      if (nL == nR) (l0, r0)
-      else if (nL > nR)
-        (l0, r0.repartition(nL, org.apache.spark.sql.functions.col(key)))
-      else
-        (l0.repartition(nR, org.apache.spark.sql.functions.col(key)), r0)
-    l.join(r, Seq(key), joinType)
+    coBucketedJoin(readResolved(spark, leftRoot, key, leftVersionCol), nL,
+      readResolved(spark, rightRoot, key, rightVersionCol), nR, key, joinType)
   }
 
   /** SIZE-TIERED compaction (VERDICT r17 #3): per fragmented bucket,
     * merge only the newest CONTIGUOUS run of fragments whose sizes tier
     * together, leaving a dominant base fragment untouched — the LSM
-    * economics [[mergeFragments]]'s rewrite-everything policy cannot
-    * offer. The run extends from the newest fragment backward,
+    * economics a whole-bucket merge ([[mergeFragments]]) cannot offer.
+    * The run extends from the newest fragment backward,
     * absorbing an older fragment only while its bytes stay within
     * `tierRatio` × the run's accumulated bytes: many small deltas
     * merge for O(deltas) write cost; the base joins (a FULL merge)
@@ -860,14 +861,22 @@ object BucketedUpsert {
     */
   def mergeFragmentsTiered(spark: SparkSession, root: String, key: String,
                            versionCol: String, tag: Long,
-                           tierRatio: Double = 2.0,
+                           tierRatio: Double = DefaultTierRatio,
                            boundFragments: Int = Int.MaxValue,
                            keep: Int = 2): Int = {
     require(tierRatio > 0, s"tierRatio must be positive: $tierRatio")
     requireTagAbove(spark, root, tag, "compaction")
-    val prev = manifestEntries(spark, root)
-    require(prev.nonEmpty, s"no published bucketed table under $root")
-    val n = prev.head.nBuckets
+    compactRuns(spark, root, manifestEntries(spark, root), key, versionCol,
+      tag, keep)(tierRuns(spark, root, tierRatio, boundFragments))
+  }
+
+  private val DefaultTierRatio = 2.0
+
+  /** [[mergeFragmentsTiered]]'s run rule: per fragmented bucket, the
+    * size-tiered suffix of its fragments (sorted by data_tag). */
+  private def tierRuns(spark: SparkSession, root: String, tierRatio: Double,
+                       boundFragments: Int)(
+      fragmented: Map[Int, Seq[Entry]]): Map[Int, Seq[Entry]] = {
     val conf = spark.sparkContext.hadoopConfiguration
     // fragment sizes in ONE parallel metadata pass (review r18: a
     // serial getContentSummary per fragment stalled the driver for
@@ -880,7 +889,6 @@ object BucketedUpsert {
         if (s.isFile) s.getLen
         else fs.getContentSummary(s.getPath).getLength).sum
     }
-    val fragmented = prev.groupBy(_.bucket).filter(_._2.size > 1)
     val fragmentedEntries = fragmented.values.flatten.toSeq
     val sizeByPath: Map[String, Long] = {
       import Overlap.ec // the shared pool (VERDICT r21 #9)
@@ -901,48 +909,20 @@ object BucketedUpsert {
               "state was modified)", e)
       }
     }
-    val runs: Map[Int, Seq[Entry]] = fragmented
-      .flatMap { case (b, es) =>
-        val sorted = es.sortBy(_.dataTag)
-        val sizes = sorted.map(e => sizeByPath(e.path))
-        var start = sorted.size - 1
-        var acc = sizes(start)
-        while (start > 0 && sizes(start - 1) <= (acc max 1L) * tierRatio) {
-          start -= 1; acc += sizes(start)
-        }
-        // progress floor for over-bound buckets: shrink below the bound
-        // regardless of the tier rule (suffix shape preserved)
-        if (sorted.size >= boundFragments)
-          start = start min (boundFragments - 2) min (sorted.size - 2)
-        val run = sorted.drop(start)
-        if (run.size >= 2) Some(b -> run) else None
+    fragmented.map { case (b, es) =>
+      val sorted = es.sortBy(_.dataTag)
+      val sizes = sorted.map(e => sizeByPath(e.path))
+      var start = sorted.size - 1
+      var acc = sizes(start)
+      while (start > 0 && sizes(start - 1) <= (acc max 1L) * tierRatio) {
+        start -= 1; acc += sizes(start)
       }
-    if (runs.isEmpty) return 0
-    val dataDir = s"$root/data/v$tag"
-    // same zero-exchange resolve-and-rewrite as mergeFragments, over
-    // the run fragments only (run-internal resolution uses the TRUE
-    // per-row fragment tags)
-    bucketedReadEntries(spark, root, runs.values.flatten.toSeq, key)
-      .withColumn("graft_frag_tag",
-        regexp_extract(normFilePath, "/v(\\d+)/graft_bucket=", 1).cast("long"))
-      .withColumn("graft_rn", row_number().over(
-        Window.partitionBy(col(key))
-          .orderBy(desc(versionCol), desc("graft_frag_tag"))))
-      .filter(col("graft_rn") === 1).drop("graft_rn", "graft_frag_tag")
-      .withColumn("graft_bucket", bucketOf(col(key), n))
-      .sortWithinPartitions(col("graft_bucket"), col(key))
-      .write.mode("overwrite").partitionBy("graft_bucket").parquet(dataDir)
-    stampBucketFiles(spark, dataDir)
-    val kt = prev.map(_.keyType).find(_.nonEmpty).getOrElse("")
-    val merged = runs.map { case (b, frags) =>
-      Entry(b, s"$dataDir/graft_bucket=$b", n, frags.map(_.dataTag).max, key,
-        sorted = true, verCol = versionCol, keyType = kt)
-    }.toSeq
-    val mergedPaths = runs.values.flatten.map(_.path).toSet
-    val entries = prev.filterNot(e => mergedPaths.contains(e.path)) ++ merged
-    publishEntries(spark, entries, root, tag, keep)
-    gcData(spark, root)
-    runs.size
+      // progress floor for over-bound buckets: shrink below the bound
+      // regardless of the tier rule (suffix shape preserved)
+      if (sorted.size >= boundFragments)
+        start = start min (boundFragments - 2) min (sorted.size - 2)
+      b -> sorted.drop(start)
+    }
   }
 
   /** Threshold-gated auto-compaction — the policy a maintenance job
@@ -962,11 +942,15 @@ object BucketedUpsert {
                              versionCol: String, tag: Long,
                              maxFragments: Int = 8, keep: Int = 2): Int = {
     require(maxFragments >= 2, s"maxFragments must be >= 2: $maxFragments")
-    val worst = manifestEntries(spark, root)
-      .groupBy(_.bucket).values.map(_.size).maxOption.getOrElse(0)
+    // ONE manifest fetch serves the threshold check and the compaction
+    val prev = manifestEntries(spark, root)
+    val worst = prev.groupBy(_.bucket).values.map(_.size).maxOption.getOrElse(0)
     if (worst < maxFragments) 0
-    else mergeFragmentsTiered(spark, root, key, versionCol, tag,
-      boundFragments = maxFragments, keep = keep)
+    else {
+      requireTagAbove(spark, root, tag, "compaction")
+      compactRuns(spark, root, prev, key, versionCol, tag, keep)(
+        tierRuns(spark, root, DefaultTierRatio, maxFragments))
+    }
   }
 
   /** CDC live view: the table minus tombstone rows. A CDC feed's
@@ -990,19 +974,11 @@ object BucketedUpsert {
     // (each manifestEntries call is a driver-side job).
     val entries = manifestEntries(spark, root)
     require(entries.nonEmpty, s"no published bucketed table under $root")
-    val fragmented = entries.groupBy(_.bucket).exists(_._2.size > 1)
-    val base =
-      if (!fragmented) readPaths(spark, root, entries.map(_.path))
-      else {
-        val key = entries.map(_.keyCol).find(_.nonEmpty).getOrElse(
-          throw new IllegalStateException(
-            s"table at $root records no key column"))
-        val vc = entries.map(_.verCol).find(_.nonEmpty).getOrElse(
-          throw new IllegalStateException(
-            s"table at $root is fragmented but records no version column — " +
-              "readLive cannot resolve; write batches with versionCol set"))
-        resolveScan(bucketedReadEntries(spark, root, entries, key), key, vc)
-      }
+    val base = mergeOnRead(root, entries, entries) match {
+      case None => readPaths(spark, root, entries.map(_.path))
+      case Some(resolve) =>
+        resolve(bucketedReadEntries(spark, root, entries, resolve.key))
+    }
     base.filter(!coalesce(tombstone, lit(false)))
   }
 
@@ -1033,7 +1009,7 @@ object BucketedUpsert {
     // previous version — the exact failure a tombstone exists to
     // prevent. A single fragment per bucket holds each key at most
     // once (raw == resolved), so post-merge purging is exact.
-    require(!isFragmented(spark, root),
+    require(!hasFragments(prev),
       s"purgeTombstones on the FRAGMENTED table at $root would resurrect " +
         "superseded versions (older fragments still hold them) — run " +
         "mergeFragments first (streamingIngestMaintained does this " +
@@ -1140,12 +1116,8 @@ object BucketedUpsert {
       else {
         val base = readPaths(spark, root, prevTouched.map(_.path))
         val dataDir = s"$root/data/v$tag"
-        survivorsOf(base)
-          .withColumn("graft_bucket", bucketOf(col(key), n))
-          .repartition(col("graft_bucket"))
-          .sortWithinPartitions(col("graft_bucket"), col(key))
-          .write.mode("overwrite").partitionBy("graft_bucket").parquet(dataDir)
-        val present = stampBucketFiles(spark, dataDir)
+        val present = writeBuckets(
+          survivorsOf(base).repartition(bucketOf(col(key), n)), dataDir, key, n)
         // row counts from parquet FOOTERS, not Spark count() jobs
         // (r21): `removed` is before-minus-after over complete parquet
         // dirs, and every footer already records its exact row count —
@@ -1160,17 +1132,37 @@ object BucketedUpsert {
         // the table's standing record forward
         val vc = prev.map(_.verCol).find(_.nonEmpty).getOrElse("")
         val kt = prev.map(_.keyType).find(_.nonEmpty).getOrElse("")
-        // distinct: a FRAGMENTED bucket has several prev entries — its
-        // rewrite must publish exactly one
-        (before - after, prevTouched.map(_.bucket).distinct.sorted
-          .filter(present.contains)
-          .map(b => Entry(b, s"$dataDir/graft_bucket=$b", n, tag, key,
-            sorted = true, verCol = vc, keyType = kt)))
+        // one entry per bucket written, even for a FRAGMENTED bucket
+        // (several prev entries)
+        (before - after, present.map(bucketEntry(dataDir, _, n, tag, key, vc, kt)))
       }
     val entries = prev.filterNot(e => touched(e.bucket)) ++ touchedEntries
     (removed, () => { publishEntries(spark, entries, root, tag, keep)
                       gcData(spark, root) })
   }
+
+  /** The one bucket write tail: add `graft_bucket`, key-sort within
+    * each bucket file, overwrite `dataDir` partitioned by bucket and
+    * stamp the files ([[stampBucketFiles]]). Returns the bucket ids
+    * written, ascending; a write that produced no bucket dir leaves no
+    * `dataDir` behind. `df` must already be distributed the way the
+    * caller wants (the exchange, if any, is the caller's). Key-sorted
+    * files let the manifest certify `sorted`, so the bucketed scan
+    * also claims the sort order and co-bucketed joins elide their
+    * SortExec too. */
+  private def writeBuckets(df: DataFrame, dataDir: String, key: String,
+                           n: Int): Seq[Int] = {
+    df.withColumn("graft_bucket", bucketOf(col(key), n))
+      .sortWithinPartitions(col("graft_bucket"), col(key))
+      .write.mode("overwrite").partitionBy("graft_bucket").parquet(dataDir)
+    stampBucketFiles(df.sparkSession, dataDir)
+  }
+
+  /** The manifest entry for bucket `b` of a [[writeBuckets]] output. */
+  private def bucketEntry(dataDir: String, b: Int, n: Int, dataTag: Long,
+                          key: String, verCol: String, keyType: String): Entry =
+    Entry(b, s"$dataDir/graft_bucket=$b", n, dataTag, key, sorted = true,
+      verCol = verCol, keyType = keyType)
 
   /** Bucket-file-name regex Spark's scan uses (`BucketingUtils`): the
     * digits after the LAST underscore are the bucket id. */
@@ -1187,14 +1179,14 @@ object BucketedUpsert {
     * metadata op on HDFS/local FS; on an object store one copy per
     * file, amortized by bucket-sized files (a committer that names
     * files directly would remove even that). Returns the bucket ids
-    * whose dirs the write created, ascending (none if `dataDir` is
-    * absent).
+    * whose dirs the write created, ascending; when there are none,
+    * `dataDir` is deleted.
     */
   private def stampBucketFiles(spark: SparkSession, dataDir: String): Seq[Int] = {
     val dd = new Path(dataDir)
     val fs = dd.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dd)) return Seq.empty
-    fs.listStatus(dd)
+    val written = fs.listStatus(dd)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("graft_bucket="))
       .map { d =>
         val b = d.getPath.getName.stripPrefix("graft_bucket=").toInt
@@ -1222,6 +1214,8 @@ object BucketedUpsert {
         }
         b
       }.toSeq.sorted
+    if (written.isEmpty) fs.delete(dd, true)
+    written
   }
 
   /** The table as a NATIVE Spark bucketed relation: a
@@ -1322,15 +1316,18 @@ object BucketedUpsert {
                    key: String, joinType: String = "inner"): DataFrame = {
     val nL = bucketCount(spark, leftRoot)
     val nR = bucketCount(spark, rightRoot)
-    val l0 = bucketedRead(spark, leftRoot, key)
-    val r0 = bucketedRead(spark, rightRoot, key)
-    val (l, r) =
-      if (nL == nR) (l0, r0)
-      else if (nL > nR)
-        (l0, r0.repartition(nL, org.apache.spark.sql.functions.col(key)))
-      else
-        (l0.repartition(nR, org.apache.spark.sql.functions.col(key)), r0)
-    l.join(r, Seq(key), joinType)
+    coBucketedJoin(bucketedRead(spark, leftRoot, key), nL,
+      bucketedRead(spark, rightRoot, key), nR, key, joinType)
+  }
+
+  /** Join two key-bucketed sides with `nL`/`nR` buckets: the side with
+    * fewer buckets (if any) is repartitioned once into the other's
+    * bucketing; equal counts join as they are. */
+  private def coBucketedJoin(l: DataFrame, nL: Int, r: DataFrame, nR: Int,
+                             key: String, joinType: String): DataFrame = {
+    val n = nL max nR
+    def fit(df: DataFrame, k: Int) = if (k < n) df.repartition(n, col(key)) else df
+    fit(l, nL).join(fit(r, nR), Seq(key), joinType)
   }
 
   /** Delete `data/v*` version dirs referenced by NO retained manifest.

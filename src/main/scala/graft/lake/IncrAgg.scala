@@ -126,24 +126,11 @@ object IncrAgg {
           .limit(0)
       else BucketedUpsert.readPaths(spark, tableRoot,
         changedEntries.map(_.path))
-    val fragmentedChange = changedEntries.groupBy(_.bucket).exists(_._2.size > 1)
-    val feed =
-      if (!fragmentedChange) feed0
-      else {
-        // superseded rows exist physically — partials must see the
-        // RESOLVED bucket (restricted resolution is exact: a key's
-        // fragments all live in its own bucket)
-        val vc = entries.map(_.verCol).find(_.nonEmpty).getOrElse(
-          throw new IllegalStateException(
-            s"table at $tableRoot has fragmented buckets in the refresh " +
-              "window but records no version column — partials over raw " +
-              "fragments would double-count superseded rows; write batches " +
-              "with versionCol set or mergeFragments first"))
-        val kc = entries.map(_.keyCol).find(_.nonEmpty).getOrElse(
-          throw new IllegalStateException(
-            s"table at $tableRoot records no key column"))
-        BucketedUpsert.resolveScan(feed0, kc, vc)
-      }
+    // a fragmented changed bucket holds superseded rows physically —
+    // partials must see the RESOLVED bucket (restricted resolution is
+    // exact: a key's fragments all live in its own bucket)
+    val feed = BucketedUpsert.mergeOnRead(tableRoot, entries, changedEntries)
+      .fold(feed0)(_(feed0))
     val changedPartials = partialsOf(feed, nBuckets)
 
     val mv = mvTag match {

@@ -747,22 +747,9 @@ object Routing {
       // ONE manifest fetch answers fragmentation, the key column, and
       // the version column (each manifestEntries call is a driver job)
       val entries = BucketedUpsert.manifestEntries(spark, root)
-      val keyCol = entries.headOption.map(_.keyCol).filter(_.nonEmpty)
-      val fragmented = entries.groupBy(_.bucket).exists(_._2.size > 1)
       val cs = conjunctsOf(BucketedUpsert.read(spark, root), pred)
       val resolve: DataFrame => DataFrame =
-        if (!fragmented) identity
-        else {
-          val vc = entries.map(_.verCol).find(_.nonEmpty).getOrElse(
-            throw new IllegalStateException(
-              s"table at $root is fragmented but its manifest records no " +
-                "version column — a raw read would return superseded rows; " +
-                "write batches with versionCol set, or read explicitly via " +
-                "BucketedUpsert.readResolved"))
-          val key = keyCol.getOrElse(throw new IllegalStateException(
-            s"table at $root records no key column"))
-          df => BucketedUpsert.resolveScan(df, key, vc)
-        }
+        BucketedUpsert.mergeOnRead(root, entries, entries).getOrElse(identity)
       // route CHOICE is shared with routeBucketed (chooseBucketedRoute
       // — review r19: a duplicated selector could drift, breaking the
       // DSv2-equals-library pin); only the CONSUMPTION differs — this

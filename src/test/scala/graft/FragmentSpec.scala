@@ -333,6 +333,16 @@ class FragmentSpec extends SparkSpec {
       "readLive leaked a superseded live row past its key's tombstone")
   }
 
+  test("readLive on a fragmented table with NO recorded version column fails fast") {
+    val base = tmp()
+    val b = Seq((7L, 1L, false)).toDF("k", "ver", "del")
+    BucketedUpsert.appendFragment(b, base, "k", 4, tag = 1) // no versionCol
+    BucketedUpsert.appendFragment(b, base, "k", 4, tag = 2)
+    val ex = intercept[IllegalStateException](
+      BucketedUpsert.readLive(spark, base, col("del")).count())
+    assert(ex.getMessage.contains("no version column"), ex.getMessage)
+  }
+
   test("appendFragment guards the ledger: empty first batch creates nothing, reused tags fail") {
     val base = tmp()
     BucketedUpsert.appendFragment(
@@ -340,6 +350,8 @@ class FragmentSpec extends SparkSpec {
       base, "k", 4, tag = 1)
     assert(Snapshot.currentTag(spark, base).isEmpty,
       "an empty FIRST batch must not create the table")
+    assert(!new java.io.File(s"$base/data/v1").exists(),
+      "an empty FIRST batch must not leave its write dir behind")
     BucketedUpsert.appendFragment(
       Seq((1L, 1L)).toDF("k", "ver"), base, "k", 4, tag = 1)
     intercept[IllegalArgumentException](

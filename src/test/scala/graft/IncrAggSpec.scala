@@ -143,4 +143,15 @@ class IncrAggSpec extends SparkSpec {
     assert(got.getLong(1) == 2L && got.getDouble(2) == 25.0,
       s"fragmented refresh must equal the resolved aggregate: $got")
   }
+
+  test("refresh over a fragmented table with NO recorded version column fails fast") {
+    val root = s"${tmp()}/t"; val mv = s"${tmp()}/mv"
+    import spark.implicits._
+    val b = Seq((1L, "g", 10.0)).toDF("k", "g", "v")
+    BucketedUpsert.appendFragment(b, root, "k", nBuckets = 1, tag = 1) // no versionCol
+    BucketedUpsert.appendFragment(b, root, "k", nBuckets = 1, tag = 2)
+    val ex = intercept[IllegalStateException](
+      IncrAgg.refresh(spark, root, mv, "k", Seq("g"), Seq("v")))
+    assert(ex.getMessage.contains("no version column"), ex.getMessage)
+  }
 }
