@@ -2,13 +2,15 @@ package graft.export
 
 import graft.operators.SeqIds
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** COCO exporter — Spark-native re-expression of
   * create_coco_from_feather.py:46-116 (S10, F-J2, A5, O3, J4/J5).
   *
-  * The relational core (category dim, image ids, annotation records) is
-  * distributed; only the final single-document envelope materializes on
+  * Annotation records are distributed. The bounded dims (the category
+  * vocabulary, and image ids below `graft.coco.imageBroadcastMaxRows`)
+  * are numbered on the driver from one collect; above that threshold
+  * image ids are distributed too. The single document is written from
   * the driver (inherent to "one JSON file" output, ref :115-116).
   *
   * Deviations (documented): the reference assigns image/annotation ids in
@@ -25,9 +27,9 @@ object Coco {
     */
   def categoryDim(annos: DataFrame): DataFrame =
     // NULL categories never enter the dim: annotationRecords drops
-    // null-category annos, so a null here would both occupy id 1
-    // (shifting every real category) and NPE the streamed categories
-    // section
+    // null-category annos, so a null here would occupy id 1 (shifting
+    // every real category); localDims applies the same rule to the
+    // vocabulary the categories section streams
     SeqIds.withSeqIdDim(
         annos.select("category").filter(col("category").isNotNull).distinct(),
         Seq(col("category")), "category_id", startAt = 1L)
@@ -38,39 +40,54 @@ object Coco {
     SeqIds.withSeqId(images, Seq(col("image_name")), "image_id")
       .withColumn("image_id", col("image_id").cast("int"))
 
-  /** ONE action serves the tier decision AND both exporter dims: the
-    * image side is collected LIMIT-capped at `maxImages`+1 rows and
-    * unioned (tagged) with the distinct category vocabulary. If the cap
-    * was not hit, the image values are complete and both dims come back
-    * as driver LocalRelations (broadcast tier); if it was, only the
-    * bounded category dim is built — image names beyond the cap never
-    * reach the driver and the caller switches to the distributed
-    * image-id path. Either way the driver holds at most maxImages+1
-    * image names, and no separate probe job runs. Values are sorted
-    * with UTF-8 byte ordering (nulls FIRST — exactly Spark's ASC NULLS
-    * FIRST over UTF8String, so these ids agree with the SeqIds-based
-    * categoryDim/imageDim; Scala's `String.<` compares UTF-16 code
-    * units and would desync on U+E000..U+FFFF vs supplementary-plane
-    * names), zipped with their index, and returned as LocalRelations.
+  /** What [[localDims]]'s one action gathered. `images` holds the
+    * collected image rows (`image_name` then the requested columns) in
+    * image-id order, or None when the cap was hit; `categories` holds the
+    * vocabulary in category-id order (id = index + 1). `imgDim`/`catDim`
+    * are the same assignments as LocalRelations for the record joins.
     */
-  private def localDims(images: DataFrame, annos: DataFrame,
-                        maxImages: Long): (Option[DataFrame], DataFrame) = {
+  private final case class Dims(images: Option[Seq[Row]], categories: Seq[String],
+                                imgDim: Option[DataFrame], catDim: DataFrame)
+
+  /** ONE action serves the tier decision AND both exporter dims: the
+    * image side (`image_name` plus `imageCols`) is collected
+    * LIMIT-capped at `maxImages`+1 rows and unioned (tagged, the
+    * category side padded with typed nulls) with the distinct category
+    * vocabulary. If the cap was not hit, the image rows are complete
+    * and both dims come back as driver LocalRelations (broadcast tier);
+    * if it was, only the bounded category dim is built — the caller
+    * switches to the distributed image-id path. Either way the driver
+    * holds at most maxImages+1 image rows, and no separate probe job
+    * runs. Values are sorted with UTF-8 byte ordering (nulls FIRST —
+    * exactly Spark's ASC NULLS FIRST over UTF8String, so these ids agree
+    * with the SeqIds-based categoryDim/imageDim; Scala's `String.<`
+    * compares UTF-16 code units and would desync on U+E000..U+FFFF vs
+    * supplementary-plane names), zipped with their index, and returned
+    * as LocalRelations.
+    */
+  private def localDims(images: DataFrame, annos: DataFrame, maxImages: Long,
+                        imageCols: Seq[String]): Dims = {
     val spark = annos.sparkSession
     import spark.implicits._
     val cap = math.min(maxImages + 1, Int.MaxValue.toLong).toInt
-    val tagged = images.select(col("image_name").as("v"), lit(0).as("kind")).limit(cap)
-      .union(annos.select(col("category").as("v"), lit(1).as("kind"))
-        .filter(col("v").isNotNull).distinct()) // same rule as categoryDim
-      .collect().map(r => (if (r.isNullAt(0)) null else r.getString(0), r.getInt(1)))
-    def dim(kind: Int, nameCol: String, idCol: String, startAt: Int) =
-      tagged.collect { case (v, k) if k == kind => v }
-        .sorted(utf8NullsFirst).zipWithIndex
-        .map { case (n, i) => (n, i + startAt) }.toSeq
-        .toDF(nameCol, idCol)
-    val imgCount = tagged.count(_._2 == 0)
-    val imgDim =
-      if (imgCount <= maxImages) Some(dim(0, "image_name", "image_id", 0)) else None
-    (imgDim, dim(1, "category", "category_id", 1))
+    val pad = imageCols.map(c => lit(null).cast(images.schema(c).dataType).as(c))
+    // the kind tag goes last, so an image row reads (image_name, imageCols...)
+    val (imgRows, catRows) =
+      images.select((col("image_name") +: imageCols.map(col)) :+ lit(0).as("kind"): _*)
+        .limit(cap)
+        .union(annos.select((col("category") +: pad) :+ lit(1).as("kind"): _*)
+          .filter(col("category").isNotNull).distinct()) // same rule as categoryDim
+        .collect().partition(_.getInt(imageCols.length + 1) == 0)
+    def name(r: Row) = if (r.isNullAt(0)) null else r.getString(0)
+    def dim(names: Seq[String], nameCol: String, idCol: String, startAt: Int) =
+      names.zipWithIndex.map { case (n, i) => (n, i + startAt) }.toDF(nameCol, idCol)
+    val imgSorted =
+      if (imgRows.length <= maxImages) Some(imgRows.sortBy(name)(utf8NullsFirst).toSeq)
+      else None
+    val categories = catRows.map(name).sorted(utf8NullsFirst).toSeq
+    Dims(imgSorted, categories,
+      imgSorted.map(rs => dim(rs.map(name), "image_name", "image_id", 0)),
+      dim(categories, "category", "category_id", 1))
   }
 
   /** Session conf key: image-count threshold above which
@@ -123,7 +140,15 @@ object Coco {
     * the name count only under the contract.
     */
   def annotationRecords(annos: DataFrame, images: DataFrame,
-                        annoKeyCol: String, odtk: Boolean = true): DataFrame = {
+                        annoKeyCol: String, odtk: Boolean = true): DataFrame =
+    records(annos, images, annoKeyCol, odtk, Nil)._1
+
+  /** [[annotationRecords]] plus the [[Dims]] its one dim collect
+    * gathered, with `imageCols` collected beside each image name so a
+    * caller can emit the images section without another action.
+    */
+  private def records(annos: DataFrame, images: DataFrame, annoKeyCol: String,
+                      odtk: Boolean, imageCols: Seq[String]): (DataFrame, Dims) = {
     // Two image-dim tiers, switched on a bounded row probe against
     // ImageBroadcastMaxRowsKey. Below the threshold the dims are
     // assigned on the driver (localDims): identical ids to
@@ -169,11 +194,11 @@ object Coco {
     // ordering localDims replicates driver-side.
     val maxLocal = annos.sparkSession.conf
       .get(ImageBroadcastMaxRowsKey, ImageBroadcastMaxRowsDefault.toString).toLong
-    val (imgDimLocal, catDim) = localDims(images, a, maxLocal)
-    lastImageDimWasLocalTL.set(imgDimLocal.isDefined)
-    val imgDim = imgDimLocal.getOrElse(imageDim(images.select("image_name")))
+    val dims = localDims(images, a, maxLocal, imageCols)
+    lastImageDimWasLocalTL.set(dims.imgDim.isDefined)
+    val imgDim = dims.imgDim.getOrElse(imageDim(images.select("image_name")))
     def maybeBroadcast(df: DataFrame): DataFrame =
-      if (imgDimLocal.isDefined) broadcast(df) else df
+      if (dims.imgDim.isDefined) broadcast(df) else df
     val known = a
       .join(maybeBroadcast(imgDim.select("image_name")), Seq("image_name"), "left_semi")
       .filter(col("category").isNotNull)
@@ -187,27 +212,35 @@ object Coco {
     val joined = withIds
       .withColumn("id", col("id").cast("int"))
       .join(maybeBroadcast(imgDim), Seq("image_name"))
-      .join(broadcast(catDim), Seq("category"))
+      .join(broadcast(dims.catDim), Seq("category"))
     val bbox =
       if (odtk) col("rcoco")
       else graft.functions.GeomFunctions.segmentation2bbox(col("segmentation"))
-    joined
+    val frame = joined
       .withColumn("iscrowd", lit(0))
       .withColumn("bbox", bbox)
       .withColumn("area", col("rcoco")(2) * col("rcoco")(3))
+    (frame, dims)
   }
 
   /** Whole-document assembly (ref :46-116) STREAMED to `out`: the
     * single-document output is inherently driver-written (one JSON
     * file), but nothing forces the driver to hold the document — or
-    * any corpus-sized array — in memory. Categories are collected (a
-    * bounded label vocabulary); the images and annotations sections
-    * are driven by `toLocalIterator` over the id-sorted frames, which
-    * fetches ONE partition at a time (the sort's shuffle map stage
-    * runs once; each per-partition fetch job reuses its output), so
-    * peak driver memory is O(largest partition), constant in corpus
-    * size. Rows are formatted and written as they arrive — no
-    * per-section array, no whole-document string.
+    * any corpus-sized array — in memory. Rows are formatted and written
+    * as they arrive — no per-section array, no whole-document string.
+    *
+    * Section sources, per image-dim tier (see [[annotationRecords]]):
+    *  - broadcast tier: the images and categories sections stream the
+    *    rows the records' one dim collect already brought to the driver
+    *    (at most `graft.coco.imageBroadcastMaxRows` image names, each
+    *    with its height and width — the bound the broadcast join pays
+    *    anyway), so neither section submits a job;
+    *  - distributed tier: the images section is fetched from the
+    *    SeqIds-numbered image frame in ≤8 contiguous partition groups
+    *    (`groupedRows`, one group held at a time, O(images/8) driver
+    *    memory); categories still stream from the collected vocabulary;
+    *  - both tiers: the annotations section is fetched the same way from
+    *    the id-ordered records frame, O(annotations/8) driver memory.
     *
     * Info/license text is neutral placeholder, not the reference's
     * URLs.
@@ -216,12 +249,12 @@ object Coco {
                   annoKeyCol: String, train: Boolean = false,
                   odtk: Boolean = true): Unit = {
     // One pinned execution of the anno plan serves every action below:
-    // categoryDim, imageDim (an `images` derived from the same anno plan
-    // hits the cache via substitution), and annotationRecords' dims + id
-    // pass (its internal pin of the already-persisted frame is a no-op).
-    // Unpersisted before returning — the streamed write completes in
-    // this method, so unlike annotationRecords no cache may outlive
-    // the call.
+    // the records' dim collect and id pass, and in the distributed tier
+    // imageDim (an `images` derived from the same anno plan hits the
+    // cache via substitution; the records' internal pin of the
+    // already-persisted frame is a no-op). Unpersisted before returning
+    // — the streamed write completes in this method, so unlike
+    // annotationRecords no cache may outlive the call.
     annos.persist()
     // scoped registry cleanup: the withSeqId/pin frames minted INSIDE
     // this call are fully consumed by the streamed write, so they are
@@ -230,6 +263,7 @@ object Coco {
     // BEFORE the call are untouched)
     val regMark = SeqIds.mark()
     try {
+    val (recsBase, dims) = records(annos, images, annoKeyCol, odtk, Seq("height", "width"))
     val info = """{"description": "Dataset", "version": "1.0", "year": 2022}"""
     val licenses = """[{"id": 1, "name": "placeholder"}]"""
     out.write(s"""{"info": $info, "licenses": $licenses, "images": [""")
@@ -247,19 +281,22 @@ object Coco {
     // SeqIds.withSeqId leaves its output range-partitioned by the sort
     // key with partition index = range order and ids ascending across
     // partitions by construction, and the broadcast dim joins preserve
-    // both. The former repartitionByRange(8, id) + sortWithinPartitions
-    // re-sort here was therefore a full extra exchange (plus its range-
-    // sampling pass) that re-established an ordering the frame already
-    // had — at export scale, a second shuffle of the entire record set.
-    // groupedRows replaces it with a zero-exchange fetch: one job per
+    // both. groupedRows fetches it with zero exchange: one job per
     // CONTIGUOUS partition-index group (≤8 — ExportExecCountSpec pins
-    // the bound independent of spark.sql.shuffle.partitions), identical
-    // row sequence, and the same O(data/8) driver-memory bound the 8-way
-    // re-range gave (one partition GROUP held at a time).
-    streamSection(
-      groupedRows(imageDim(images)
-        .select("image_name", "height", "width", "image_id"), 8)) { r =>
-      s"""{"license": 1, "file_name": ${jstr(r.getString(0) + ".jpeg")}, "height": ${r.get(1)}, "width": ${r.get(2)}, "id": ${r.getInt(3)}}"""
+    // the bound independent of spark.sql.shuffle.partitions), one group
+    // held at a time.
+    //
+    // Both tiers yield (row, image_id) in image-id order, each row
+    // reading (image_name, height, width, …); a collected row's id is
+    // its index.
+    val imageRows = dims.images match {
+      case Some(rows) => rows.iterator.zipWithIndex
+      case None =>
+        groupedRows(imageDim(images)
+          .select("image_name", "height", "width", "image_id"), 8).map(r => (r, r.getInt(3)))
+    }
+    streamSection(imageRows) { case (r, id) =>
+      s"""{"license": 1, "file_name": ${jstr(r.getString(0) + ".jpeg")}, "height": ${r.get(1)}, "width": ${r.get(2)}, "id": $id}"""
     }
     out.write("""], "annotations": [""")
     // d2 always carries the raw polygon (ref :42); odtk eval exports
@@ -271,33 +308,25 @@ object Coco {
       if (!odtk) to_json(array(col("segmentation")))
       else if (train) lit(null).cast("string")
       else to_json(array(col("rbox")))
-    val recsBase = annotationRecords(annos, images, annoKeyCol, odtk)
-    // capture the tier IMMEDIATELY after the call that sets it: the
-    // thread-local is per-call state, and any other export interleaved
-    // on this thread before the read would silently flip the ordering
-    // decision below
-    val dimWasLocal = lastImageDimWasLocal
     val recs = recsBase
       .withColumn("seg_json", segCol)
       .select(col("image_id"), col("id"), col("category_id"),
               to_json(col("bbox")).as("bbox_json"), col("area"), col("seg_json"))
     // Broadcast tier: the dim joins preserved the SeqIds id order, so
-    // the section streams with zero exchange (see the images section).
-    // Distributed tier only (image dim attached via shuffle join, order
-    // destroyed): re-establish id order explicitly — the one case that
-    // genuinely needs the exchange.
+    // the section streams with zero exchange. Distributed tier only
+    // (image dim attached via shuffle join, order destroyed):
+    // re-establish id order explicitly — the one case that genuinely
+    // needs the exchange.
     val ordered =
-      if (dimWasLocal) recs
+      if (dims.imgDim.isDefined) recs
       else recs.repartitionByRange(8, col("id")).sortWithinPartitions("id")
     streamSection(groupedRows(ordered, 8)) { r =>
       val seg = Option(r.getString(5)).map(s => s""", "segmentation": $s""").getOrElse("")
       s"""{"iscrowd": 0, "image_id": ${r.getInt(0)}, "bbox": ${r.getString(3)}, "category_id": ${r.getInt(2)}, "area": ${r.get(4)}, "id": ${r.getInt(1)}$seg}"""
     }
     out.write("""], "categories": [""")
-    // bounded label vocabulary — the one legitimately dim-sized collect
-    streamSection(
-      categoryDim(annos).orderBy("category_id").collect().iterator) { r =>
-      s"""{"supercategory": ${jstr(r.getString(0))}, "id": ${r.getInt(1)}, "name": ${jstr(r.getString(0))}}"""
+    streamSection(dims.categories.iterator.zipWithIndex) { case (c, i) =>
+      s"""{"supercategory": ${jstr(c)}, "id": ${i + 1}, "name": ${jstr(c)}}"""
     }
     out.write("]}")
     } finally {

@@ -18,19 +18,18 @@ import org.apache.spark.sql.DataFrame
   */
 object Yolo {
 
-  /** Per-image annotation text (ref :41-68): images semi-filtered to
-    * those with annotations (P8), each annotation formatted as
+  /** Per-image annotation text (ref :41-68): only images with
+    * annotations (P8), each annotation formatted as
     * "{category_id} {box...}" (F-S4), grouped per image (J6). Line order
     * within an image follows `annoKeyCol` (the reference uses frame
     * iteration order — nondeterministic; documented deviation).
     */
   def yoloLines(annos: DataFrame, images: DataFrame, catMap: DataFrame,
                 annoKeyCol: String, segmentation: Boolean = false): DataFrame = {
-    val imgs = images
-      .join(annos.select("image_name").distinct(), Seq("image_name"), "left_semi")
-      .select("image_name", "width", "height")
+    // the inner join already keeps only annotated images (P8), so no
+    // separate semi-join against the annotated names is needed
     val boxed = annos
-      .join(imgs, Seq("image_name")) // attach width/height per image
+      .join(images.select("image_name", "width", "height"), Seq("image_name"))
       .join(broadcast(catMap), Seq("category"))
       .withColumn("box",
         if (segmentation)

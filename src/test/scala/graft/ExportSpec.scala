@@ -84,6 +84,42 @@ class ExportSpec extends SparkSpec {
     }
   }
 
+  test("collected images section is byte-identical to the distributed one") {
+    // The broadcast tier writes the images section from the rows its dim
+    // collect brought to the driver; the distributed tier numbers them
+    // with SeqIds. Both must agree on the name order (U+FFFD sorts
+    // before U+10400 in UTF-8 bytes but after it in UTF-16 code units;
+    // NULL sorts first) and on how each height/width type prints.
+    val seg = Seq(0.0, 0.0, 2.0, 0.0, 2.0, 2.0, 0.0, 2.0)
+    val box = Seq(0.0, 0.0, 2.0, 2.0, 0.0)
+    val names = Seq("img_a", "\uFFFD", new String(Character.toChars(0x10400)), null)
+    val annos = names.zipWithIndex.map { case (n, i) => (n, "cat", i.toLong, seg, box) }
+      .toDF("image_name", "category", "anno_key", "segmentation", "rcoco")
+      .withColumn("rbox", col("segmentation"))
+    val asInt = names.zipWithIndex.map { case (n, i) => (n, 640 + i, 480) }
+      .toDF("image_name", "width", "height")
+    val asDouble = names.zipWithIndex.map { case (n, i) => (n, 640.0 + i, 480.0) }
+      .toDF("image_name", "width", "height")
+    for ((images, height, width) <- Seq((asInt, "480", "643"), (asDouble, "480.0", "643.0"))) {
+      val small = Coco.cocoDocument(annos, images, "anno_key")
+      assert(Coco.lastImageDimWasLocal, "default threshold must take the broadcast tier")
+      graft.operators.SeqIds.releaseAll()
+      spark.conf.set(Coco.ImageBroadcastMaxRowsKey, "0")
+      try {
+        val big = Coco.cocoDocument(annos, images, "anno_key")
+        assert(!Coco.lastImageDimWasLocal, "threshold 0 must force the distributed tier")
+        assert(big == small, s"images section diverges across tiers:\n$small\n$big")
+      } finally {
+        spark.conf.unset(Coco.ImageBroadcastMaxRowsKey)
+        graft.operators.SeqIds.releaseAll()
+      }
+      assert(small.contains(s""""file_name": "null.jpeg", "height": $height, "width": $width, "id": 0}"""),
+        small.take(600))
+      assert(small.indexOf("\uFFFD.jpeg") < small.indexOf(names(2) + ".jpeg"),
+        "U+FFFD must sort before U+10400 (UTF-8 byte order)")
+    }
+  }
+
   test("writeCocoTo streams per-row — never materializes the annotation array") {
     // A spying Writer records every write() chunk: the streamed path
     // must emit at least one chunk per annotation and per image (no
@@ -114,9 +150,10 @@ class ExportSpec extends SparkSpec {
   }
 
   test("annotationRecords ids agree with imageDim/categoryDim (single source of truth)") {
-    // cocoDocument builds the images array from imageDim (SeqIds path)
-    // and annotation image_id/category_id from the localized driver dims;
-    // this pins that the two assignments never desync
+    // the distributed tier builds the images array from imageDim (SeqIds
+    // path), the broadcast tier assigns annotation image_id/category_id
+    // from the localized driver dims; this pins that the two assignments
+    // never desync
     val recs = Coco.annotationRecords(annoFixture, imageFixture, "anno_key")
       .select("image_name", "image_id", "category", "category_id").distinct().collect()
     val imgIds = Coco.imageDim(imageFixture).select("image_name", "image_id")
