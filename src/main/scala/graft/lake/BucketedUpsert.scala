@@ -190,8 +190,7 @@ object BucketedUpsert {
                                           entries: Seq[Entry], key: String,
                                           probes: Seq[Column]): DataFrame = {
     val hit = keyProbeEntries(spark, root, key, probes, entries)
-    if (hit.isEmpty) emptyWithSchema(spark, root)
-      .getOrElse(readPaths(spark, root, Seq(entries.head.path)).limit(0))
+    if (hit.isEmpty) emptyTable(spark, root)
     // the probed slice as a BUCKETED relation (one RDD partition per
     // bucket id, absent buckets empty — the partitioning claim holds on
     // any bucket subset), so downstream key-clustered work — the
@@ -235,18 +234,6 @@ object BucketedUpsert {
     entries.filter(e => buckets(e.bucket))
   }
 
-  /** A zero-row frame carrying the table's schema, derivable even for a
-    * FULLY-EMPTIED table (every bucket deleted): the newest retained
-    * manifest version with entries still pins its data files against GC,
-    * so their footers can lend the schema. None when no retained version
-    * ever had data (schema genuinely unknowable). */
-  private[lake] def emptyWithSchema(spark: SparkSession,
-                                    root: String): Option[DataFrame] =
-    Snapshot.publishedTags(spark, root).sorted.reverse.iterator
-      .map(t => manifestEntriesAt(spark, root, t))
-      .find(_.nonEmpty)
-      .map(es => readPaths(spark, root, es.map(_.path)).limit(0))
-
   /** The table's fixed bucket count (throws before the first publish) —
     * what an appender created elsewhere must pass to applyBatch. */
   def bucketCount(spark: SparkSession, root: String): Int = {
@@ -263,33 +250,60 @@ object BucketedUpsert {
   def bucketCountOption(spark: SparkSession, root: String): Option[Int] =
     manifestEntries(spark, root).headOption.map(_.nBuckets)
 
-  // ---- declared logical schema (schema evolution beyond add-column).
-  // Parquet scans natively UPCAST a stored narrow type into a wider
-  // requested one (int32→long, float→double, int→double), so widening
-  // a column is METADATA-ONLY: publish the new logical schema, rewrite
-  // nothing — old files upcast at scan, new batches land wide, and the
-  // two widths coexist forever (mergeSchema, by contrast, REFUSES
-  // int-vs-long trees). Dropping a column is likewise one schema
-  // publish: the scan simply stops requesting it (column pruning means
-  // its bytes are never read again). The sidecar is a one-row Snapshot
-  // table at root/schema; absent → reads keep the mergeSchema path.
+  // ---- the recorded logical schema. Every table records its schema
+  // in a one-row Snapshot sidecar at root/schema at its first non-empty
+  // write, and every read plans from it: no read infers a schema from
+  // footers, so planning one costs no Spark job. Parquet scans natively
+  // UPCAST a stored narrow type into a wider requested one (int32→long,
+  // float→double, int→double), so widening a column is METADATA-ONLY:
+  // publish the new logical schema, rewrite nothing — old files upcast
+  // at scan, new batches land wide, and the two widths coexist forever.
+  // Dropping a column is likewise one schema publish: the scan simply
+  // stops requesting it (column pruning means its bytes are never read
+  // again). A table written before schemas were recorded has no sidecar
+  // until its next write; its schema is inferred ([[inferredSchema]]).
 
   private def schemaRoot(root: String) = s"$root/schema"
 
-  /** The table's declared logical schema, if evolution has been used. */
-  def declaredSchema(spark: SparkSession,
-                     root: String): Option[org.apache.spark.sql.types.StructType] =
-    declaredState(spark, root).map(_._1)
+  /** The table's logical schema — what every read of it plans from:
+    * the recorded one, else [[inferredSchema]] (empty for a table that
+    * never held a row). */
+  def tableSchema(spark: SparkSession,
+                  root: String): org.apache.spark.sql.types.StructType =
+    recordedState(spark, root).map(_._1).getOrElse(inferredSchema(spark, root))
 
-  /** (schema, sticky-dropped column names). Drops are STICKY: a later
-    * batch still carrying a dropped column must NOT re-introduce it —
-    * untouched files still hold the old values, which would resurrect.
-    * (Re-adding a once-dropped name is an explicit new evolution,
-    * deliberately unsupported here.) */
-  private def declaredState(spark: SparkSession, root: String)
+  /** A zero-row frame of [[tableSchema]] — a LocalRelation, so
+    * building, analyzing or collecting it submits no Spark job. */
+  private[lake] def emptyTable(spark: SparkSession, root: String): DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      tableSchema(spark, root))
+
+  /** The schema of a table that records none (written before schemas
+    * were recorded), inferred from the merged footers of its newest
+    * retained version at or below `asOf` that has entries — a fully
+    * emptied table's older versions still pin their files against GC.
+    * Empty when no such version exists. Also the schema of a
+    * time-travel read, which the recorded schema may postdate. */
+  private[graft] def inferredSchema(spark: SparkSession, root: String,
+                                    asOf: Long = Long.MaxValue)
+      : org.apache.spark.sql.types.StructType =
+    Snapshot.publishedTags(spark, root).filter(_ <= asOf).reverseIterator
+      .map(t => manifestEntriesAt(spark, root, t)).find(_.nonEmpty)
+      .fold(new org.apache.spark.sql.types.StructType())(es =>
+        spark.read.option("mergeSchema", "true").parquet(es.map(_.path): _*).schema)
+
+  /** (schema, sticky-dropped column names) as recorded, read through the
+    * localize memo ([[publishSchema]] seeds it, so a steady-state read
+    * costs no job). Drops are STICKY: a later batch still carrying a
+    * dropped column must NOT re-introduce it — untouched files still
+    * hold the old values, which would resurrect. (Re-adding a
+    * once-dropped name is an explicit new evolution, deliberately
+    * unsupported here.) */
+  private def recordedState(spark: SparkSession, root: String)
       : Option[(org.apache.spark.sql.types.StructType, Set[String])] =
-    Snapshot.resolve(spark, schemaRoot(root)).map { _ =>
-      val r = Snapshot.read(spark, schemaRoot(root))
+    Snapshot.resolve(spark, schemaRoot(root)).map { dir =>
+      val r = FileStats.localizedParquet(spark, dir)
         .select("schema_json", "dropped_json").head()
       (org.apache.spark.sql.types.DataType.fromJson(r.getString(0))
         .asInstanceOf[org.apache.spark.sql.types.StructType],
@@ -316,31 +330,41 @@ object BucketedUpsert {
       }
     else s.split(",").filter(_.nonEmpty).toSet
 
+  private val sidecarSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("schema_json",
+      org.apache.spark.sql.types.StringType, nullable = false),
+    org.apache.spark.sql.types.StructField("dropped_json",
+      org.apache.spark.sql.types.StringType, nullable = false)))
+
   private def publishSchema(spark: SparkSession, root: String,
                             schema: org.apache.spark.sql.types.StructType,
                             dropped: Set[String], tag: Long,
-                            keep: Int): Unit = {
-    import spark.implicits._
-    // no coalesce(1): the frame is a driver-resident LocalRelation and
-    // Snapshot.publish's local fast path writes the one file jobless
-    Snapshot.publish(
-      Seq((schema.json, encodeDropped(dropped)))
-        .toDF("schema_json", "dropped_json"),
+                            keep: Int): Unit =
+    Snapshot.publishRows(spark, sidecarSchema,
+      Seq(org.apache.spark.sql.Row(schema.json, encodeDropped(dropped))),
       schemaRoot(root), tag, keep)
-  }
 
-  /** When the table carries a declared schema, fold the batch's
-    * schema into it (adds append, wider types widen) so evolution and
-    * ordinary ingestion compose — a batch adding a column after a
-    * widen must not make the declared schema hide it. No-op when
-    * nothing changed or no declared schema exists. */
+  /** Fold a batch's schema into the table's — the recorded one, else
+    * the inferred one (empty for a new table): adds append, wider types
+    * widen. Validates NOW (a cross-family conflict must fail while the
+    * table is untouched) and returns the recorder, which publishes the
+    * result under `tag` only when it differs from the record or no
+    * record exists. Writers run the recorder after the data write and
+    * skip it when nothing was written to a new table, so an empty first
+    * batch records nothing and a crash-replay at the same tag finds its
+    * schema already recorded. */
   private def absorbBatchSchema(spark: SparkSession, root: String,
                                 batch: org.apache.spark.sql.types.StructType,
-                                tag: Long, keep: Int): Unit =
-    declaredState(spark, root).foreach { case (cur, dropped) =>
-      val merged = mergeDeclared(cur, batch, dropped)
-      if (merged != cur) publishSchema(spark, root, merged, dropped, tag, keep)
-    }
+                                tag: Long, keep: Int): () => Unit = {
+    val recorded = recordedState(spark, root)
+    val (cur, dropped) = recorded.getOrElse(
+      (inferredSchema(spark, root), Set.empty[String]))
+    // files read back nullable whatever the batch declared
+    val merged = mergeDeclared(cur,
+      org.apache.spark.sql.graft.ColumnBridge.asNullable(batch), dropped)
+    if (recorded.exists(_._1 == merged)) () => ()
+    else () => publishSchema(spark, root, merged, dropped, tag, keep)
+  }
 
   /** Widenings the parquet scan performs losslessly in place. */
   private val Widenings: Set[(org.apache.spark.sql.types.DataType,
@@ -364,12 +388,12 @@ object BucketedUpsert {
           "murmur3 route is type- and presence-sensitive; rebucket into a " +
           "new table instead"))
 
-  /** Fold a batch's schema into the declared one: new fields append,
-    * a wider batch type widens the declared field, a narrower batch
-    * type keeps the declared width (the scan upcasts those rows). A
-    * CROSS-FAMILY conflict (declared int, batch string) fail-fasts:
-    * the union would coerce and write bytes the declared schema can
-    * no longer read. */
+  /** Fold a batch's schema into the table's: new fields append, a
+    * wider batch type widens the table's field, a narrower batch type
+    * keeps the table's width (the scan upcasts those rows). A
+    * CROSS-FAMILY conflict (table int, batch string) fail-fasts: the
+    * union would coerce and write bytes the table's schema can no
+    * longer read. */
   private def mergeDeclared(declared: org.apache.spark.sql.types.StructType,
                             batch: org.apache.spark.sql.types.StructType,
                             dropped: Set[String])
@@ -383,7 +407,7 @@ object BucketedUpsert {
           require(b.dataType == f.dataType ||
               Widenings((b.dataType, f.dataType)),
             s"batch column '${f.name}' is ${b.dataType.simpleString} but " +
-              s"the declared schema says ${f.dataType.simpleString} — " +
+              s"the table's schema says ${f.dataType.simpleString} — " +
               "neither a widening nor upcastable; cast the batch")
           f
         case None => f
@@ -400,7 +424,7 @@ object BucketedUpsert {
   def widenColumn(spark: SparkSession, root: String, column: String,
                   newType: org.apache.spark.sql.types.DataType, tag: Long,
                   keep: Int = 2): Unit = {
-    val cur = declaredSchema(spark, root).getOrElse(read(spark, root).schema)
+    val cur = tableSchema(spark, root)
     val field = cur.fields.find(_.name == column).getOrElse(
       throw new IllegalArgumentException(
         s"no column '$column' in the table at $root"))
@@ -408,7 +432,7 @@ object BucketedUpsert {
       s"cannot widen $column from ${field.dataType.simpleString} to " +
         s"${newType.simpleString} — only lossless widenings are allowed")
     requireNotBucketKey(spark, root, column, "widen")
-    val dropped = declaredState(spark, root).map(_._2).getOrElse(Set.empty)
+    val dropped = recordedState(spark, root).fold(Set.empty[String])(_._2)
     publishSchema(spark, root,
       org.apache.spark.sql.types.StructType(cur.fields.map(f =>
         if (f.name == column) f.copy(dataType = newType) else f)),
@@ -422,38 +446,24 @@ object BucketedUpsert {
     * contract (this layer does not record which they are). */
   def dropColumn(spark: SparkSession, root: String, column: String,
                  tag: Long, keep: Int = 2): Unit = {
-    val cur = declaredSchema(spark, root).getOrElse(read(spark, root).schema)
+    val cur = tableSchema(spark, root)
     require(cur.fieldNames.contains(column),
       s"no column '$column' in the table at $root")
     require(cur.fields.length > 1, "cannot drop the last column")
     requireNotBucketKey(spark, root, column, "drop")
-    val dropped = declaredState(spark, root).map(_._2).getOrElse(Set.empty)
+    val dropped = recordedState(spark, root).fold(Set.empty[String])(_._2)
     publishSchema(spark, root,
       org.apache.spark.sql.types.StructType(
         cur.fields.filterNot(_.name == column)),
       dropped + column, tag, keep)
   }
 
-  /** Read `paths` under the table's schema contract: the declared
-    * logical schema when evolution is in use (files upcast narrow
-    * columns, supply NULL for later-added ones, and prune dropped
-    * ones), else the merged-footer schema. */
+  /** Read `paths` under the table's schema ([[tableSchema]]): files
+    * upcast narrow columns, supply NULL for later-added ones, and prune
+    * dropped ones. */
   private[lake] def readPaths(spark: SparkSession, root: String,
                               paths: Seq[String]): DataFrame =
-    declaredSchema(spark, root) match {
-      case Some(sch) => spark.read.schema(sch).parquet(paths: _*)
-      case None =>
-        // mergeSchema=true launches a footer-merge Spark JOB at every
-        // planning of every bucketed read; generations only actually
-        // diverge after schema evolution. When a driver-side footer
-        // sweep (memoized, parallel, capped) proves the files uniform,
-        // read plainly — Spark then infers from one footer with no job.
-        // Divergent or uncheckable trees keep the mergeSchema read, so
-        // evolved tables behave exactly as before (r21).
-        if (FileStats.uniformFooterSchema(spark, paths))
-          spark.read.parquet(paths: _*)
-        else spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
+    spark.read.schema(tableSchema(spark, root)).parquet(paths: _*)
 
   /** The current table contents (throws before the first publish). */
   def read(spark: SparkSession, root: String): DataFrame = {
@@ -485,10 +495,8 @@ object BucketedUpsert {
     // data_tag, not the path's tag: compaction relocates bytes under a
     // new version dir without changing data, and must NOT appear here
     val changed = entries.filter(e => e.dataTag > sinceTag)
-    if (changed.isEmpty)
-      readPaths(spark, root, Seq(entries.head.path)).limit(0)
-    else
-      readPaths(spark, root, changed.map(_.path))
+    if (changed.isEmpty) emptyTable(spark, root)
+    else readPaths(spark, root, changed.map(_.path))
   }
 
   /** Fold one update batch into the table: SEQUENCE-BY resolve (highest
@@ -498,11 +506,14 @@ object BucketedUpsert {
     * batch id). Data-version directories no retained manifest references
     * are GC'd after the publish.
     *
-    * SCHEMA EVOLUTION: a batch may ADD columns — touched buckets
+    * SCHEMA EVOLUTION: a batch may ADD columns or WIDEN one — its
+    * schema is folded into the recorded one ([[tableSchema]]) and a
+    * cross-family type fail-fasts before any write. Touched buckets
     * resolve via unionByName (legacy rows take NULL in the new column),
-    * untouched buckets keep their old-schema files verbatim, and
-    * [[read]]/[[changesSince]] merge schemas across generations, so
-    * history is never rewritten. The upsert itself stays WHOLE-ROW: a
+    * untouched buckets keep their old-schema files verbatim, and every
+    * read plans from the recorded schema (the scan upcasts narrow files
+    * and supplies NULL for columns they lack), so history is never
+    * rewritten. The upsert itself stays WHOLE-ROW: a
     * batch that OMITS an existing column replaces matched rows with
     * NULL there (not a patch) — carry a column in the feed if its value
     * must survive updates.
@@ -560,11 +571,10 @@ object BucketedUpsert {
     val prev = manifestEntries(spark, root)
     val keyDt = batch.schema(key).dataType
     requireKeyTypeStableEntries(spark, prev, root, key, keyDt)
-    // validate + absorb the batch's schema BEFORE any data write: a
-    // cross-family conflict must fail while the table is untouched,
-    // and a schema published without its data yet is harmless (extra
-    // declared columns read as NULL until the manifest follows)
-    absorbBatchSchema(spark, root, batch.schema, tag, keep)
+    // validate the batch's schema BEFORE any data write; it is recorded
+    // after the write, and a schema recorded without its manifest yet
+    // is harmless (extra columns read as NULL until the manifest follows)
+    val recordSchema = absorbBatchSchema(spark, root, batch.schema, tag, keep)
     prev.headOption.foreach(e => require(e.nBuckets == nBuckets,
       s"table at $root was bucketed with n=${e.nBuckets}, got $nBuckets — " +
         "the bucket count is fixed at table creation"))
@@ -610,6 +620,7 @@ object BucketedUpsert {
     // consumer that resolves it (the streaming index ingests died
     // exactly this way on a zero-row leading file)
     if (prev.isEmpty && written.isEmpty) return () => ()
+    recordSchema()
     val entries = prev.filterNot(e => touched(e.bucket)) ++
       written.map(bucketEntry(dataDir, _, nBuckets, tag, key, versionCol,
         keyDt.json))
@@ -645,7 +656,7 @@ object BucketedUpsert {
     val prev = manifestEntries(spark, root)
     val keyDt = batch.schema(key).dataType
     requireKeyTypeStableEntries(spark, prev, root, key, keyDt)
-    absorbBatchSchema(spark, root, batch.schema, tag, keep)
+    val recordSchema = absorbBatchSchema(spark, root, batch.schema, tag, keep)
     prev.headOption.foreach(e => require(e.nBuckets == nBuckets,
       s"table at $root was bucketed with n=${e.nBuckets}, got $nBuckets — " +
         "the bucket count is fixed at table creation"))
@@ -658,6 +669,7 @@ object BucketedUpsert {
       dataDir, key, nBuckets)
     // empty FIRST batch creates nothing (same wedge guard as applyBatch)
     if (written.isEmpty && prev.isEmpty) return
+    recordSchema()
     // the recorded version column: an explicit one wins; otherwise
     // inherit the table's standing record so one annotated writer is
     // enough for transparent merge-on-read everywhere (search ALL
@@ -1256,11 +1268,7 @@ object BucketedUpsert {
     import org.apache.spark.sql.catalyst.catalog.BucketSpec
     import org.apache.spark.sql.types.StructType
     val n = entries.head.nBuckets
-    // declared schema when evolution is in use (widened/dropped columns);
-    // merged-footer schema otherwise (generations may differ by adds)
-    val schema = declaredSchema(spark, root).getOrElse(
-      spark.read.option("mergeSchema", "true")
-        .parquet(entries.map(_.path): _*).schema)
+    val schema = tableSchema(spark, root)
     require(schema.fieldNames.contains(key),
       s"bucket key '$key' is not a column of the table: " +
         schema.fieldNames.mkString(","))

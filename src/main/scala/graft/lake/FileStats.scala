@@ -409,67 +409,6 @@ object FileStats {
       case _ => df.distinct()
     }
 
-  /** Memoized parquet footer schema strings keyed by
-    * (path, len, mtime) — immutable once written, so a hit can never
-    * be stale. */
-  private val footerSchemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** True when EVERY parquet file under `paths` (files or dirs)
-    * carries the IDENTICAL footer schema — decided driver-side from
-    * (memoized) footers, so callers can skip mergeSchema's per-read
-    * Spark job for the common uniform case. Answers false (= caller
-    * keeps the conservative mergeSchema read) when the tree is empty,
-    * unlistable, or larger than 1024 files (where the distributed
-    * merge is the right tool). */
-  private[lake] def uniformFooterSchema(spark: SparkSession,
-                                        paths: Seq[String]): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files =
-      try paths.flatMap { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        val fs = p.getFileSystem(conf)
-        val st = fs.getFileStatus(p)
-        if (st.isFile) Seq(st)
-        else liveFiles(fs, p)
-      }
-      catch { case _: java.io.IOException => return false }
-    if (files.isEmpty || files.size > 1024) return false
-    val schemas =
-      try Overlap.all(
-        files.map { st =>
-          scala.concurrent.Future {
-            val key = s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
-            val hit = footerSchemaMemo.get(key)
-            if (hit != null) hit
-            else {
-              val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromStatus(st, conf)
-              val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-              // compare the SPARK logical schema recorded in the footer
-              // alongside the physical MessageType (ADVICE r21): two
-              // physically identical files whose Spark-level metadata
-              // diverges (logical annotations from another writer) must
-              // NOT take the plain read, which would adopt one file's
-              // logical schema arbitrarily where mergeSchema reconciles
-              val s =
-                try {
-                  val fm = r.getFooter.getFileMetaData
-                  fm.getSchema.toString + "\u0000" +
-                    Option(fm.getKeyValueMetaData
-                      .get("org.apache.spark.sql.parquet.row.metadata"))
-                      .getOrElse("")
-                } finally r.close()
-              if (footerSchemaMemo.size > 16384) footerSchemaMemo.clear()
-              footerSchemaMemo.put(key, s)
-              s
-            }
-          }
-        }, scala.concurrent.duration.Duration(10, "min"))
-      catch { case scala.util.control.NonFatal(_) => return false }
-    schemas.distinct.size == 1
-  }
-
   /** `df.count()` with a driver-side fast path for localized
     * LocalRelations (a count() plans an Aggregate — a Spark job even
     * over driver-resident rows). */

@@ -121,11 +121,8 @@ object IncrAgg {
 
     val changedEntries = entries.filter(e => changedBuckets(e.bucket))
     val feed0 =
-      if (changedEntries.isEmpty)
-        BucketedUpsert.readPaths(spark, tableRoot, Seq(entries.head.path))
-          .limit(0)
-      else BucketedUpsert.readPaths(spark, tableRoot,
-        changedEntries.map(_.path))
+      if (changedEntries.isEmpty) BucketedUpsert.emptyTable(spark, tableRoot)
+      else BucketedUpsert.readPaths(spark, tableRoot, changedEntries.map(_.path))
     // a fragmented changed bucket holds superseded rows physically —
     // partials must see the RESOLVED bucket (restricted resolution is
     // exact: a key's fragments all live in its own bucket)

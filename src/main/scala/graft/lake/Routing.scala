@@ -645,7 +645,7 @@ object Routing {
     val entries = BucketedUpsert.manifestEntries(spark, root)
     require(entries.nonEmpty, s"no published bucketed table under $root")
     val layout = layoutOf(spark, root, entries)
-    val cs = conjunctsOf(BucketedUpsert.read(spark, root), pred)
+    val cs = conjunctsOf(BucketedUpsert.emptyTable(spark, root), pred)
     val route = chooseBucketedRoute(spark, root, entries, cs) match {
       case KeyProbe(key, vs) =>
         val hit = BucketedUpsert.keyProbeEntries(spark, root, key,
@@ -747,7 +747,7 @@ object Routing {
       // ONE manifest fetch answers fragmentation, the key column, and
       // the version column (each manifestEntries call is a driver job)
       val entries = BucketedUpsert.manifestEntries(spark, root)
-      val cs = conjunctsOf(BucketedUpsert.read(spark, root), pred)
+      val cs = conjunctsOf(BucketedUpsert.emptyTable(spark, root), pred)
       val resolve: DataFrame => DataFrame =
         BucketedUpsert.mergeOnRead(root, entries, entries).getOrElse(identity)
       // route CHOICE is shared with routeBucketed (chooseBucketedRoute
@@ -763,7 +763,7 @@ object Routing {
           SecondaryIndex.lookupEntries(spark, root, entries,
             sixDir(root, c), c, vs, resolve)
         case StatsBuckets(hit, _) =>
-          if (hit.isEmpty) BucketedUpsert.read(spark, root).limit(0)
+          if (hit.isEmpty) BucketedUpsert.emptyTable(spark, root)
           else resolve(BucketedUpsert.readPaths(spark, root, hit.map(_.path)))
         case AllBuckets => resolve(BucketedUpsert.read(spark, root))
       }

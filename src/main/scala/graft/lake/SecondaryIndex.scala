@@ -99,9 +99,7 @@ object SecondaryIndex {
     val allEntries = BucketedUpsert.manifestEntries(spark, tableRoot)
     // empty table first: it can hold no value for ANY index state, so
     // the parity gate must not fire on an unbuilt index over nothing
-    if (allEntries.isEmpty)
-      return BucketedUpsert.emptyWithSchema(spark, tableRoot)
-        .getOrElse(spark.emptyDataFrame)
+    if (allEntries.isEmpty) return BucketedUpsert.emptyTable(spark, tableRoot)
     val tableTag = Snapshot.currentTag(spark, tableRoot)
     val ixTag = Snapshot.currentTag(spark, ixRoot)
     def show(t: Option[Long]) = t.map("v" + _).getOrElse("unbuilt")
@@ -123,22 +121,18 @@ object SecondaryIndex {
                                   values: Seq[String],
                                   resolve: DataFrame => DataFrame): DataFrame = {
     // an empty table (zero-row first batch, or emptied completely) can
-    // hold no value — correct for any index state. The result must still
-    // carry the table SCHEMA where one is derivable (a fully-emptied
-    // table's newest retained manifest version pins its old data files
-    // against GC), or callers selecting the indexed columns get an
-    // AnalysisException instead of an empty typed frame. Only a table
-    // that never had a row in any retained version is schema-less.
-    if (allEntries.isEmpty)
-      return BucketedUpsert.emptyWithSchema(spark, tableRoot)
-        .getOrElse(spark.emptyDataFrame)
+    // hold no value — correct for any index state. The result still
+    // carries the table's schema (the recorded one outlives every row),
+    // so callers selecting the indexed columns get an empty typed frame,
+    // not an AnalysisException. Only a table that never held a row is
+    // schema-less.
+    if (allEntries.isEmpty) return BucketedUpsert.emptyTable(spark, tableRoot)
     val admitted = lookupBuckets(spark, ixRoot, values).toSet
     val entries = allEntries.filter(e => admitted(e.bucket))
     val base =
-      if (entries.isEmpty) BucketedUpsert.read(spark, tableRoot).limit(0)
-      // through the table's declared-schema contract: a lookup on a
-      // DROPPED column must fail loudly, not resurrect hidden values
-      // from the raw files
+      if (entries.isEmpty) BucketedUpsert.emptyTable(spark, tableRoot)
+      // through the table's schema: a lookup on a DROPPED column must
+      // fail loudly, not resurrect hidden values from the raw files
       else BucketedUpsert.readPaths(spark, tableRoot, entries.map(_.path))
     resolve(base).filter(col(column).cast("string").isin(values: _*))
   }

@@ -257,13 +257,11 @@ private[graft] object GraftCatalog {
                 "(publish with a larger `keep` to widen the travel window)"
             case None => s"no published bucketed table under $dir"
           }))
-        // current version: the table's schema contract (declared schema
-        // when evolution is in use); historical: that version's own
-        // merged footers — the declared schema may postdate it
-        val schema =
-          if (asOf.isEmpty) graft.lake.BucketedUpsert.read(spark, dir).schema
-          else spark.read.option("mergeSchema", "true")
-            .parquet(layout.buckets.map(_._2): _*).schema
+        // current version: the table's recorded schema; historical:
+        // inferred from that version's own footers — the recorded
+        // schema may postdate it
+        val schema = asOf.fold(graft.lake.BucketedUpsert.tableSchema(spark, dir))(
+          graft.lake.BucketedUpsert.inferredSchema(spark, dir, _))
         new GraftTable(dir, schema, asOf)
       case RoutedTree =>
         asOf.foreach(t => throw new IllegalArgumentException(

@@ -80,7 +80,7 @@ class GraftSource extends TableProvider with DataSourceRegister {
     val root = GraftSource.rootOf(options)
     val bucketed = Routing.isBucketed(spark, root)
     GraftSource.requireScannable(spark, root, bucketed)
-    if (bucketed) graft.lake.BucketedUpsert.read(spark, root).schema
+    if (bucketed) graft.lake.BucketedUpsert.tableSchema(spark, root)
     else if (DeleteWhere.isVersionDir(spark, root))
       spark.read.parquet(
         DeleteWhere.manifestPaths(spark, root): _*).schema

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Column ↔ Expression bridge for native Catalyst expressions that carry
   * non-SQL-expressible state (a partition-offset array + release token, a
@@ -12,9 +13,13 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Spark 4 made `ExpressionUtils` `private[sql]`, so library code needs
   * this one-file subpackage shim — the same pattern Spark-ecosystem
   * projects use for their own physical-plan glue. Everything else in this
-  * repo goes through the public Column/functions API.
+  * repo goes through the public Column/functions API (plus
+  * `StructType.asNullable`, also hidden).
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** `s` with every field and nested element nullable — the schema a
+    * parquet read reports for files written from `s` (`private[spark]`). */
+  def asNullable(s: StructType): StructType = s.asNullable
 }

@@ -1,19 +1,27 @@
 package graft
 
-import graft.lake.{BucketedUpsert, IncrAgg, SecondaryIndex}
+import graft.lake.{BucketedUpsert, IncrAgg, Routing, SecondaryIndex, Snapshot}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Schema evolution beyond add-column: metadata-only type WIDENING
   * (old narrow files upcast at scan; no rewrite), sticky DROP (a later
   * batch cannot resurrect hidden values), fail-fast on lossy casts,
-  * and the MV / secondary-index interaction contracts.
+  * the MV / secondary-index interaction contracts, and tables written
+  * before schemas were recorded (no `root/schema` sidecar).
   */
 class SchemaEvolveSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("evolve-spec").toString + "/t"
+
+  /** Make `root` look written before schemas were recorded. */
+  private def dropSchemaRecord(root: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$root/schema")
+    assert(p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true),
+      s"no schema record under $root")
+  }
 
   test("widening is metadata-only: old int files upcast, new long batch lands wide") {
     val root = tmp()
@@ -225,5 +233,68 @@ class SchemaEvolveSpec extends SparkSpec {
         sum(col("amt").cast("decimal(12,2)")).cast("double").as("s"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == want, s"MV diverged across widening:\n$got\n$want")
+  }
+
+  test("a never-evolved table refuses a cross-family batch, leaving tag and rows as they were") {
+    val root = tmp()
+    BucketedUpsert.applyBatch(
+      (1 to 50).map(k => (k.toLong, k, 1L)).toDF("k", "v", "ver"),
+      root, "k", "ver", nBuckets = 4, tag = 1)
+    val before = BucketedUpsert.read(spark, root).collect().toSet
+    val ex = intercept[IllegalArgumentException](
+      BucketedUpsert.applyBatch(
+        Seq((7L, "oops", 2L)).toDF("k", "v", "ver"), root, "k", "ver", 4,
+        tag = 2))
+    assert(ex.getMessage.contains("cast the batch"), ex.getMessage)
+    assert(Snapshot.currentTag(spark, root).contains(1L))
+    assert(BucketedUpsert.read(spark, root).collect().toSet == before)
+  }
+
+  test("a never-evolved table widens int to long from a value batch") {
+    val root = tmp()
+    BucketedUpsert.applyBatch(
+      (1 to 50).map(k => (k.toLong, k, 1L)).toDF("k", "v", "ver"),
+      root, "k", "ver", nBuckets = 4, tag = 1)
+    BucketedUpsert.applyBatch(
+      Seq((7L, 5000000000L, 2L)).toDF("k", "v", "ver"), root, "k", "ver", 4,
+      tag = 2)
+    assert(BucketedUpsert.tableSchema(spark, root)("v").dataType == LongType)
+    val got = BucketedUpsert.read(spark, root)
+    assert(got.schema("v").dataType == LongType, s"${got.schema}")
+    val m = got.select("k", "v").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(m.size == 50 && m(7L) == 5000000000L && m(8L) == 8L)
+  }
+
+  test("a table without a schema record reads every column and records one at its next write") {
+    val root = tmp()
+    BucketedUpsert.applyBatch(
+      (1 to 40).map(k => (k.toLong, k, s"x-$k", 1L)).toDF("k", "v", "extra", "ver"),
+      root, "k", "ver", nBuckets = 4, tag = 1)
+    dropSchemaRecord(root)
+    val cols = Seq("k", "v", "extra", "ver")
+    assert(BucketedUpsert.read(spark, root).columns.toSeq == cols)
+    assert(Routing.readWhere(spark, root, col("k") === 5L)
+      .select("extra").head().getString(0) == "x-5")
+    // the next batch lacks `extra`: the recorded schema must keep it
+    BucketedUpsert.applyBatch(Seq((5L, 50, 2L)).toDF("k", "v", "ver"),
+      root, "k", "ver", nBuckets = 4, tag = 2)
+    assert(Snapshot.currentTag(spark, s"$root/schema").contains(2L))
+    assert(BucketedUpsert.tableSchema(spark, root).fieldNames.toSeq == cols)
+    val extra = BucketedUpsert.read(spark, root).select("k", "extra").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)))).toMap
+    assert(extra.size == 40 && extra(5L).isEmpty && extra(6L).contains("x-6"))
+  }
+
+  test("a fully emptied table without a schema record still gives lookup a typed empty frame") {
+    val root = tmp(); val ix = root + "-ix"
+    BucketedUpsert.applyBatch(
+      (1L to 50L).map(k => (k, s"name-$k", 1L)).toDF("k", "s", "ver"),
+      root, "k", "ver", nBuckets = 4, tag = 1)
+    SecondaryIndex.refresh(spark, root, ix, "k", "s")
+    dropSchemaRecord(root)
+    BucketedUpsert.deleteKeys(spark, root, "k", (1L to 50L).toDF("k"), tag = 2)
+    val got = SecondaryIndex.lookup(spark, root, ix, "s", Seq("name-7"))
+    assert(got.columns.toSeq == Seq("k", "s", "ver"), got.columns.toSeq)
+    assert(got.select("k", "s").count() == 0)
   }
 }

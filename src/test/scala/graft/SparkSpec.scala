@@ -35,6 +35,33 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case _ => Seq.empty
     }.map(normPath).toSet
   }
+
+  /** `body`'s result and the Spark jobs submitted while it ran. The
+    * listener bus delivers events in order, so once a fence job run
+    * after `body` has been seen, every job `body` submitted has been. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val fence = s"job-count-fence-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      spark.sparkContext.setJobDescription(fence)
+      try spark.range(1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(fence) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(fence), "the fence job never reached the listener")
+      (out, seen.toArray.takeWhile(_ != fence).length)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

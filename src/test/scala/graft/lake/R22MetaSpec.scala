@@ -126,21 +126,26 @@ class R22MetaSpec extends SparkSpec {
       "conflicting duplicate meta must classify as changed (rescan+drop)")
   }
 
-  test("uniformFooterSchema is false when Spark logical metadata diverges") {
+  test("readPaths under a recorded schema carries its field metadata over divergent footers") {
     import spark.implicits._
+    // physically identical files whose Spark field metadata diverges
     val dir = tmp("logical") + "/d"
-    Seq(1, 2).toDF("x").coalesce(1).write.parquet(dir)
+    Seq((1L, 1, 1L), (2L, 2, 1L)).toDF("k", "x", "ver")
+      .coalesce(1).write.parquet(dir)
     val noted = new MetadataBuilder().putString("note", "differs").build()
-    Seq(3, 4).toDF("x").select(col("x").as("x", noted))
+    Seq((3L, 3, 1L), (4L, 4, 1L)).toDF("k", "x", "ver")
+      .select(col("k"), col("x").as("x", noted), col("ver"))
       .coalesce(1).write.mode("append").parquet(dir)
-    assert(!FileStats.uniformFooterSchema(spark, Seq(dir)),
-      "physically identical files with divergent Spark field metadata " +
-        "must keep the mergeSchema read")
-    // and a genuinely uniform pair still reads plainly
-    val dir2 = tmp("uniform") + "/d"
-    Seq(1, 2).toDF("x").coalesce(1).write.parquet(dir2)
-    Seq(3, 4).toDF("x").coalesce(1).write.mode("append").parquet(dir2)
-    assert(FileStats.uniformFooterSchema(spark, Seq(dir2)))
+    // a table whose recorded schema gives x metadata of its own
+    val root = tmp("recorded") + "/t"
+    val recorded = new MetadataBuilder().putString("note", "recorded").build()
+    BucketedUpsert.applyBatch(Seq((9L, 9, 1L)).toDF("k", "x", "ver")
+      .select(col("k"), col("x").as("x", recorded), col("ver")),
+      root, "k", "ver", nBuckets = 2, tag = 1)
+    val got = BucketedUpsert.readPaths(spark, root, Seq(dir))
+    assert(got.schema("x").metadata == recorded,
+      s"the read must plan from the recorded schema: ${got.schema("x")}")
+    assert(got.select("x").as[Int].collect().sorted.toSeq == Seq(1, 2, 3, 4))
   }
 
   // NOTE (ADVICE r21, offsets-dir freshness): withAdaptiveStateConf now
