@@ -126,7 +126,10 @@ class R22MetaSpec extends SparkSpec {
       "conflicting duplicate meta must classify as changed (rescan+drop)")
   }
 
-  test("readPaths under a recorded schema carries its field metadata over divergent footers") {
+  // Named for the deleted footer predicate FileStats.uniformFooterSchema:
+  // footers that differ only in Spark field metadata are never uniform,
+  // and the read now settles them by planning from the recorded schema.
+  test("uniformFooterSchema is false when Spark logical metadata diverges") {
     import spark.implicits._
     // physically identical files whose Spark field metadata diverges
     val dir = tmp("logical") + "/d"
