@@ -1,8 +1,11 @@
 package graft.ingest
 
 import graft.functions.GeomFunctions
+import org.apache.spark.sql.catalyst.expressions.{KnownNotNull, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.MapType
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Tabularization of CVAT ingestion — the Spark-native re-expression of
   * create_anno_feather (CvatApi.py:327-425) and create_image_feather
@@ -22,13 +25,30 @@ object CvatTables {
     * shape_type, points, attributes
     * (array<struct<spec_id:int,value:string>>), track_id.
     * `labels`: (label_id, category); `images`: (frame, image_name);
-    * `attrTypes`: (spec_id, attr_name) — all dimension-sized, broadcast.
+    * `attrTypes`: (spec_id, attr_name) — all dimension-sized: each is
+    * collected once on the driver into a map literal (no job when it is
+    * a LocalRelation) and looked up per shape, as the reference's dicts
+    * are. A shape whose label_id or frame is missing from its dimension
+    * is dropped; a key repeated within a dimension fails. The result is
+    * one narrow projection over `shapes`: no join, aggregate or exchange.
     */
   def buildAnnoTable(spark: SparkSession, shapes: DataFrame, labels: DataFrame,
                      images: DataFrame, attrTypes: DataFrame,
                      projectId: Long, taskId: Long, jobId: Long,
                      dropPrefix: Boolean = false): DataFrame = {
+    val categoryOf = new Dim(labels, "label_id", "category")
+    val imageOf = new Dim(images, "frame", "image_name")
+    // spec_id → the attribute's object prefix (ref :388-406); other
+    // attr_names map to NULL, so their objects are NULL and are skipped
+    val objPrefixOf = new Dim(attrTypes.select(col("spec_id"),
+      when(col("attr_name") === "Item ID", lit("""{"iid": """"))
+        .when(col("attr_name") === "UUID", lit("""{"uuid": """"))
+        .when(col("attr_name") === "Text", lit("""{"text": """"))
+        .as("prefix")), "spec_id", "prefix")
+
     val poly = shapes
+      .filter(col("anno_uid").isNotNull)
+      .filter(categoryOf.contains(col("label_id")) && imageOf.contains(col("frame")))
       .withColumn("polygon",
         when(col("shape_type") === "rectangle", GeomFunctions.rectToPolygon(col("points")))
           .otherwise(col("points")))
@@ -42,9 +62,8 @@ object CvatTables {
       .drop("rc")
 
     val named = poly
-      .join(broadcast(labels), Seq("label_id"))
-      .join(broadcast(images), Seq("frame"))
-      .withColumn("stem", regexp_replace(col("image_name"), "\\.[^.]*$", ""))
+      .withColumn("category", categoryOf(col("label_id")))
+      .withColumn("stem", regexp_replace(imageOf(col("frame")), "\\.[^.]*$", ""))
       .withColumn("stem",
         // length = size(...), NOT Int.MaxValue: Slice's interpreted
         // eval computes start + length, which overflows Int.MaxValue to
@@ -61,41 +80,58 @@ object CvatTables {
       .withColumn("image_name_norm",
         regexp_replace(col("stem"), "\\.[Jj][Pp][Ee]?[Gg](\\.[Jj][Pp][Ee]?[Gg])?", ""))
 
-    // gt_attr: JSON array of typed attribute objects (ref :388-406).
-    // Values are JSON-escaped (backslash, quote, newline, tab) — this
-    // class exists to emit VALID JSON where the reference's iid branch
-    // was malformed, and a user-typed quote in a Text attribute would
-    // otherwise break the document the same way.
-    val escVal = regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-      col("attr.value"),
-      "\\\\", "\\\\\\\\"), "\"", "\\\\\""), "\n", "\\\\n"), "\t", "\\\\t")
-    val attrJson = named
-      .withColumn("attr", explode_outer(col("attributes")))
-      .join(broadcast(attrTypes), col("attr.spec_id") === attrTypes("spec_id"), "left")
-      .withColumn("attr_obj",
-        when(col("attr_name") === "Item ID",
-          concat(lit("""{"iid": """"), escVal, lit(""""}""")))
-        .when(col("attr_name") === "UUID",
-          concat(lit("""{"uuid": """"), escVal, lit(""""}""")))
-        .when(col("attr_name") === "Text",
-          concat(lit("""{"text": """"), escVal, lit(""""}"""))))
-      .groupBy("anno_uid")
-      .agg(concat(lit("["),
-        concat_ws(", ", sort_array(collect_list(struct(col("attr.spec_id").as("k"),
-          col("attr_obj").as("v")))).getField("v")),
-        lit("]")).as("gt_attr"))
+    // gt_attr: JSON array of typed attribute objects (ref :388-406),
+    // built per row: each attribute becomes (spec_id, object), sorted
+    // by that pair, and the objects are joined with ", " (NULL objects
+    // skipped); a NULL or empty `attributes` gives "[]". Values are
+    // JSON-escaped (backslash, quote, newline, tab) — this class exists
+    // to emit VALID JSON where the reference's iid branch was malformed,
+    // and a user-typed quote in a Text attribute would otherwise break
+    // the document the same way.
+    def escVal(v: Column) = regexp_replace(regexp_replace(regexp_replace(regexp_replace(
+      v, "\\\\", "\\\\\\\\"), "\"", "\\\\\""), "\n", "\\\\n"), "\t", "\\\\t")
+    val attrObjs = transform(col("attributes"), a => struct(a("spec_id").as("k"),
+      concat(objPrefixOf(a("spec_id")), escVal(a("value")), lit(""""}"""))
+        .as("v")))
+    val gtAttr = concat(lit("["),
+      coalesce(array_join(sort_array(attrObjs).getField("v"), ", "), lit("")), lit("]"))
 
-    named
-      .join(attrJson, Seq("anno_uid"))
-      .select(
-        lit(projectId).as("project_id"), lit(taskId).as("task_id"),
-        lit(jobId).as("job_id"), col("track_id"),
-        col("image_name_norm").as("image_name"), col("category"),
-        col("polygon").cast("array<float>").as("segmentation"),
-        col("rcoco").cast("array<float>").as("rcoco"),
-        col("coco").cast("array<float>").as("coco"),
-        col("gt_attr"),
-        current_timestamp().as("ts"))
+    named.select(
+      lit(projectId).as("project_id"), lit(taskId).as("task_id"),
+      lit(jobId).as("job_id"), col("track_id"),
+      col("image_name_norm").as("image_name"), col("category"),
+      col("polygon").cast("array<float>").as("segmentation"),
+      col("rcoco").cast("array<float>").as("rcoco"),
+      col("coco").cast("array<float>").as("coco"),
+      gtAttr.as("gt_attr"),
+      current_timestamp().as("ts"))
+  }
+
+  /** One dimension as a driver-side lookup: `dim`'s `key` → `value`
+    * pairs, collected once into a map literal. NULL keys are left out,
+    * as an equi-join never matches them; a repeated key fails, naming
+    * the column, rather than duplicating the rows that match it. */
+  private final class Dim(dim: DataFrame, key: String, value: String) {
+    private val kv = dim.select(key, value)
+    private val valueField = kv.schema(1)
+    private val map = {
+      val pairs = kv.collect().toSeq.filterNot(_.isNullAt(0)).map(r => r.get(0) -> r.get(1))
+      val keys = pairs.map(_._1)
+      keys.diff(keys.distinct).headOption.foreach { k =>
+        throw new IllegalArgumentException(
+          s"buildAnnoTable: $key $k appears more than once in its dimension")
+      }
+      ColumnBridge.column(Literal.create(pairs.toMap,
+        MapType(kv.schema(0).dataType, valueField.dataType, valueField.nullable)))
+    }
+
+    def contains(k: Column): Column = map_contains_key(map, k)
+
+    /** The value at `k`, as nullable as the dimension's column: callers
+      * look up only keys that [[contains]] admitted. */
+    def apply(k: Column): Column =
+      if (valueField.nullable) element_at(map, k)
+      else ColumnBridge.column(KnownNotNull(ColumnBridge.expression(element_at(map, k))))
   }
 
   /** create_image_feather core (ref :250-315): image bytes column +

@@ -45,7 +45,7 @@ object BucketStats {
     // the indexed column set is fixed at creation (a refresh carrying
     // different columns would union mismatched schemas silently)
     Snapshot.currentTag(spark, ixRoot).foreach { _ =>
-      val stored = Snapshot.read(spark, ixRoot).columns
+      val stored = Snapshot.readLocalized(spark, ixRoot).columns
         .filter(_.startsWith("min_")).map(_.stripPrefix("min_")).sorted.toSeq
       require(stored == cols.sorted,
         s"bucket-stats index at $ixRoot covers ${stored.mkString(",")} — " +
@@ -67,7 +67,7 @@ object BucketStats {
   /** The indexed columns the manifest at `ixRoot` carries. */
   private[lake] def indexedCols(spark: SparkSession,
                                 ixRoot: String): Seq[String] =
-    Snapshot.read(spark, ixRoot).columns
+    Snapshot.readLocalized(spark, ixRoot).columns
       .filter(_.startsWith("min_")).map(_.stripPrefix("min_")).toSeq
 
   /** The buckets whose resolved [min,max] intersects EVERY bound — a
@@ -77,7 +77,7 @@ object BucketStats {
   def prunedBuckets(spark: SparkSession, ixRoot: String,
                     bounds: Seq[(String, Option[Column], Option[Column])])
       : Seq[Int] =
-    Snapshot.read(spark, ixRoot)
+    Snapshot.readLocalized(spark, ixRoot)
       .filter(FileStats.boundsIntersect(bounds)) // one builder, two pruners
       .select("graft_bucket").collect().map(_.getInt(0)).toSeq
 
@@ -91,6 +91,6 @@ object BucketStats {
     val aggs = coalesce(sum(col("n_rows")), lit(0L)).as("n_rows") +:
       cols.flatMap(c => Seq(min(col(minName(c))).as(minName(c)),
         max(col(maxName(c))).as(maxName(c))))
-    Snapshot.read(spark, ixRoot).agg(aggs.head, aggs.tail: _*)
+    Snapshot.readLocalized(spark, ixRoot).agg(aggs.head, aggs.tail: _*)
   }
 }

@@ -12,9 +12,11 @@ import org.apache.spark.sql.types.StructType
   *
   * Spark 4 made `ExpressionUtils` `private[sql]`, so library code needs
   * this one-file subpackage shim — the same pattern Spark-ecosystem
-  * projects use for their own physical-plan glue. Everything else in this
-  * repo goes through the public Column/functions API (plus
-  * `StructType.asNullable`, also hidden).
+  * projects use for their own physical-plan glue. It also carries the
+  * ingest's dimension lookups: a map literal whose type is known only at
+  * run time (`typedLit` needs it at compile time) and `KnownNotNull`.
+  * Everything else in this repo goes through the public Column/functions
+  * API (plus `StructType.asNullable`, also hidden).
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -47,16 +47,16 @@ class RoutedReadJobsSpec extends SparkSpec {
     assert(jobs == 1, s"secondary-index readWhere submitted $jobs jobs")
   }
 
-  test("a zone-map readWhere submits its scan, the bucket-stats reads and one listing") {
+  test("a zone-map readWhere submits its scan and one listing") {
     val pred = col("score") >= 0.5 && col("score") < 0.5005
     val (rows, jobs) = steadyJobs(Routing.readWhere(spark, root, pred).collect())
     val want = BucketedUpsert.read(spark, root).filter(pred).count()
     assert(want > 0 && rows.length == want)
-    // besides the scan: BucketStats reads its index through Snapshot.read
-    // (two footer inferences and a collect), and every bucket spans the
-    // random scores' range, so all 64 dirs are admitted and Spark lists
-    // them with a parallel-listing job (more than 32 paths)
-    assert(jobs == 5, s"zone-map readWhere submitted $jobs jobs")
+    // the bucket-stats index is read through the localize memo (no job);
+    // besides the scan: every bucket spans the random scores' range, so
+    // all 64 dirs are admitted and Spark lists them with a
+    // parallel-listing job (more than 32 paths)
+    assert(jobs == 2, s"zone-map readWhere submitted $jobs jobs")
   }
 
   test("SQL over the registered view submits only its scan") {

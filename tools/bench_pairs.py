@@ -1,0 +1,121 @@
+#!/usr/bin/env python3
+"""Run the perfbench workload in two checkouts in alternating pairs and
+compare their end-to-end metrics.
+
+    python3 tools/bench_pairs.py <parent-checkout> <change-checkout> \\
+        --workload dataset_build --seeds 1-10 [--out pairs.jsonl] [--seconds 8]
+
+For each seed it runs `python3 perfbench/run.py --workload W --seed S
+--seconds 8` once in each checkout: odd seeds parent first, even seeds
+change first, so a drift of the machine over the series lands on both
+sides. Each result is appended to the JSONL file as it arrives, one line
+per run: {"workload", "seed", "side", "checkout", "result"} (result is
+null when the run printed no result line). `--report` only summarizes an
+existing JSONL file.
+
+The summary prints, for every end-to-end metric that BENCHMARK.json (in
+the change checkout) declares: each side's median and quartiles, the
+change/parent ratio of the medians, in how many seed pairs the change
+was better, and whether the median gap exceeds the parent's IQR. Then
+the `failed` operations and the runs without a result, per side.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+SIDES = ("parent", "change")
+
+
+def seed_list(spec):
+    seeds = []
+    for part in spec.split(","):
+        lo, _, hi = part.partition("-")
+        seeds.extend(range(int(lo), int(hi or lo) + 1))
+    return seeds
+
+
+def run_once(checkout, workload, seed, seconds):
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds)]
+    proc = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, text=True)
+    lines = [l for l in proc.stdout.splitlines() if l.strip()]
+    if proc.returncode != 0 or not lines:
+        return None
+    return json.loads(lines[-1])
+
+
+def quartiles(xs):
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, med, q3
+
+
+def summarize(records, workload, metrics):
+    by = {side: {} for side in SIDES}
+    for r in records:
+        if r["workload"] == workload:
+            by[r["side"]][r["seed"]] = r["result"]
+    print(f"== {workload}: {len(by['parent'])} parent / {len(by['change'])} change runs")
+    for m in metrics:
+        name, lower = m["name"], m.get("better", "lower") == "lower"
+        vals = {side: {s: res["metrics"][name]["value"] for s, res in by[side].items()
+                       if res and name in res["metrics"]} for side in SIDES}
+        if not vals["parent"] or not vals["change"]:
+            print(f"{name}: no data")
+            continue
+        (pq1, pm, pq3), (cq1, cm, cq3) = (quartiles(sorted(vals[s].values())) for s in SIDES)
+        pairs = sorted(set(vals["parent"]) & set(vals["change"]))
+        better = sum((vals["change"][s] < vals["parent"][s]) == lower
+                     and vals["change"][s] != vals["parent"][s] for s in pairs)
+        gap = (pm - cm) if lower else (cm - pm)
+        print(f"{name}: parent {pm:.4g} ({pq1:.4g}-{pq3:.4g})  change {cm:.4g} ({cq1:.4g}-{cq3:.4g})"
+              f"  ratio {cm / pm if pm else float('nan'):.3f}  better {better}/{len(pairs)}"
+              f"  gap>parent IQR {gap > pq3 - pq1}")
+    for side in SIDES:
+        runs = by[side].values()
+        failed = sum(res["failed"] for res in runs if res)
+        attempted = sum(res["attempted"] for res in runs if res)
+        missing = sum(res is None for res in runs)
+        print(f"{side}: failed {failed}/{attempted} attempted, {missing} runs without a result")
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("parent")
+    ap.add_argument("change")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", default="1-10")
+    ap.add_argument("--seconds", type=float, default=8)
+    ap.add_argument("--out", default="bench_pairs.jsonl")
+    ap.add_argument("--report", action="store_true", help="summarize --out without running")
+    a = ap.parse_args()
+    checkouts = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    with open(os.path.join(checkouts["change"], "BENCHMARK.json")) as fh:
+        metrics = json.load(fh)["end_to_end"]
+    names = [m["name"] for m in metrics]
+    if not a.report:
+        for seed in seed_list(a.seeds):
+            order = SIDES if seed % 2 else SIDES[::-1]
+            for side in order:
+                res = run_once(checkouts[side], a.workload, seed, a.seconds)
+                rec = {"workload": a.workload, "seed": seed, "side": side,
+                       "checkout": checkouts[side], "result": res}
+                with open(a.out, "a") as fh:
+                    fh.write(json.dumps(rec) + "\n")
+                print(f"seed {seed} {side}: "
+                      + ("no result" if res is None else
+                         " ".join(f"{n}={res['metrics'][n]['value']:.4g}" for n in names
+                                  if n in res["metrics"])),
+                      flush=True)
+    with open(a.out) as fh:
+        records = [json.loads(l) for l in fh if l.strip()]
+    summarize(records, a.workload, metrics)
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
