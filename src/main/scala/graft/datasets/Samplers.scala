@@ -9,18 +9,19 @@ import org.apache.spark.sql.DataFrame
   * :423-427), re-expressed with content-keyed md5 bucketing instead of
   * unseeded Python RNG (documented deviation: reproducible by design).
   *
-  * Scale shape: the key set is distinct image names (dimension-sized);
-  * routing is three broadcast semi-joins against labeled keys — never
-  * the reference's O(images × annos) loop.
+  * Scale shape: the split label is a pure function of the image name,
+  * so it is computed on the anno side; routing is one broadcast
+  * semi-join against the tag-filtered image names — no shuffle, and
+  * never the reference's O(images × annos) loop.
   */
 object Samplers {
 
   final case class Split(train: DataFrame, valSet: DataFrame, test: DataFrame)
 
-  /** Tag-skip filter (P5, ref filter_skip_tags :204-211) + distinct
-    * image names (A1, ref :191-202).
+  /** Tag-skip filter (P5, ref filter_skip_tags :204-211): the names of
+    * the images that carry none of `skipTags`, duplicates kept.
     */
-  def uniqueImageNames(images: DataFrame, skipTags: Seq[String]): DataFrame = {
+  private def keptImageNames(images: DataFrame, skipTags: Seq[String]): DataFrame = {
     val filtered =
       if (skipTags.isEmpty) images
       // coalesce: arrays_overlap returns NULL (not false) when the tags
@@ -30,21 +31,28 @@ object Samplers {
       // null elements)
       else images.filter(!coalesce(arrays_overlap(col("tags"),
         array(skipTags.map(lit): _*)), lit(false)))
-    filtered.select("image_name").distinct()
+    filtered.select("image_name")
   }
 
-  /** Annotations labeled with their image's split in ONE pass: a single
-    * broadcast join against the labeled key set. Images failing the tag
-    * skip are dropped (inner join), mirroring the reference's routing
-    * loop semantics.
+  /** Tag-skip filter + distinct image names (A1, ref :191-202). */
+  def uniqueImageNames(images: DataFrame, skipTags: Seq[String]): DataFrame =
+    keptImageNames(images, skipTags).distinct()
+
+  /** Annotations labeled with their image's split in ONE pass: the md5
+    * label depends only on `image_name`, so it is computed per anno row,
+    * and membership is a broadcast left-semi join against the kept
+    * image names. Annos on images failing the tag skip, on unknown
+    * images or with a NULL name are dropped, mirroring the reference's
+    * routing loop; a semi-join never duplicates a row, so duplicate
+    * image rows need no `distinct()` (and no shuffle). Output columns:
+    * `image_name`, the other anno columns in order, then `split`.
     */
   def labeledAnnos(annos: DataFrame, images: DataFrame, skipTags: Seq[String],
-                   valBuckets: Int, testBuckets: Int): DataFrame = {
-    val keys = uniqueImageNames(images, skipTags)
+                   valBuckets: Int, testBuckets: Int): DataFrame =
+    annos.join(broadcast(keptImageNames(images, skipTags)), Seq("image_name"), "left_semi")
+      .select(col("image_name") +: annos.columns.filter(_ != "image_name").map(col): _*)
       .withColumn("split",
         Portable.md5SplitLabel(col("image_name"), valBuckets, valBuckets + testBuckets))
-    annos.join(broadcast(keys), Seq("image_name"))
-  }
 
   /** image_sampler (ref :235-287): annotations routed to val/test/train
     * by their image's split. `valBuckets`/`testBuckets` are out of 4096

@@ -2,16 +2,21 @@ package graft.export
 
 import graft.operators.SeqIds
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 /** COCO exporter — Spark-native re-expression of
   * create_coco_from_feather.py:46-116 (S10, F-J2, A5, O3, J4/J5).
   *
-  * Annotation records are distributed. The bounded dims (the category
-  * vocabulary, and image ids below `graft.coco.imageBroadcastMaxRows`)
-  * are numbered on the driver from one collect; above that threshold
-  * image ids are distributed too. The single document is written from
-  * the driver (inherent to "one JSON file" output, ref :115-116).
+  * The bounded dims (the category vocabulary, and the image rows below
+  * `graft.coco.imageBroadcastMaxRows`) are numbered on the driver from
+  * one collect; above that threshold image ids are assigned distributed.
+  * The single document is written from the driver (inherent to "one
+  * JSON file" output, ref :115-116): the annotations are sorted once by
+  * their key and streamed, and, as in the reference (:97-106), each
+  * annotation's id is a driver counter over that stream and its image
+  * and category ids are driver lookups (the image lookup is a join in
+  * the distributed tier). [[annotationRecords]] returns the same
+  * records as a DataFrame, numbered by the distributed SeqIds pass.
   *
   * Deviations (documented): the reference assigns image/annotation ids in
   * pandas iteration order, which is nondeterministic across reruns; we
@@ -42,33 +47,30 @@ object Coco {
 
   /** What [[localDims]]'s one action gathered. `images` holds the
     * collected image rows (`image_name` then the requested columns) in
-    * image-id order, or None when the cap was hit; `categories` holds the
-    * vocabulary in category-id order (id = index + 1). `imgDim`/`catDim`
-    * are the same assignments as LocalRelations for the record joins.
+    * image-id order (id = index), or None when the cap was hit;
+    * `categories` holds the vocabulary in category-id order
+    * (id = index + 1).
     */
-  private final case class Dims(images: Option[Seq[Row]], categories: Seq[String],
-                                imgDim: Option[DataFrame], catDim: DataFrame)
+  private final case class Dims(images: Option[Seq[Row]], categories: Seq[String])
 
   /** ONE action serves the tier decision AND both exporter dims: the
     * image side (`image_name` plus `imageCols`) is collected
     * LIMIT-capped at `maxImages`+1 rows and unioned (tagged, the
     * category side padded with typed nulls) with the distinct category
     * vocabulary. If the cap was not hit, the image rows are complete
-    * and both dims come back as driver LocalRelations (broadcast tier);
-    * if it was, only the bounded category dim is built — the caller
-    * switches to the distributed image-id path. Either way the driver
-    * holds at most maxImages+1 image rows, and no separate probe job
-    * runs. Values are sorted with UTF-8 byte ordering (nulls FIRST —
-    * exactly Spark's ASC NULLS FIRST over UTF8String, so these ids agree
-    * with the SeqIds-based categoryDim/imageDim; Scala's `String.<`
-    * compares UTF-16 code units and would desync on U+E000..U+FFFF vs
-    * supplementary-plane names), zipped with their index, and returned
-    * as LocalRelations.
+    * (broadcast tier); if it was, only the bounded category vocabulary
+    * is kept — the caller switches to the distributed image-id path.
+    * Either way the driver holds at most maxImages+1 image rows, and no
+    * separate probe job runs. Values are sorted with UTF-8 byte ordering
+    * (nulls FIRST — exactly Spark's ASC NULLS FIRST over UTF8String, so
+    * these ids agree with the SeqIds-based categoryDim/imageDim; Scala's
+    * `String.<` compares UTF-16 code units and would desync on
+    * U+E000..U+FFFF vs supplementary-plane names).
     */
-  private def localDims(images: DataFrame, annos: DataFrame, maxImages: Long,
+  private def localDims(images: DataFrame, annos: DataFrame,
                         imageCols: Seq[String]): Dims = {
-    val spark = annos.sparkSession
-    import spark.implicits._
+    val maxImages = annos.sparkSession.conf
+      .get(ImageBroadcastMaxRowsKey, ImageBroadcastMaxRowsDefault.toString).toLong
     val cap = math.min(maxImages + 1, Int.MaxValue.toLong).toInt
     val pad = imageCols.map(c => lit(null).cast(images.schema(c).dataType).as(c))
     // the kind tag goes last, so an image row reads (image_name, imageCols...)
@@ -78,33 +80,31 @@ object Coco {
         .union(annos.select((col("category") +: pad) :+ lit(1).as("kind"): _*)
           .filter(col("category").isNotNull).distinct()) // same rule as categoryDim
         .collect().partition(_.getInt(imageCols.length + 1) == 0)
-    def name(r: Row) = if (r.isNullAt(0)) null else r.getString(0)
-    def dim(names: Seq[String], nameCol: String, idCol: String, startAt: Int) =
-      names.zipWithIndex.map { case (n, i) => (n, i + startAt) }.toDF(nameCol, idCol)
-    val imgSorted =
+    val dims = Dims(
       if (imgRows.length <= maxImages) Some(imgRows.sortBy(name)(utf8NullsFirst).toSeq)
-      else None
-    val categories = catRows.map(name).sorted(utf8NullsFirst).toSeq
-    Dims(imgSorted, categories,
-      imgSorted.map(rs => dim(rs.map(name), "image_name", "image_id", 0)),
-      dim(categories, "category", "category_id", 1))
+      else None,
+      catRows.map(name).sorted(utf8NullsFirst).toSeq)
+    lastImageDimWasLocalTL.set(dims.images.isDefined)
+    dims
   }
 
-  /** Session conf key: image-count threshold above which
-    * [[annotationRecords]] stops collecting/broadcasting the image
-    * dimension (localDims) and switches to distributed id assignment +
-    * shuffle join. The default (1M names) is comfortably inside the
-    * broadcast envelope (~50 MB of names); an annotated-image corpus at
-    * 100 TB scale crosses it and must never reach the driver.
+  private def name(r: Row): String = if (r.isNullAt(0)) null else r.getString(0)
+
+  /** Session conf key: image-count threshold above which the exporter
+    * stops collecting the image dimension (localDims) and switches to
+    * distributed id assignment + shuffle join. The default (1M names)
+    * is comfortably inside the broadcast envelope (~50 MB of names); an
+    * annotated-image corpus at 100 TB scale crosses it and must never
+    * reach the driver.
     */
   val ImageBroadcastMaxRowsKey = "graft.coco.imageBroadcastMaxRows"
   private val ImageBroadcastMaxRowsDefault = 1L << 20
 
-  /** Test observability hook: which image-dim tier the last
-    * [[annotationRecords]] call ON THIS THREAD took (true = driver
-    * localDims, false = distributed). Thread-local so concurrent
-    * exports in one JVM don't race each other's reads; read by
-    * PlanSpec/ExportSpec on the calling thread only.
+  /** Test observability hook: which image-dim tier the last export
+    * ([[annotationRecords]] or [[writeCocoTo]]) ON THIS THREAD took
+    * (true = driver localDims, false = distributed). Thread-local so
+    * concurrent exports in one JVM don't race each other's reads; read
+    * by PlanSpec/ExportSpec on the calling thread only.
     */
   private[graft] val lastImageDimWasLocalTL: ThreadLocal[Boolean] =
     ThreadLocal.withInitial(() => true)
@@ -123,6 +123,15 @@ object Coco {
     }
   }
 
+  /** COCO bbox: the rotated box `rcoco` for odtk, else the axis-aligned
+    * box recomputed from the segmentation (make_anno_d2). */
+  private def bboxCol(odtk: Boolean): Column =
+    if (odtk) col("rcoco")
+    else graft.functions.GeomFunctions.segmentation2bbox(col("segmentation"))
+
+  /** `area` is rcoco w*h in both variants (ref :21,40). */
+  private def areaCol: Column = col("rcoco")(2) * col("rcoco")(3)
+
   /** Annotation records (ref :97-106 + make_anno_odtk/make_anno_d2
     * :14-44): join image ids (J4) and category ids (J5, both broadcast —
     * true dimensions), assign sequential anno ids (O3) by `annoKeyCol`.
@@ -140,15 +149,7 @@ object Coco {
     * the name count only under the contract.
     */
   def annotationRecords(annos: DataFrame, images: DataFrame,
-                        annoKeyCol: String, odtk: Boolean = true): DataFrame =
-    records(annos, images, annoKeyCol, odtk, Nil)._1
-
-  /** [[annotationRecords]] plus the [[Dims]] its one dim collect
-    * gathered, with `imageCols` collected beside each image name so a
-    * caller can emit the images section without another action.
-    */
-  private def records(annos: DataFrame, images: DataFrame, annoKeyCol: String,
-                      odtk: Boolean, imageCols: Seq[String]): (DataFrame, Dims) = {
+                        annoKeyCol: String, odtk: Boolean = true): DataFrame = {
     // Two image-dim tiers, switched on a bounded row probe against
     // ImageBroadcastMaxRowsKey. Below the threshold the dims are
     // assigned on the driver (localDims): identical ids to
@@ -183,7 +184,7 @@ object Coco {
     val a = SeqIds.pin(annos)
     // One LIMIT-capped collect (localDims) serves the tier decision and
     // both dims — no separate probe job. The category dim MUST come
-    // from the same unfiltered distinct set cocoDocument's categories
+    // from the same unfiltered distinct set the document's categories
     // array uses (categoryDim over all annos): deriving it from the
     // image-filtered annos would shift the dense ids whenever a
     // category occurs only on unknown-image annos, and every
@@ -192,13 +193,15 @@ object Coco {
     // identical id semantics: only the bounded category vocabulary is
     // collected, and imageDim's SeqIds sort is the same UTF8String
     // ordering localDims replicates driver-side.
-    val maxLocal = annos.sparkSession.conf
-      .get(ImageBroadcastMaxRowsKey, ImageBroadcastMaxRowsDefault.toString).toLong
-    val dims = localDims(images, a, maxLocal, imageCols)
-    lastImageDimWasLocalTL.set(dims.imgDim.isDefined)
-    val imgDim = dims.imgDim.getOrElse(imageDim(images.select("image_name")))
+    val dims = localDims(images, a, Nil)
+    val spark = annos.sparkSession
+    import spark.implicits._
+    def dim(names: Seq[String], nameCol: String, idCol: String, startAt: Int) =
+      names.zipWithIndex.map { case (n, i) => (n, i + startAt) }.toDF(nameCol, idCol)
+    val local = dims.images.map(rs => dim(rs.map(name), "image_name", "image_id", 0))
+    val imgDim = local.getOrElse(imageDim(images.select("image_name")))
     def maybeBroadcast(df: DataFrame): DataFrame =
-      if (dims.imgDim.isDefined) broadcast(df) else df
+      if (local.isDefined) broadcast(df) else df
     val known = a
       .join(maybeBroadcast(imgDim.select("image_name")), Seq("image_name"), "left_semi")
       .filter(col("category").isNotNull)
@@ -206,21 +209,49 @@ object Coco {
     // the caller's key collides across categories
     val withIds = SeqIds.withSeqId(known, Seq(col(annoKeyCol), col("category")), "id")
     // In the distributed tier the image join is a shuffle join, so the
-    // returned row order is no longer the id order the broadcast tier
-    // preserves — callers needing id order sort explicitly
-    // (cocoDocument does).
-    val joined = withIds
+    // returned row order is not the id order the broadcast tier
+    // preserves — callers needing id order sort explicitly.
+    withIds
       .withColumn("id", col("id").cast("int"))
       .join(maybeBroadcast(imgDim), Seq("image_name"))
-      .join(broadcast(dims.catDim), Seq("category"))
-    val bbox =
-      if (odtk) col("rcoco")
-      else graft.functions.GeomFunctions.segmentation2bbox(col("segmentation"))
-    val frame = joined
+      .join(broadcast(dim(dims.categories, "category", "category_id", 1)), Seq("category"))
       .withColumn("iscrowd", lit(0))
-      .withColumn("bbox", bbox)
-      .withColumn("area", col("rcoco")(2) * col("rcoco")(3))
-    (frame, dims)
+      .withColumn("bbox", bboxCol(odtk))
+      .withColumn("area", areaCol)
+  }
+
+  /** The annotations section's rows in annotation-id order: annos with a
+    * category, sorted once by (`annoKeyCol`, category) — category breaks
+    * key ties, so the order is total even when the caller's key collides
+    * — each reading (image key, category, bbox JSON, area, segmentation
+    * JSON). The image key is `image_name` when `imgDim` is None (the
+    * broadcast tier: the writer looks the id up on the driver, so the
+    * query holds no join) and `image_id` from an inner join with
+    * `imgDim` otherwise.
+    *
+    * d2 always carries the raw polygon (ref :42); odtk eval exports
+    * carry the ROTATED-box polygon `rbox` (ref :26), train omits it. The
+    * train branch must not reference rbox at all (a Column-level when()
+    * would still analyze it): the reference exports training sets from
+    * frames that carry no rbox column.
+    */
+  private[graft] def annotationSection(annos: DataFrame, imgDim: Option[DataFrame],
+                                       annoKeyCol: String, train: Boolean,
+                                       odtk: Boolean): DataFrame = {
+    val (keyed, imageKey) = imgDim match {
+      case None => (annos, col("image_name"))
+      case Some(d) => (annos.join(d.select("image_name", "image_id"), Seq("image_name")),
+        col("image_id"))
+    }
+    val segCol =
+      if (!odtk) to_json(array(col("segmentation")))
+      else if (train) lit(null).cast("string")
+      else to_json(array(col("rbox")))
+    val key = Seq(col(annoKeyCol), col("category"))
+    keyed.filter(col("category").isNotNull)
+      .repartitionByRange(key: _*)
+      .sortWithinPartitions(key: _*)
+      .select(imageKey, col("category"), to_json(bboxCol(odtk)), areaCol, segCol)
   }
 
   /** Whole-document assembly (ref :46-116) STREAMED to `out`: the
@@ -229,18 +260,24 @@ object Coco {
     * any corpus-sized array — in memory. Rows are formatted and written
     * as they arrive — no per-section array, no whole-document string.
     *
-    * Section sources, per image-dim tier (see [[annotationRecords]]):
+    * Section sources, per image-dim tier (see [[localDims]]):
     *  - broadcast tier: the images and categories sections stream the
-    *    rows the records' one dim collect already brought to the driver
-    *    (at most `graft.coco.imageBroadcastMaxRows` image names, each
-    *    with its height and width — the bound the broadcast join pays
-    *    anyway), so neither section submits a job;
+    *    rows the one dim collect brought to the driver (at most
+    *    `graft.coco.imageBroadcastMaxRows` image names, each with its
+    *    height and width), so neither section submits a job;
     *  - distributed tier: the images section is fetched from the
     *    SeqIds-numbered image frame in ≤8 contiguous partition groups
     *    (`groupedRows`, one group held at a time, O(images/8) driver
-    *    memory); categories still stream from the collected vocabulary;
+    *    memory); the same frame is joined to the annos for their image
+    *    ids; categories still stream from the collected vocabulary;
     *  - both tiers: the annotations section is fetched the same way from
-    *    the id-ordered records frame, O(annotations/8) driver memory.
+    *    [[annotationSection]]'s one range sort, O(annotations/8) driver
+    *    memory. Each row's id is its position in that stream and its
+    *    category id a lookup in the collected vocabulary; in the
+    *    broadcast tier its image id is a lookup in the collected image
+    *    rows, and a row whose image_name is NULL or not among them is
+    *    skipped without consuming an id (the distributed tier's inner
+    *    join drops the same rows), so ids stay gapless.
     *
     * Info/license text is neutral placeholder, not the reference's
     * URLs.
@@ -249,21 +286,22 @@ object Coco {
                   annoKeyCol: String, train: Boolean = false,
                   odtk: Boolean = true): Unit = {
     // One pinned execution of the anno plan serves every action below:
-    // the records' dim collect and id pass, and in the distributed tier
-    // imageDim (an `images` derived from the same anno plan hits the
-    // cache via substitution; the records' internal pin of the
-    // already-persisted frame is a no-op). Unpersisted before returning
-    // — the streamed write completes in this method, so unlike
-    // annotationRecords no cache may outlive the call.
+    // the dim collect and the annotation sort (an `images` derived from
+    // the same anno plan hits the cache via substitution). Unpersisted
+    // before returning — the streamed write completes in this method, so
+    // unlike annotationRecords no cache may outlive the call.
     annos.persist()
-    // scoped registry cleanup: the withSeqId/pin frames minted INSIDE
-    // this call are fully consumed by the streamed write, so they are
-    // released on exit — a notebook caller looping exports must not
-    // accumulate pinned frames for the session lifetime (frames pinned
-    // BEFORE the call are untouched)
+    // scoped registry cleanup: the imageDim frame the distributed tier
+    // mints INSIDE this call is fully consumed by the streamed write, so
+    // it is released on exit — a notebook caller looping exports must
+    // not accumulate pinned frames for the session lifetime (frames
+    // pinned BEFORE the call are untouched)
     val regMark = SeqIds.mark()
     try {
-    val (recsBase, dims) = records(annos, images, annoKeyCol, odtk, Seq("height", "width"))
+    val dims = localDims(images, annos, Seq("height", "width"))
+    val imgDim =
+      if (dims.images.isDefined) None
+      else Some(imageDim(images.select("image_name", "height", "width")))
     val info = """{"description": "Dataset", "version": "1.0", "year": 2022}"""
     val licenses = """[{"id": 1, "name": "placeholder"}]"""
     out.write(s"""{"info": $info, "licenses": $licenses, "images": [""")
@@ -277,52 +315,35 @@ object Coco {
         out.write(fmt(a)); first = false
       }
     }
-    // Section streaming order comes FREE from the id-assignment pass:
-    // SeqIds.withSeqId leaves its output range-partitioned by the sort
-    // key with partition index = range order and ids ascending across
-    // partitions by construction, and the broadcast dim joins preserve
-    // both. groupedRows fetches it with zero exchange: one job per
-    // CONTIGUOUS partition-index group (≤8 — ExportExecCountSpec pins
-    // the bound independent of spark.sql.shuffle.partitions), one group
-    // held at a time.
+    // groupedRows streams a range-sorted frame with zero further
+    // exchange: one job per CONTIGUOUS partition-index group (≤8 —
+    // ExportExecCountSpec pins the bound independent of
+    // spark.sql.shuffle.partitions), one group held at a time.
     //
     // Both tiers yield (row, image_id) in image-id order, each row
     // reading (image_name, height, width, …); a collected row's id is
     // its index.
     val imageRows = dims.images match {
       case Some(rows) => rows.iterator.zipWithIndex
-      case None =>
-        groupedRows(imageDim(images)
-          .select("image_name", "height", "width", "image_id"), 8).map(r => (r, r.getInt(3)))
+      case None => groupedRows(imgDim.get.select("image_name", "height", "width", "image_id"), 8)
+        .map(r => (r, r.getInt(3)))
     }
     streamSection(imageRows) { case (r, id) =>
       s"""{"license": 1, "file_name": ${jstr(r.getString(0) + ".jpeg")}, "height": ${r.get(1)}, "width": ${r.get(2)}, "id": $id}"""
     }
     out.write("""], "annotations": [""")
-    // d2 always carries the raw polygon (ref :42); odtk eval exports
-    // carry the ROTATED-box polygon `rbox` (ref :26), train omits it.
-    // The train branch must not reference rbox at all (a Column-level
-    // when() would still analyze it): the reference exports training sets
-    // from frames that carry no rbox column.
-    val segCol =
-      if (!odtk) to_json(array(col("segmentation")))
-      else if (train) lit(null).cast("string")
-      else to_json(array(col("rbox")))
-    val recs = recsBase
-      .withColumn("seg_json", segCol)
-      .select(col("image_id"), col("id"), col("category_id"),
-              to_json(col("bbox")).as("bbox_json"), col("area"), col("seg_json"))
-    // Broadcast tier: the dim joins preserved the SeqIds id order, so
-    // the section streams with zero exchange. Distributed tier only
-    // (image dim attached via shuffle join, order destroyed):
-    // re-establish id order explicitly — the one case that genuinely
-    // needs the exchange.
-    val ordered =
-      if (dims.imgDim.isDefined) recs
-      else recs.repartitionByRange(8, col("id")).sortWithinPartitions("id")
-    streamSection(groupedRows(ordered, 8)) { r =>
-      val seg = Option(r.getString(5)).map(s => s""", "segmentation": $s""").getOrElse("")
-      s"""{"iscrowd": 0, "image_id": ${r.getInt(0)}, "bbox": ${r.getString(3)}, "category_id": ${r.getInt(2)}, "area": ${r.get(4)}, "id": ${r.getInt(1)}$seg}"""
+    val imageIdOf: Row => Option[Int] = dims.images match {
+      case Some(rows) =>
+        val ids = rows.iterator.map(name).zipWithIndex.filter(_._1 != null).toMap
+        r => if (r.isNullAt(0)) None else ids.get(r.getString(0))
+      case None => r => Some(r.getInt(0))
+    }
+    val categoryIds = dims.categories.iterator.zipWithIndex.map { case (c, i) => c -> (i + 1) }.toMap
+    val recs = groupedRows(annotationSection(annos, imgDim, annoKeyCol, train, odtk), 8)
+      .flatMap(r => imageIdOf(r).map(r -> _))
+    streamSection(recs.zipWithIndex) { case ((r, imageId), id) =>
+      val seg = Option(r.getString(4)).map(s => s""", "segmentation": $s""").getOrElse("")
+      s"""{"iscrowd": 0, "image_id": $imageId, "bbox": ${r.getString(2)}, "category_id": ${categoryIds(r.getString(1))}, "area": ${r.get(3)}, "id": $id$seg}"""
     }
     out.write("""], "categories": [""")
     streamSection(dims.categories.iterator.zipWithIndex) { case (c, i) =>

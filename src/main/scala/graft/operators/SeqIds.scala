@@ -130,7 +130,7 @@ object SeqIds {
     * caches, a pinned frame is safe to re-execute after release — it
     * simply recomputes. Used by operators whose plan would otherwise
     * execute an expensive upstream subplan several times per action
-    * (e.g. the COCO exporter's dim collects + id pass all share one
+    * (e.g. `Coco.annotationRecords`' dim collect and id pass share one
     * cached anno execution; Catalyst's cache substitution also rewrites
     * any sameResult subplan of OTHER frames to this InMemoryRelation,
     * so derived inputs built on the same plan hit it too).

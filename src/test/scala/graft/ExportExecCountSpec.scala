@@ -112,6 +112,30 @@ class ExportExecCountSpec extends SparkSpec {
     assert(jobs("records") > 0 && jobs("annotations") > 0, perSection.toString)
   }
 
+  test("broadcast tier: writeCocoTo pins no id frame and its annotation query joins nothing") {
+    // The annotation ids come from the stream position and the image and
+    // category ids from driver lookups, so the broadcast tier registers no
+    // SeqIds frame at any point of the write (the mark is read on every
+    // write() chunk, not only after the scoped release) and the
+    // annotation query carries no join.
+    val (_, annos, images) = spiedFrames("annoExecMark")
+    val before = SeqIds.mark()
+    val marks = scala.collection.mutable.Set.empty[(Int, Int, Int)]
+    val spy = new java.io.Writer() {
+      override def write(cbuf: Array[Char], off: Int, len: Int): Unit = marks += SeqIds.mark()
+      override def flush(): Unit = ()
+      override def close(): Unit = ()
+    }
+    Coco.writeCocoTo(spy, annos, images, "anno_key", train = true)
+    assert(Coco.lastImageDimWasLocal)
+    assert(marks == Set(before) && SeqIds.mark() == before,
+      s"the broadcast-tier write registered SeqIds frames: $before -> $marks")
+    val plan = Coco.annotationSection(annos, None, "anno_key", train = true, odtk = true)
+      .queryExecution.optimizedPlan
+    assert(plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isEmpty,
+      s"broadcast-tier annotation query holds a join:\n$plan")
+  }
+
   test("cocoDocument job count is bounded independent of shuffle partitions") {
     // The streamed sections fetch contiguous partition-index GROUPS
     // (Coco.groupedRows, ≤8 jobs per section, zero exchange), so the job
@@ -133,11 +157,12 @@ class ExportExecCountSpec extends SparkSpec {
       SeqIds.releaseAll()
       assert(doc.contains("\"annotations\""))
       awaitStable(jobs.get)
-      // measured 21 at 64 partitions (≤8 annotation-section fetches +
-      // the dim collect and the SeqIds range-sampling/count actions;
-      // the images and categories sections stream the collected dims);
-      // a section fetched one job per partition would pay 64 alone
-      assert(jobs.get <= 24,
+      // measured 8 at 64 partitions: the dim collect, the
+      // annotation sort's range sampling and shuffle, and its grouped
+      // fetches (the images and categories sections stream the collected
+      // dims, and no SeqIds pass runs); a section fetched one job per
+      // partition would pay 64 alone
+      assert(jobs.get <= 8,
         s"cocoDocument ran ${jobs.get} jobs at 64 shuffle partitions — " +
           "a streamed section is fetching one job per shuffle partition")
     } finally {

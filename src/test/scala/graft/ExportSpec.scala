@@ -84,6 +84,37 @@ class ExportSpec extends SparkSpec {
     }
   }
 
+  test("annos on unknown or NULL images take no id in either tier (gapless)") {
+    // in anno_key order, known-image annos interleave with annos on an
+    // image absent from `images` and annos with a NULL image_name: the
+    // broadcast tier skips those on the driver, the distributed tier's
+    // inner join drops them, and neither may leave a gap in the ids
+    val seg = Seq(0.0, 0.0, 2.0, 0.0, 2.0, 2.0, 0.0, 2.0)
+    val box = Seq(0.0, 0.0, 2.0, 2.0, 0.0)
+    val names = Seq("img_ghost", "img_a", null, "img_b", "img_ghost", "img_a", null)
+    val annos = names.zipWithIndex.map { case (n, i) => (n, "cat", i.toLong, seg, box) }
+      .toDF("image_name", "category", "anno_key", "segmentation", "rcoco")
+      .withColumn("rbox", col("segmentation"))
+    val small = Coco.cocoDocument(annos, imageFixture, "anno_key")
+    assert(Coco.lastImageDimWasLocal, "default threshold must take the broadcast tier")
+    graft.operators.SeqIds.releaseAll()
+    spark.conf.set(Coco.ImageBroadcastMaxRowsKey, "0")
+    try {
+      val big = Coco.cocoDocument(annos, imageFixture, "anno_key")
+      assert(!Coco.lastImageDimWasLocal, "threshold 0 must force the distributed tier")
+      assert(big == small, s"document diverges across image-dim tiers:\n$small\n$big")
+    } finally {
+      spark.conf.unset(Coco.ImageBroadcastMaxRowsKey)
+      graft.operators.SeqIds.releaseAll()
+    }
+    val recs = new ObjectMapper().readTree(small).get("annotations")
+    val got = (0 until recs.size()).map { i =>
+      (recs.get(i).get("id").asInt(), recs.get(i).get("image_id").asInt())
+    }
+    // anno_keys 1, 3, 5 on img_a (id 0), img_b (id 1), img_a
+    assert(got == Seq((0, 0), (1, 1), (2, 0)), s"ids not gapless from 0: $got")
+  }
+
   test("collected images section is byte-identical to the distributed one") {
     // The broadcast tier writes the images section from the rows its dim
     // collect brought to the driver; the distributed tier numbers them

@@ -33,6 +33,50 @@ class SamplersSpec extends SparkSpec {
     assert(va.toDouble / kept > 0.03 && va.toDouble / kept < 0.25)
   }
 
+  test("labeledAnnos equals the inner-join labeler, without a shuffle and with fewer jobs") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val images = (Seq(
+      ("img_1", Seq("night")), ("img_1", Seq("night")), // duplicate rows for one image
+      ("img_2", null.asInstanceOf[Seq[String]]),        // NULL tags column
+      ("img_3", Seq("ok", null)),                       // null tag element
+      ("img_4", Seq("badimage"))) ++
+      (5 until 40).map(i => (s"img_$i", Seq.empty[String])))
+      .toDF("image_name", "tags")
+    // image_name is not the first anno column, so the column order is pinned
+    val annos = ((0 until 200).map(i => (i.toLong, s"img_${i % 42}", s"cat_${i % 3}")) ++
+      Seq((900L, "img_unknown", "cat_0"), (901L, null.asInstanceOf[String], "cat_1")))
+      .toDF("anno_key", "image_name", "category")
+    // the labeler as an inner join against distinct labeled names
+    def reference(skipTags: Seq[String]): DataFrame =
+      annos.join(broadcast(Samplers.uniqueImageNames(images, skipTags)
+        .withColumn("split", graft.functions.Portable.md5SplitLabel(col("image_name"), 409, 819))),
+        Seq("image_name"))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for (skip <- Seq(Seq("badimage"), Nil)) {
+      val got = Samplers.labeledAnnos(annos, images, skip, 409, 410)
+      val ref = reference(skip)
+      assert(got.schema == ref.schema, s"${got.schema} vs ${ref.schema}")
+      assert(rows(got) == rows(ref), s"skip=$skip")
+    }
+    def shuffles(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case q: QueryStageExec => shuffles(q.plan)
+      case s: ShuffleExchangeExec => s +: s.children.flatMap(shuffles)
+      case other => other.children.flatMap(shuffles)
+    }
+    def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    val valSet = Samplers.imageSampler(annos, images, Seq("badimage"), 409, 410).valSet
+    assert(shuffles(valSet.queryExecution.executedPlan).isEmpty,
+      valSet.queryExecution.executedPlan.toString)
+    val refVal = reference(Seq("badimage")).filter(col("split") === "val").drop("split")
+    val (_, jobs) = jobsDuring(noop(valSet))
+    val (_, refJobs) = jobsDuring(noop(refVal))
+    assert(jobs < refJobs, s"$jobs jobs for one split's eval, $refJobs with the inner join")
+  }
+
   test("weightedSample draws k, deterministically, skewed to heavy weights, via top-k not global sort") {
     val df = (1 to 2000).map(i => (i.toLong, if (i <= 200) 100.0 else 1.0))
       .toDF("id", "w")

@@ -9,24 +9,32 @@ For each seed it runs `python3 perfbench/run.py --workload W --seed S
 --seconds 8` once in each checkout: odd seeds parent first, even seeds
 change first, so a drift of the machine over the series lands on both
 sides. Each result is appended to the JSONL file as it arrives, one line
-per run: {"workload", "seed", "side", "checkout", "result"} (result is
-null when the run printed no result line). `--report` only summarizes an
+per run: {"workload", "seed", "side", "checkout", "result", "summary"}
+(result is null when the run printed no result line; summary is the
+harness's `graftbench: setup ...` line from standard error, which holds
+each operation kind's median, or null). `--report` only summarizes an
 existing JSONL file.
 
 The summary prints, for every end-to-end metric that BENCHMARK.json (in
 the change checkout) declares: each side's median and quartiles, the
 change/parent ratio of the medians, in how many seed pairs the change
 was better, and whether the median gap exceeds the parent's IQR. Then
-the `failed` operations and the runs without a result, per side.
+each operation kind's median per side (the median over runs of each
+run's own median for that kind), and the `failed` operations and the
+runs without a result, per side.
 """
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
 
 SIDES = ("parent", "change")
+SUMMARY_PREFIX = "graftbench: setup "
+# one operation kind in the summary line: `read.export=7498ms(n=3)`
+KIND = re.compile(r"(\S+)=([0-9.]+)ms\(n=\d+\)")
 
 
 def seed_list(spec):
@@ -40,11 +48,19 @@ def seed_list(spec):
 def run_once(checkout, workload, seed, seconds):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds)]
-    proc = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, text=True)
+    proc = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
+                          stderr=subprocess.PIPE, text=True)
+    sys.stderr.write(proc.stderr)
+    summary = next((l.strip() for l in proc.stderr.splitlines()
+                    if l.startswith(SUMMARY_PREFIX)), None)
     lines = [l for l in proc.stdout.splitlines() if l.strip()]
     if proc.returncode != 0 or not lines:
-        return None
-    return json.loads(lines[-1])
+        return None, summary
+    return json.loads(lines[-1]), summary
+
+
+def kind_medians(summary):
+    return {k: float(v) for k, v in KIND.findall(summary or "")}
 
 
 def quartiles(xs):
@@ -56,9 +72,11 @@ def quartiles(xs):
 
 def summarize(records, workload, metrics):
     by = {side: {} for side in SIDES}
+    kinds = {side: {} for side in SIDES}
     for r in records:
         if r["workload"] == workload:
             by[r["side"]][r["seed"]] = r["result"]
+            kinds[r["side"]][r["seed"]] = kind_medians(r.get("summary"))
     print(f"== {workload}: {len(by['parent'])} parent / {len(by['change'])} change runs")
     for m in metrics:
         name, lower = m["name"], m.get("better", "lower") == "lower"
@@ -75,6 +93,11 @@ def summarize(records, workload, metrics):
         print(f"{name}: parent {pm:.4g} ({pq1:.4g}-{pq3:.4g})  change {cm:.4g} ({cq1:.4g}-{cq3:.4g})"
               f"  ratio {cm / pm if pm else float('nan'):.3f}  better {better}/{len(pairs)}"
               f"  gap>parent IQR {gap > pq3 - pq1}")
+    for kind in sorted({k for side in SIDES for ks in kinds[side].values() for k in ks}):
+        meds = {side: [ks[kind] for ks in kinds[side].values() if kind in ks] for side in SIDES}
+        print(f"kind {kind} (ms): " + "  ".join(
+            f"{side} {statistics.median(meds[side]):.0f} (n={len(meds[side])})" if meds[side]
+            else f"{side} no data" for side in SIDES))
     for side in SIDES:
         runs = by[side].values()
         failed = sum(res["failed"] for res in runs if res)
@@ -101,9 +124,9 @@ def main():
         for seed in seed_list(a.seeds):
             order = SIDES if seed % 2 else SIDES[::-1]
             for side in order:
-                res = run_once(checkouts[side], a.workload, seed, a.seconds)
+                res, summary = run_once(checkouts[side], a.workload, seed, a.seconds)
                 rec = {"workload": a.workload, "seed": seed, "side": side,
-                       "checkout": checkouts[side], "result": res}
+                       "checkout": checkouts[side], "result": res, "summary": summary}
                 with open(a.out, "a") as fh:
                     fh.write(json.dumps(rec) + "\n")
                 print(f"seed {seed} {side}: "
