@@ -1,8 +1,9 @@
 package graft.ext
 
-import graft.lake.BucketedUpsert
+import graft.lake.{BucketedUpsert, FileStats}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Persisted inverted index for BM25 retrieval — the index-maintenance
   * half of the `t_bm25_topk` ranking query. Without an index, every
@@ -28,7 +29,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale: ingest is one tokenize pass over the batch + touched-bucket
   * rewrites; query-side term filters push into the postings scan
-  * (tok IN (...) on a column the parquet reader sees), df is
+  * (tok IN (...) on a column the parquet reader sees). The search has
+  * two arms, chosen by input size. While both tables fit the localize
+  * bounds, one scan job collects the query terms' postings and the
+  * doc-stats rows and the driver ranks them, so a search costs one job
+  * however small the index. Past the bounds, df is
   * |query-vocabulary|-sized, corpus stats are a 1-row broadcast, and
   * the final top-k is TakeOrderedAndProject — exactly the proven
   * t_bm25_topk plan, minus the corpus re-tokenization.
@@ -312,25 +317,97 @@ object Bm25Index {
 
   /** BM25 top-k (k1=1.2, b=0.75) for `terms`, entirely from the stored
     * index — same scoring and 1e-6 pre-rank rounding as t_bm25_topk,
-    * so results are identical to scoring the corpus directly. */
+    * so results are identical to scoring the corpus directly: columns
+    * (doc_id, bm25), best first, ties by doc_id.
+    *
+    * When both index tables fit the localize bounds
+    * ([[graft.lake.FileStats.withinLocalizeBounds]]) the search is
+    * EAGER: it runs one scan job here, collecting the query terms'
+    * postings and the doc-stats rows, ranks them on the driver and
+    * returns the top k as a local relation. Past the bounds it returns
+    * the distributed plan, which runs at the caller's action. */
   def topK(spark: SparkSession, root: String, terms: Seq[String],
-           k: Int): DataFrame = {
-    val tf = graft.operators.SeqIds.pin(
-      BucketedUpsert.read(spark, postingsRoot(root))
-        .filter(col("tok").isin(terms: _*))
-        .select("tok", "doc_id", "dl", "tf"))
-    val dfreq = tf.groupBy("tok").agg(count(lit(1)).cast("double").as("df"))
-    val stats = BucketedUpsert.read(spark, docstatsRoot(root))
-      .agg(count(lit(1)).cast("double").as("n"), avg("dl").as("avgdl"))
-    tf.join(broadcast(dfreq), "tok")
-      .crossJoin(broadcast(stats))
-      .groupBy("doc_id")
-      .agg(round(sum(
-        log((col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)) *
-          col("tf") * lit(1.2 + 1.0) /
-          (col("tf") + lit(1.2) * (lit(1.0 - 0.75) + lit(0.75) * col("dl") / col("avgdl")))), 6)
-        .as("bm25"))
-      .orderBy(desc("bm25"), col("doc_id"))
+           k: Int): DataFrame =
+    topKBounded(spark, root, terms, k, FileStats.LocalizeMaxBytes)
+
+  /** [[topK]] with the driver arm's byte bound; 0 forces the
+    * distributed plan. */
+  private[graft] def topKBounded(spark: SparkSession, root: String,
+                                 terms: Seq[String], k: Int,
+                                 localMaxBytes: Long): DataFrame = {
+    val postings = BucketedUpsert.read(spark, postingsRoot(root))
+      .filter(col("tok").isin(terms: _*))
+      .select("tok", "doc_id", "dl", "tf")
+    val docstats = BucketedUpsert.read(spark, docstatsRoot(root))
+    val idKind = DriverRank.keyKind(postings.schema("doc_id").dataType)
+    val local = idKind.nonEmpty &&
+      Seq(postingsRoot(root), docstatsRoot(root)).forall(r =>
+        FileStats.withinLocalizeBounds(spark,
+          BucketedUpsert.dataDirs(spark, r), localMaxBytes))
+    if (local) rankOnDriver(spark, postings, docstats, idKind.get, k)
+    else {
+      val tf = graft.operators.SeqIds.pin(postings)
+      val dfreq = tf.groupBy("tok").agg(count(lit(1)).cast("double").as("df"))
+      val stats = docstats
+        .agg(count(lit(1)).cast("double").as("n"), avg("dl").as("avgdl"))
+      tf.join(broadcast(dfreq), "tok")
+        .crossJoin(broadcast(stats))
+        .groupBy("doc_id")
+        .agg(round(sum(
+          log((col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)) *
+            col("tf") * lit(K1 + 1.0) /
+            (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / col("avgdl")))), 6)
+          .as("bm25"))
+        .orderBy(desc("bm25"), col("doc_id"))
+        .limit(k)
+    }
+  }
+
+  /** BM25's term-frequency saturation (k1) and length normalization (b). */
+  private val K1 = 1.2
+  private val B = 0.75
+
+  /** The driver arm of [[topK]]: one job collects the term-filtered
+    * postings unioned with the doc-stats rows (marked by a NULL tok),
+    * then the distributed plan's arithmetic runs in Scala — the same
+    * expression tree in the same association, StrictMath.log as
+    * Spark's `log`, Spark's `/` and `round`. Only the order in which a
+    * document's per-term scores (and the corpus's `dl`s, all integral)
+    * are summed may differ from Spark's partial aggregates, which the
+    * 1e-6 rounding absorbs. */
+  private def rankOnDriver(spark: SparkSession, postings: DataFrame,
+                           docstats: DataFrame, idKind: DriverRank.KeyKind,
+                           k: Int): DataFrame = {
+    import DriverRank.{D, divide, times}
+    val rows = postings.union(docstats.select(lit(null).cast("string").as("tok"),
+        col("doc_id"), col("dl"), lit(null).cast("double").as("tf")))
+      .collect()
+    val (hits, stats) = rows.partition(!_.isNullAt(0))
+    val ansi = spark.sessionState.conf.ansiEnabled
+    def dbl(r: Row, i: Int): D = if (r.isNullAt(i)) null else r.getDouble(i)
+    val n = stats.length.toDouble
+    val dls = stats.filterNot(_.isNullAt(2)).map(_.getDouble(2))
+    val avgdl: D = if (dls.isEmpty) null else dls.sum / dls.length
+    val df = hits.groupBy(_.getString(0)).map { case (t, rs) => t -> rs.length.toDouble }
+    def score(r: Row): D = {
+      val (tf, dl, dfr) = (dbl(r, 3), dbl(r, 2), df(r.getString(0)))
+      val idf = DriverRank.log(divide((n - dfr) + 0.5, dfr + 0.5, ansi) + 1.0)
+      val norm = divide(times(B, dl), avgdl, ansi)
+      val denom: D = if (tf == null || norm == null) null
+        else tf + K1 * ((1.0 - B) + norm)
+      divide(times(times(idf, tf), K1 + 1.0), denom, ansi)
+    }
+    val ranked = hits.groupBy(_.get(1)).toSeq.map { case (id, rs) =>
+      val scores = rs.map(score).filter(_ != null)
+      (id, DriverRank.round(
+        if (scores.isEmpty) null else scores.map(_.doubleValue).sum, 6))
+    }.sortWith { case ((ia, a), (ib, b)) => DriverRank.before(idKind)(ia, a, ib, b) }
+    val schema = StructType(Seq(postings.schema("doc_id"),
+      StructField("bm25", DoubleType, nullable = true)))
+    // the limit keeps Spark's check on k: a negative k fails as it does
+    // in the distributed plan
+    spark.createDataFrame(java.util.Arrays.asList(
+      ranked.take(math.max(k, 0)).map { case (id, s) => Row(id, s) }: _*), schema)
       .limit(k)
   }
 }

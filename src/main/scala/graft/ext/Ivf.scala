@@ -1,12 +1,12 @@
 package graft.ext
 
-import graft.lake.{BucketedUpsert, Snapshot}
+import graft.lake.{BucketedUpsert, FileStats, Snapshot}
 import graft.operators.SeqIds
 import graft.plans.GraftFunctions
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** IVF (inverted-file) approximate nearest-neighbor search — the real
   * quantizer behind the scale path that `ann_ivf_bucketed` demonstrates
@@ -318,7 +318,10 @@ object Ivf {
   // then rewrites only the buckets it touches. That is the production
   // daily-ingest shape at 100 TB: index build is one corpus pass, a
   // day's append costs O(batch + touched buckets), search reads the
-  // stored assignment instead of recomputing it per query batch.
+  // stored assignment instead of recomputing it per query batch. While
+  // the corpus table fits the localize bounds, a search runs on the
+  // driver: the probes come from the localized centroids and one scan
+  // job reads only the probed cells' rows (see searchIndex).
   //
   // A re-train (new centroids) is a NEW index root by design:
   // centroids define what a cell id means, so mixing quantizer
@@ -486,15 +489,111 @@ object Ivf {
     BucketedUpsert.deleteKeys(spark, livePaths(spark, root)._2, "vec_id",
       vecIds, tag)
 
-  /** Search the persisted index as of its current published state. */
+  /** Search the persisted index as of its current published state:
+    * [[search]] over the live corpus and centroids, columns
+    * (qid, rank, vec_id, cos).
+    *
+    * When the query batch fits the localize byte bound by its plan
+    * statistics, the centroids are localized and the corpus table fits
+    * the localize bounds ([[graft.lake.FileStats.withinLocalizeBounds]]),
+    * the search is EAGER: it collects the queries (no job for a
+    * LocalRelation), picks each query's probes on the driver from the
+    * localized centroids, runs one scan job here for the corpus rows in
+    * the probed cells, ranks them on the driver and returns a local
+    * relation ordered by (qid, rank). Past the bounds it returns the
+    * distributed plan, which runs at the caller's action. */
   def searchIndex(spark: SparkSession, root: String, queries: DataFrame,
-                  topK: Int, nProbe: Int): DataFrame = {
+                  topK: Int, nProbe: Int): DataFrame =
+    searchIndexBounded(spark, root, queries, topK, nProbe, FileStats.LocalizeMaxBytes)
+
+  /** [[searchIndex]] with the driver arm's byte bound; 0 forces the
+    * distributed plan. */
+  private[graft] def searchIndexBounded(spark: SparkSession, root: String,
+                                        queries: DataFrame, topK: Int, nProbe: Int,
+                                        localMaxBytes: Long): DataFrame = {
     val (cent, corp) = livePaths(spark, root)
-    search(spark,
-      BucketedUpsert.read(spark, corp),
-      queries,
-      Snapshot.readLocalized(spark, cent),
-      topK, nProbe)
+    val corpus = BucketedUpsert.read(spark, corp)
+    val centroids = Snapshot.readLocalized(spark, cent)
+    searchOnDriver(spark, corp, corpus, queries, centroids, topK, nProbe, localMaxBytes)
+      .getOrElse(search(spark, corpus, queries, centroids, topK, nProbe))
+  }
+
+  /** The driver arm of [[searchIndex]], or None when its inputs do not
+    * fit it. The probe and hit windows of [[search]] run in Scala: the
+    * cosine through the shared [[graft.plans.VectorKernel]] and Spark's
+    * `/`, NaN first and NULL last in descending order, ties by cell and
+    * by vec_id, the self-match dropped, and every query row sharing a
+    * qid ranked in one window. */
+  private def searchOnDriver(spark: SparkSession, corp: String, corpus: DataFrame,
+                             queries: DataFrame, centroids: DataFrame, topK: Int,
+                             nProbe: Int, localMaxBytes: Long): Option[DataFrame] = {
+    import DriverRank.{divide, times}
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types._
+    def field(df: DataFrame, name: String) = df.schema.find(_.name == name)
+    val floats = (f: Option[StructField]) =>
+      f.exists(_.dataType.isInstanceOf[ArrayType]) &&
+        f.get.dataType.asInstanceOf[ArrayType].elementType == FloatType
+    val (qidF, vecIdF) = (field(queries, "qid"), field(corpus, "vec_id"))
+    val kind = for {
+      q <- qidF; v <- vecIdF
+      qk <- DriverRank.keyKind(q.dataType); vk <- DriverRank.keyKind(v.dataType)
+      if qk == vk
+    } yield qk
+    val cellKind = field(centroids, "cell").flatMap(f => DriverRank.keyKind(f.dataType))
+    val fits = kind.nonEmpty && cellKind.nonEmpty && floats(field(queries, "qemb")) &&
+      floats(field(corpus, "embedding")) && floats(field(centroids, "centroid")) &&
+      queries.queryExecution.optimizedPlan.stats.sizeInBytes <= localMaxBytes
+    val cents = if (fits) FileStats.localRows(centroids.select("cell", "centroid")) else None
+    if (cents.isEmpty ||
+        !FileStats.withinLocalizeBounds(spark, BucketedUpsert.dataDirs(spark, corp),
+          localMaxBytes)) return None
+
+    val ansi = spark.sessionState.conf.ansiEnabled
+    final class Vec(v: Any) {
+      val data: ArrayData = v match {
+        case null => null
+        case s: scala.collection.Seq[_] => new GenericArrayData(s.toArray[Any])
+      }
+      val ok = data != null && !graft.plans.VectorKernel.hasNullElem(data)
+      val norm: DriverRank.D = if (ok) graft.plans.VectorKernel.norm(data) else null
+      def cos(o: Vec): DriverRank.D = divide(
+        if (ok && o.ok) graft.plans.VectorKernel.dot(data, o.data) else null,
+        times(norm, o.norm), ansi)
+    }
+    val cellVecs = cents.get.map(r => (r.get(0), new Vec(r.get(1))))
+    val byQid = queries.select("qid", "qemb").collect()
+      .groupBy(r => Option(r.get(0))).toSeq
+      .sortWith((a, b) => DriverRank.compareKeys(kind.get)(a._1.orNull, b._1.orNull) < 0)
+    // each qid's probes: (query vector, cell), best nProbe of its rows × cells
+    val probes = byQid.map { case (qid, qs) =>
+      qid -> qs.toSeq.flatMap { r =>
+        val q = new Vec(r.get(1))
+        cellVecs.map { case (cell, c) => (q, cell, q.cos(c)) }
+      }.sortWith { case ((_, ca, a), (_, cb, b)) => DriverRank.before(cellKind.get)(ca, a, cb, b)
+      }.take(math.max(nProbe, 0)).map { case (q, cell, _) => (q, cell) }
+    }
+    val probed = probes.flatMap(_._2.map(_._2)).distinct
+    val inCell = corpus.filter(col("cell").isin(probed: _*))
+      .select("vec_id", "cell", "embedding").collect()
+      .groupBy(_.get(1)).map { case (cell, rs) =>
+        cell -> rs.toSeq.map(r => (r.get(0), new Vec(r.get(2)))) }
+    val rows = probes.flatMap {
+      case (None, _) => Nil // vec_id <> NULL is never true
+      case (Some(qid), ps) =>
+        ps.flatMap { case (q, cell) =>
+          inCell.getOrElse(cell, Nil).collect {
+            case (id, e) if id != null && !DriverRank.sameKey(kind.get)(id, qid) =>
+              (id, q.cos(e))
+          }
+        }.sortWith { case ((ia, a), (ib, b)) => DriverRank.before(kind.get)(ia, a, ib, b)
+        }.take(math.max(topK, 0)).zipWithIndex.map { case ((id, s), i) =>
+          Row(qid, i + 1, id, s)
+        }
+    }
+    val schema = StructType(Seq(qidF.get, StructField("rank", IntegerType, nullable = false),
+      vecIdF.get, StructField("cos", DoubleType, nullable = true)))
+    Some(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
   }
 
   // ------------------------------------------------------------------

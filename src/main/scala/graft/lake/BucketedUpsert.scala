@@ -465,6 +465,10 @@ object BucketedUpsert {
                               paths: Seq[String]): DataFrame =
     spark.read.schema(tableSchema(spark, root)).parquet(paths: _*)
 
+  /** The data dirs of the table's current manifest entries. */
+  private[graft] def dataDirs(spark: SparkSession, root: String): Seq[String] =
+    manifestEntries(spark, root).map(_.path)
+
   /** The current table contents (throws before the first publish). */
   def read(spark: SparkSession, root: String): DataFrame = {
     val entries = manifestEntries(spark, root)

@@ -278,8 +278,12 @@ object FileStats {
   // Safety: the memo key is the dir's LISTING (name, len, mtime of
   // every live parquet file), so any rewrite — even of a flat
   // non-pointer dir — misses the memo and re-reads.
+  // The same two bounds ([[withinLocalizeBounds]]) also pick the
+  // driver arm of the index searches (`Bm25Index.topK`,
+  // `Ivf.searchIndex`): a search whose tables fit them collects its
+  // inputs in one scan and ranks them on the driver.
 
-  private val LocalizeMaxBytes = 8L << 20
+  private[graft] val LocalizeMaxBytes = 8L << 20
   /** Row bound on localization (ADVICE r21, medium): compressed bytes
     * alone under-measure dictionary/delta-packed sidecars — a DV
     * sidecar can pack far more than the broadcast-regime row cap under
@@ -288,7 +292,7 @@ object FileStats {
     * tasks. Footer record counts are a driver-side metadata read; past
     * the bound the ordinary distributed read keeps every consumer's
     * scale story. */
-  private val LocalizeMaxRows = 1L << 20
+  private[graft] val LocalizeMaxRows = 1L << 20
   /** Total-row budget across the memo (ADVICE r21): entry count alone
     * let 4096 near-bound arrays accumulate. */
   private val LocalMemoRowBudget = 16L << 20
@@ -328,10 +332,10 @@ object FileStats {
     }
 
   /** Memo key of `dir` — the dir plus its live-file listing (name,
-    * len, mtime, content stamp) — with the listing's total bytes; None
-    * when the dir is missing or holds no live file. */
-  private def localKey(spark: SparkSession,
-                       dir: String): Option[(String, Long)] = {
+    * len, mtime, content stamp) — with the listed files; None when the
+    * dir is missing or holds no live file. */
+  private def localKey(spark: SparkSession, dir: String)
+      : Option[(String, Seq[org.apache.hadoop.fs.FileStatus])] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val listed =
@@ -341,8 +345,26 @@ object FileStats {
     else Some((dir + "|" + listed.map(s =>
         s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}:" +
           contentStamp(fs, s))
-      .sorted.mkString(","), listed.map(_.getLen).sum))
+      .sorted.mkString(","), listed))
   }
+
+  /** `true` when `files` hold at most `maxBytes` listed bytes and at
+    * most [[LocalizeMaxRows]] rows by their footers (opened only when
+    * the bytes fit). */
+  private def fitsBounds(spark: SparkSession,
+                         files: Seq[org.apache.hadoop.fs.FileStatus],
+                         maxBytes: Long): Boolean =
+    files.map(_.getLen).sum <= maxBytes &&
+      footerRows(spark, files) <= LocalizeMaxRows
+
+  /** `true` when the parquet dirs `dirs` TOGETHER fit the localize
+    * bounds — the test [[localizedRows]] applies to one dir, made from
+    * one listing of each dir and its footers, with no Spark job.
+    * `maxBytes` is the byte bound: [[LocalizeMaxBytes]], or lower in
+    * tests (0 fails every non-empty dir). */
+  private[graft] def withinLocalizeBounds(spark: SparkSession, dirs: Seq[String],
+                                          maxBytes: Long): Boolean =
+    fitsBounds(spark, listDirs(spark, dirs), maxBytes)
 
   private def remember(key: String,
                        schema: org.apache.spark.sql.types.StructType,
@@ -362,12 +384,11 @@ object FileStats {
   private[lake] def localizedRows(spark: SparkSession, dir: String)
       : Option[(org.apache.spark.sql.types.StructType,
                 Array[org.apache.spark.sql.Row])] = {
-    val (key, bytes) = localKey(spark, dir).getOrElse(return None)
+    val (key, listed) = localKey(spark, dir).getOrElse(return None)
     if (localTooBig.contains(key)) return None
     val hit = localMemo.get(key)
     if (hit != null) return Some(hit)
-    if (bytes > LocalizeMaxBytes ||
-        footerRowCount(spark, Seq(dir)) > LocalizeMaxRows) {
+    if (!fitsBounds(spark, listed, LocalizeMaxBytes)) {
       localTooBig.add(key)
       return None
     }
@@ -394,6 +415,22 @@ object FileStats {
       case None => spark.read.parquet(dir)
     }
 
+  /** The rows of `df` when it is driver-resident — a LocalRelation, or
+    * one under a repartition such as a caller's `coalesce(1)` — read
+    * without a Spark job; None for any other plan. */
+  private[graft] def localRows(df: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => Some(df.collect()) // LocalTableScan: no job
+      case Repartition(_, _, lr: LocalRelation) =>
+        // collecting through the repartition would run a job
+        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(lr.schema)
+        Some(lr.data.map(toRow(_).asInstanceOf[org.apache.spark.sql.Row]).toArray)
+      case _ => None
+    }
+  }
+
   /** `df.distinct()` with a driver-side fast path (r21): when `df` is
     * already a localized LocalRelation, dedupe the rows in Scala and
     * return a new LocalRelation — `.distinct()` over a LocalRelation
@@ -401,31 +438,29 @@ object FileStats {
     * [[deltaOf]]'s pure-driver classification. Distributed frames
     * keep the ordinary distinct. */
   private[lake] def localDistinct(df: DataFrame): DataFrame =
-    df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        val rows = df.collect().distinct // LocalTableScan: no job
-        df.sparkSession.createDataFrame(
-          java.util.Arrays.asList(rows: _*), df.schema)
-      case _ => df.distinct()
-    }
+    localRows(df).fold(df.distinct())(rows =>
+      df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows.distinct: _*), df.schema))
 
   /** `df.count()` with a driver-side fast path for localized
     * LocalRelations (a count() plans an Aggregate — a Spark job even
     * over driver-resident rows). */
   private[lake] def localCount(df: DataFrame): Long =
-    df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        df.collect().length.toLong // LocalTableScan: no job
-      case _ => df.count()
-    }
+    localRows(df).fold(df.count())(_.length.toLong)
 
   /** Exact row count of complete parquet dirs (or files) from their
     * FOOTERS — a driver-side metadata read replacing a `df.count()`
     * job wherever every row of every file counts (no filter/mask). */
   private[lake] def footerRowCount(spark: SparkSession,
-                                   dirs: Seq[String]): Long = {
+                                   dirs: Seq[String]): Long =
+    footerRows(spark, listDirs(spark, dirs))
+
+  /** The live files of `dirs` (a path naming a file is itself); a
+    * missing path contributes nothing. */
+  private def listDirs(spark: SparkSession, dirs: Seq[String])
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val files = dirs.flatMap { d =>
+    dirs.flatMap { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       val fs = p.getFileSystem(conf)
       if (!fs.exists(p)) Seq.empty[org.apache.hadoop.fs.FileStatus]
@@ -435,6 +470,12 @@ object FileStats {
         else liveFiles(fs, p)
       }
     }
+  }
+
+  /** Σ footer record counts of `files`. */
+  private def footerRows(spark: SparkSession,
+                         files: Seq[org.apache.hadoop.fs.FileStatus]): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
     // footer opens in parallel on the shared pool: one footer per file
     // is metadata-priced but not free serially — a 16-bucket rewrite
     // counts 32 dirs' footers per delete batch

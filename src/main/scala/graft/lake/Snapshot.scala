@@ -124,22 +124,20 @@ object Snapshot {
     */
   def publish(df: DataFrame, root: String, tag: Long, keep: Int = 2): Unit =
     publishWith(df.sparkSession, root, tag, keep) { dir =>
-      // driver-resident metadata frames (a LocalRelation of plain
-      // primitives) write WITHOUT a Spark job (r21 — see
-      // [[LocalParquet]]); data-sized or complex frames keep the
-      // ordinary distributed write
-      val localRows = df.queryExecution.optimizedPlan match {
-        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-            if LocalParquet.supported(df.schema) &&
-              lr.data.length <= 10000 =>
-          Some(df.collect().toSeq) // LocalTableScan executeCollect: no job
-        case _ => None
-      }
+      // driver-resident frames (a LocalRelation, possibly under the
+      // caller's coalesce(1)) seed the localize memo with their rows,
+      // under the schema a cold read reports, so the first read of the
+      // new snapshot pays no job; plain-primitive ones also write
+      // WITHOUT a Spark job (r21 — see [[LocalParquet]]). Data-sized or
+      // distributed frames keep the ordinary distributed write.
+      val localRows = FileStats.localRows(df).filter(_.length <= 10000)
       localRows match {
-        case Some(rows) =>
-          LocalParquet.overwrite(df.sparkSession, dir, df.schema, rows)
-        case None => df.write.mode("overwrite").parquet(dir)
+        case Some(rows) if LocalParquet.supported(df.schema) =>
+          LocalParquet.overwrite(df.sparkSession, dir, df.schema, rows.toSeq)
+        case _ => df.write.mode("overwrite").parquet(dir)
       }
+      localRows.foreach(rows => FileStats.seedLocalized(df.sparkSession, dir,
+        org.apache.spark.sql.graft.ColumnBridge.asNullable(df.schema), rows.toSeq))
     }
 
   /** [[publish]] for rows already on the driver — writes the snapshot

@@ -25,6 +25,27 @@ private object VectorExpressions {
     case _ => false
   }
 
+  /** Codegen twin of [[VectorKernel.hasNullElem]]: sets `bad` (a fresh
+    * boolean). */
+  def genNullElemScan(ctx: CodegenContext, v: String, bad: String): String = {
+    val i = ctx.freshName("nes")
+    s"""
+       |boolean $bad = false;
+       |for (int $i = 0; $i < $v.numElements(); $i++) {
+       |  if ($v.isNullAt($i)) { $bad = true; break; }
+       |}
+     """.stripMargin
+  }
+}
+
+/** The scalar dot/norm kernel behind `graft_dot` and `graft_norm`'s
+  * interpreted eval and the driver-side IVF ranker
+  * ([[graft.ext.Ivf.searchIndex]]), so a vector scored on the driver
+  * gets the same bits as one scored in a task. The codegen templates in
+  * [[DotProductF]] and [[NormF]] emit the same loops.
+  */
+object VectorKernel {
+
   /** NULL array elements make the whole result NULL — the same policy
     * GeomKernels.hasNullElem establishes, for the same reason: getFloat
     * on a null slot reads 0.0, which would be SILENTLY wrong math. */
@@ -35,15 +56,23 @@ private object VectorExpressions {
     false
   }
 
-  /** Codegen twin of [[hasNullElem]]: sets `bad` (a fresh boolean). */
-  def genNullElemScan(ctx: CodegenContext, v: String, bad: String): String = {
-    val i = ctx.freshName("nes")
-    s"""
-       |boolean $bad = false;
-       |for (int $i = 0; $i < $v.numElements(); $i++) {
-       |  if ($v.isNullAt($i)) { $bad = true; break; }
-       |}
-     """.stripMargin
+  /** Σ x(i)·y(i) over the shorter length, double accumulation in index
+    * order. Neither side may hold a NULL element. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
+    s
+  }
+
+  /** sqrt(Σ x(i)²), double accumulation. `x` may not hold a NULL element. */
+  def norm(x: ArrayData): Double = {
+    var s = 0.0
+    var i = 0
+    val n = x.numElements()
+    while (i < n) { val v = x.getFloat(i).toDouble; s += v * v; i += 1 }
+    math.sqrt(s)
   }
 }
 
@@ -167,13 +196,8 @@ case class DotProductF(left: Expression, right: Expression)
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    if (VectorExpressions.hasNullElem(x) || VectorExpressions.hasNullElem(y))
-      return null
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
-    s
+    if (VectorKernel.hasNullElem(x) || VectorKernel.hasNullElem(y)) null
+    else VectorKernel.dot(x, y)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -220,12 +244,7 @@ case class NormF(child: Expression)
 
   override protected def nullSafeEval(a: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
-    if (VectorExpressions.hasNullElem(x)) return null
-    var s = 0.0
-    var i = 0
-    val n = x.numElements()
-    while (i < n) { val v = x.getFloat(i).toDouble; s += v * v; i += 1 }
-    math.sqrt(s)
+    if (VectorKernel.hasNullElem(x)) null else VectorKernel.norm(x)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -314,7 +333,7 @@ case class NearestCellF(first: Expression, second: Expression, third: Expression
 
   override protected def nullSafeEval(v: Any, c: Any, ids: Any): Any = {
     val x = v.asInstanceOf[ArrayData]
-    if (VectorExpressions.hasNullElem(x)) null
+    if (VectorKernel.hasNullElem(x)) null
     else NearestCellKernel.eval(x, model.mats, model.norms, model.ids)
   }
 
@@ -368,7 +387,7 @@ case class NearestCellBcastF(child: Expression, bc: Broadcast[NearestCellModel])
 
   override protected def nullSafeEval(v: Any): Any = {
     val x = v.asInstanceOf[ArrayData]
-    if (VectorExpressions.hasNullElem(x)) return null
+    if (VectorKernel.hasNullElem(x)) return null
     val m = bc.value
     NearestCellKernel.eval(x, m.mats, m.norms, m.ids)
   }

@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.StructType
   * ingest's dimension lookups: a map literal whose type is known only at
   * run time (`typedLit` needs it at compile time) and `KnownNotNull`.
   * Everything else in this repo goes through the public Column/functions
-  * API (plus `StructType.asNullable`, also hidden).
+  * API (plus `StructType.asNullable` and Spark's divide-by-zero error,
+  * also hidden).
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -24,4 +25,8 @@ object ColumnBridge {
   /** `s` with every field and nested element nullable — the schema a
     * parquet read reports for files written from `s` (`private[spark]`). */
   def asNullable(s: StructType): StructType = s.asNullable
+  /** The error Spark's `/` raises on a zero divisor under ANSI mode, for
+    * driver-side code that evaluates a `/` the same way. */
+  def divideByZero(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
 }

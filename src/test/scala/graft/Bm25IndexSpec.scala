@@ -40,10 +40,9 @@ class Bm25IndexSpec extends SparkSpec {
     Bm25Index.append(spark, root, docs.filter(col("doc_id") % 3 === 0), tag = 2)
 
     val terms = Seq("the", "data")
-    // the topK plan pins (caches) the filtered postings frame, which
-    // hides the parquet scan behind InMemoryTableScan in the OUTER
-    // plan — so assert pushdown on the same filtered read the cache
-    // materializes from
+    // topK collects on the driver (its driver arm) or pins the filtered
+    // postings frame (its distributed arm), so neither plan shows the
+    // parquet scan — assert pushdown on the filtered read both start from
     val filteredRead = BucketedUpsert.read(spark, s"$root/postings")
       .filter(col("tok").isin(terms: _*))
       .select("tok", "doc_id", "dl", "tf")
@@ -308,5 +307,71 @@ class Bm25IndexSpec extends SparkSpec {
       .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
     assert(score(root) == score(batchRoot),
       "the healed stream must equal the batch lifecycle's index")
+  }
+
+  // ---- the driver arm of topK against the distributed plan (bound 0)
+
+  /** topK's driver arm, checked to be a local relation. */
+  private def driverTopK(root: String, terms: Seq[String], k: Int) = {
+    val df = Bm25Index.topK(spark, root, terms, k)
+    assert(df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "an index inside the localize bounds must take the driver arm")
+    df
+  }
+
+  /** Both arms return the same rows, in the same order, under the same
+    * schema; the rows. */
+  private def sameArms(root: String, terms: Seq[String], k: Int) = {
+    val m = graft.operators.SeqIds.mark()
+    try {
+      val dist = Bm25Index.topKBounded(spark, root, terms, k, localMaxBytes = 0L)
+      val local = driverTopK(root, terms, k)
+      assert(local.schema == dist.schema)
+      val (a, b) = (local.collect().toSeq, dist.collect().toSeq)
+      assert(a == b, s"driver arm $a != distributed $b")
+      a
+    } finally graft.operators.SeqIds.releaseSince(m)
+  }
+
+  test("topK's driver arm equals the distributed plan: terms, k and deletes") {
+    val root = tmp()
+    Bm25Index.build(spark, root, docs.filter(col("doc_id") % 3 =!= 0),
+      nBuckets = 8, tag = 1)
+    Bm25Index.append(spark, root, docs.filter(col("doc_id") % 3 === 0), tag = 2)
+    val terms = Seq("dup", "spark", "merge", "the", "zzz-absent-term")
+    val all = sameArms(root, terms, 10000)
+    assert(all.nonEmpty && all.length < 10000, "k above the hit count")
+    assert(sameArms(root, terms, 5) == all.take(5))
+    assert(sameArms(root, terms, 0).isEmpty)
+    assert(sameArms(root, Nil, 10).isEmpty)
+    assert(sameArms(root, Seq("zzz-absent-term"), 10).isEmpty)
+    Bm25Index.deleteDocs(spark, root, docs.filter(col("doc_id") % 7 === 3), tag = 3)
+    val after = sameArms(root, terms, 10000)
+    assert(after.nonEmpty && after.forall(_.getLong(0) % 7 != 3))
+  }
+
+  test("topK's driver arm breaks score ties by doc_id and fails a negative k as Spark does") {
+    import spark.implicits._
+    val root = tmp()
+    // docs 9, 4 and 2 share one text, so they tie; 7 scores apart
+    Bm25Index.build(spark, root, Seq((9L, "a b"), (4L, "a b"), (7L, "a c c"),
+      (2L, "a b"), (5L, "c d")).toDF("doc_id", "text"), nBuckets = 2, tag = 1)
+    val rows = sameArms(root, Seq("a", "b"), 10)
+    assert(rows.map(_.getLong(0)) == Seq(2L, 4L, 9L, 7L))
+    assert(rows.take(3).map(_.getDouble(1)).distinct.length == 1)
+    def failure(df: => org.apache.spark.sql.DataFrame) = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](df.collect())
+      (e.getClass, e.getCondition)
+    }
+    val m = graft.operators.SeqIds.mark()
+    try assert(failure(Bm25Index.topK(spark, root, Seq("a"), -1)) ==
+      failure(Bm25Index.topKBounded(spark, root, Seq("a"), -1, localMaxBytes = 0L)))
+    finally graft.operators.SeqIds.releaseSince(m)
+  }
+
+  test("topK's arms agree on the t_bm25_indexed fixture's own query") {
+    val root = graft.queries.Fixtures.bm25(spark, sf())
+    assert(sameArms(root, Seq("dup", "spark", "merge"), 25).nonEmpty)
   }
 }

@@ -188,4 +188,111 @@ class IvfIndexSpec extends SparkSpec {
         says(t.getCause, w))
     assert(says(ex, "retrain"), s"must name the retrain hazard: ${ex.getMessage}")
   }
+
+  // ---- the driver arm of searchIndex against the distributed plan (bound 0)
+
+  /** Both arms of `searchIndex` for `q`: the same rows in the same
+    * order under the same schema, or the same failure; the rows. */
+  private def sameArms(root: String, q: org.apache.spark.sql.DataFrame,
+                       topK: Int = 3, nProbe: Int = 2): Seq[org.apache.spark.sql.Row] = {
+    def run(bound: Long) = scala.util.Try {
+      val df = Ivf.searchIndexBounded(spark, root, q, topK, nProbe, bound)
+      (df.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+        df.schema, df.collect().toSeq)
+    }
+    (run(graft.lake.FileStats.LocalizeMaxBytes), run(0L)) match {
+      case (scala.util.Success((local, ls, a)), scala.util.Success((dist, ds, b))) =>
+        assert(local && !dist, "only the bounded call may take the driver arm")
+        assert(ls == ds)
+        assert(a == b, s"driver arm $a != distributed $b")
+        a
+      case (scala.util.Failure(x: org.apache.spark.SparkThrowable),
+            scala.util.Failure(y: org.apache.spark.SparkThrowable)) =>
+        assert(x.getClass == y.getClass && x.getCondition == y.getCondition,
+          s"driver arm failed with $x, distributed with $y")
+        Nil
+      case (a, b) => fail(s"driver arm $a, distributed $b")
+    }
+  }
+
+  private def vecQueries(qs: (Long, Seq[java.lang.Float])*) = {
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(java.util.Arrays.asList(
+      qs.map { case (id, v) => org.apache.spark.sql.Row(id, v) }: _*),
+      StructType(Seq(StructField("qid", LongType, nullable = false),
+        StructField("qemb", ArrayType(FloatType)))))
+  }
+
+  /** The embedding of `vecId`, with elements changed by `edit`. */
+  private def vecOf(vecId: Long, edit: Seq[java.lang.Float] => Seq[java.lang.Float] = identity) =
+    edit(emb.filter(col("vec_id") === vecId).head().getSeq[Float](1)
+      .map(x => java.lang.Float.valueOf(x)))
+
+  private lazy val built = {
+    val root = tmp()
+    Ivf.buildIndex(spark, root, emb.filter(col("vec_id") % 4 =!= 0), k = 4,
+      nBuckets = 8, tag = 1)
+    Ivf.appendToIndex(spark, root, emb.filter(col("vec_id") % 4 === 0), tag = 2)
+    root
+  }
+
+  test("searchIndex's driver arm equals the distributed plan: self-match, topK, probes") {
+    val q = emb.filter(col("vec_id") % 25 === 0).limit(8)
+      .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
+    val rows = sameArms(built, q)
+    assert(rows.nonEmpty && rows.forall(r => r.getLong(0) != r.getLong(2)),
+      "a query's own vector is never its neighbor")
+    val wide = sameArms(built, q, topK = 100000, nProbe = 100)
+    assert(wide.length < 8 * 100000, "topK above the candidate count")
+    assert(sameArms(built, q, topK = 0).isEmpty)
+    assert(sameArms(built, q, topK = -1).isEmpty)
+    assert(sameArms(built, q, nProbe = 0).isEmpty)
+  }
+
+  test("searchIndex's driver arm orders NaN and NULL scores and zero queries as Spark does") {
+    val ids = emb.select("vec_id").orderBy("vec_id").limit(3).collect().map(_.getLong(0))
+    val nanQ = vecOf(ids(0), v => java.lang.Float.valueOf(Float.NaN) +: v.tail)
+    val nullQ = vecOf(ids(1), v => null +: v.tail)
+    val rows = sameArms(built, vecQueries((-1L, nanQ), (-2L, nullQ), (-3L, vecOf(ids(2)))))
+    assert(rows.exists(r => r.getLong(0) == -1L && r.getDouble(3).isNaN))
+    assert(rows.exists(r => r.getLong(0) == -2L && r.isNullAt(3)))
+    // a zero query divides by a zero norm: the DIVIDE_BY_ZERO error in
+    // both arms under ANSI mode, NULL scores in both without it
+    val zero = vecQueries((-4L, vecOf(ids(0), _.map(_ => java.lang.Float.valueOf(0f)))))
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    assert(ansi != "true" || sameArms(built, zero).isEmpty)
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try assert(sameArms(built, zero).forall(_.isNullAt(3)))
+    finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
+  test("searchIndex's driver arm ranks a duplicated qid as one window") {
+    val ids = emb.select("vec_id").orderBy("vec_id").limit(2).collect().map(_.getLong(0))
+    val rows = sameArms(built, vecQueries((-7L, vecOf(ids(0))), (-7L, vecOf(ids(0))),
+      (-8L, vecOf(ids(0))), (-8L, vecOf(ids(1)))), topK = 6)
+    assert(rows.count(_.getLong(0) == -7L) == 6)
+  }
+
+  test("searchIndex's arms agree after deletes and through a retrain's generation pointer") {
+    val root = tmp()
+    Ivf.buildIndex(spark, root, emb, k = 4, nBuckets = 8, tag = 1)
+    Ivf.deleteFromIndex(spark, root, emb.filter(col("vec_id") % 9 === 2).select("vec_id"),
+      tag = 2)
+    val q = emb.filter(col("vec_id") % 25 === 0).limit(8)
+      .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
+    assert(sameArms(root, q).forall(_.getLong(2) % 9 != 2))
+    Ivf.retrainIndex(spark, root, k = 6, tag = 3)
+    assert(Ivf.livePaths(spark, root)._2.contains("/g3/"))
+    assert(sameArms(root, q).nonEmpty)
+  }
+
+  test("searchIndex's arms agree on the ann_ivf_persist fixture's own queries") {
+    val d = sf()
+    val q = graft.Tables.t(spark, d, "embeddings")
+      .filter(col("vec_id") % 50 === 0).orderBy("vec_id")
+      .limit(graft.queries.SimQueries.MaxQueries)
+      .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
+    assert(sameArms(graft.queries.Fixtures.ivf(spark, d), q).nonEmpty)
+  }
 }

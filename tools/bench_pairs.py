@@ -18,10 +18,11 @@ existing JSONL file.
 The summary prints, for every end-to-end metric that BENCHMARK.json (in
 the change checkout) declares: each side's median and quartiles, the
 change/parent ratio of the medians, in how many seed pairs the change
-was better, and whether the median gap exceeds the parent's IQR. Then
-each operation kind's median per side (the median over runs of each
-run's own median for that kind), and the `failed` operations and the
-runs without a result, per side.
+was better, and whether the median gap exceeds the parent's IQR. Then,
+for each operation kind, each side's median and quartiles over runs of
+each run's own median for that kind, and in how many seed pairs the
+change's was lower; then the `failed` operations and the runs without
+a result, per side.
 """
 import argparse
 import json
@@ -70,6 +71,15 @@ def quartiles(xs):
     return q1, med, q3
 
 
+def better_pairs(vals, lower):
+    """In how many seeds run on both sides the change was better, and
+    how many such seeds there are; ties count for neither side."""
+    pairs = sorted(set(vals["parent"]) & set(vals["change"]))
+    better = sum((vals["change"][s] < vals["parent"][s]) == lower
+                 and vals["change"][s] != vals["parent"][s] for s in pairs)
+    return better, len(pairs)
+
+
 def summarize(records, workload, metrics):
     by = {side: {} for side in SIDES}
     kinds = {side: {} for side in SIDES}
@@ -86,18 +96,23 @@ def summarize(records, workload, metrics):
             print(f"{name}: no data")
             continue
         (pq1, pm, pq3), (cq1, cm, cq3) = (quartiles(sorted(vals[s].values())) for s in SIDES)
-        pairs = sorted(set(vals["parent"]) & set(vals["change"]))
-        better = sum((vals["change"][s] < vals["parent"][s]) == lower
-                     and vals["change"][s] != vals["parent"][s] for s in pairs)
+        better, pairs = better_pairs(vals, lower)
         gap = (pm - cm) if lower else (cm - pm)
         print(f"{name}: parent {pm:.4g} ({pq1:.4g}-{pq3:.4g})  change {cm:.4g} ({cq1:.4g}-{cq3:.4g})"
-              f"  ratio {cm / pm if pm else float('nan'):.3f}  better {better}/{len(pairs)}"
+              f"  ratio {cm / pm if pm else float('nan'):.3f}  better {better}/{pairs}"
               f"  gap>parent IQR {gap > pq3 - pq1}")
     for kind in sorted({k for side in SIDES for ks in kinds[side].values() for k in ks}):
-        meds = {side: [ks[kind] for ks in kinds[side].values() if kind in ks] for side in SIDES}
-        print(f"kind {kind} (ms): " + "  ".join(
-            f"{side} {statistics.median(meds[side]):.0f} (n={len(meds[side])})" if meds[side]
-            else f"{side} no data" for side in SIDES))
+        vals = {side: {s: ks[kind] for s, ks in kinds[side].items() if kind in ks}
+                for side in SIDES}
+        spread = []
+        for side in SIDES:
+            if vals[side]:
+                q1, med, q3 = quartiles(sorted(vals[side].values()))
+                spread.append(f"{side} {med:.0f} ({q1:.0f}-{q3:.0f}, n={len(vals[side])})")
+            else:
+                spread.append(f"{side} no data")
+        better, pairs = better_pairs(vals, lower=True)
+        print(f"kind {kind} (ms): " + "  ".join(spread) + f"  better {better}/{pairs}")
     for side in SIDES:
         runs = by[side].values()
         failed = sum(res["failed"] for res in runs if res)
