@@ -3,7 +3,7 @@ package graft.ext
 import graft.lake.{BucketedUpsert, FileStats}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Persisted inverted index for BM25 retrieval — the index-maintenance
   * half of the `t_bm25_topk` ranking query. Without an index, every
@@ -30,10 +30,11 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * Scale: ingest is one tokenize pass over the batch + touched-bucket
   * rewrites; query-side term filters push into the postings scan
   * (tok IN (...) on a column the parquet reader sees). The search has
-  * two arms, chosen by input size. While both tables fit the localize
-  * bounds, one scan job collects the query terms' postings and the
-  * doc-stats rows and the driver ranks them, so a search costs one job
-  * however small the index. Past the bounds, df is
+  * two arms, chosen by input size from table metadata. While both
+  * tables fit the localize bounds and the rows to rank stay under
+  * [[DriverMaxRows]], one scan job collects the query terms' postings
+  * and the doc-stats rows and the driver ranks them with the same
+  * expressions, so a small search costs one job. Otherwise df is
   * |query-vocabulary|-sized, corpus stats are a 1-row broadcast, and
   * the final top-k is TakeOrderedAndProject — exactly the proven
   * t_bm25_topk plan, minus the corpus re-tokenization.
@@ -321,10 +322,11 @@ object Bm25Index {
     * (doc_id, bm25), best first, ties by doc_id.
     *
     * When both index tables fit the localize bounds
-    * ([[graft.lake.FileStats.withinLocalizeBounds]]) the search is
-    * EAGER: it runs one scan job here, collecting the query terms'
-    * postings and the doc-stats rows, ranks them on the driver and
-    * returns the top k as a local relation. Past the bounds it returns
+    * ([[graft.lake.FileStats.localizableRows]]) and the rows to rank,
+    * estimated from their row counts, stay under [[DriverMaxRows]], the
+    * search is EAGER: it runs one scan job here, collecting the query
+    * terms' postings and the doc-stats rows, ranks them on the driver
+    * and returns the top k as a local relation. Otherwise it returns
     * the distributed plan, which runs at the caller's action. */
   def topK(spark: SparkSession, root: String, terms: Seq[String],
            k: Int): DataFrame =
@@ -339,12 +341,16 @@ object Bm25Index {
       .filter(col("tok").isin(terms: _*))
       .select("tok", "doc_id", "dl", "tf")
     val docstats = BucketedUpsert.read(spark, docstatsRoot(root))
-    val idKind = DriverRank.keyKind(postings.schema("doc_id").dataType)
-    val local = idKind.nonEmpty &&
-      Seq(postingsRoot(root), docstatsRoot(root)).forall(r =>
-        FileStats.withinLocalizeBounds(spark,
-          BucketedUpsert.dataDirs(spark, r), localMaxBytes))
-    if (local) rankOnDriver(spark, postings, docstats, idKind.get, k)
+    val local = Seq(postingsRoot(root), docstatsRoot(root)).map(r =>
+      FileStats.localizableRows(spark, BucketedUpsert.dataDirs(spark, r), localMaxBytes)
+    ) match {
+      // the rows the driver ranks: every doc-stats row, and at most
+      // one posting per term and document
+      case Seq(Some(post), Some(docs)) =>
+        docs + math.min(post, docs * terms.distinct.length) <= DriverMaxRows
+      case _ => false
+    }
+    if (local) rankOnDriver(spark, postings, docstats, k)
     else {
       val tf = graft.operators.SeqIds.pin(postings)
       val dfreq = tf.groupBy("tok").agg(count(lit(1)).cast("double").as("df"))
@@ -353,61 +359,61 @@ object Bm25Index {
       tf.join(broadcast(dfreq), "tok")
         .crossJoin(broadcast(stats))
         .groupBy("doc_id")
-        .agg(round(sum(
-          log((col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)) *
-            col("tf") * lit(K1 + 1.0) /
-            (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / col("avgdl")))), 6)
-          .as("bm25"))
+        .agg(round(sum(termScore), 6).as("bm25"))
         .orderBy(desc("bm25"), col("doc_id"))
         .limit(k)
     }
   }
 
-  /** BM25's term-frequency saturation (k1) and length normalization (b). */
-  private val K1 = 1.2
-  private val B = 0.75
+  /** The most rows [[topK]]'s driver arm ranks, by its estimate. Timed
+    * on 4 vCPU, the driver arm took 0.5 of the distributed plan's time
+    * at 2,000 rows (1,000 docs, one term), 0.7 at the sf0.1 fixture's
+    * 20,000, and broke even at 100,000 docs with 37,000 hits; a
+    * posting costs the driver about ten times a doc-stats row. */
+  private val DriverMaxRows = 1L << 15
+
+  /** One posting's BM25 term score (k1=1.2, b=0.75) from its tf and dl,
+    * the term's document frequency df and the corpus's n and avgdl. */
+  private val termScore: Column = {
+    val (k1, b) = (1.2, 0.75)
+    log((col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)) *
+      col("tf") * lit(k1 + 1.0) /
+      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))
+  }
 
   /** The driver arm of [[topK]]: one job collects the term-filtered
-    * postings unioned with the doc-stats rows (marked by a NULL tok),
-    * then the distributed plan's arithmetic runs in Scala — the same
-    * expression tree in the same association, StrictMath.log as
-    * Spark's `log`, Spark's `/` and `round`. Only the order in which a
-    * document's per-term scores (and the corpus's `dl`s, all integral)
-    * are summed may differ from Spark's partial aggregates, which the
-    * 1e-6 rounding absorbs. */
+    * postings unioned with the doc-stats rows (marked by a NULL tok).
+    * The aggregates (df, n, avgdl, and each document's sum over its
+    * terms) are added up here; [[termScore]], `round` and the order are
+    * Spark's, evaluated on the driver ([[DriverRank]]). Only the order
+    * in which the sums add may differ from Spark's partial aggregates,
+    * which the 1e-6 rounding absorbs. */
   private def rankOnDriver(spark: SparkSession, postings: DataFrame,
-                           docstats: DataFrame, idKind: DriverRank.KeyKind,
-                           k: Int): DataFrame = {
-    import DriverRank.{D, divide, times}
+                           docstats: DataFrame, k: Int): DataFrame = {
     val rows = postings.union(docstats.select(lit(null).cast("string").as("tok"),
         col("doc_id"), col("dl"), lit(null).cast("double").as("tf")))
       .collect()
     val (hits, stats) = rows.partition(!_.isNullAt(0))
-    val ansi = spark.sessionState.conf.ansiEnabled
-    def dbl(r: Row, i: Int): D = if (r.isNullAt(i)) null else r.getDouble(i)
-    val n = stats.length.toDouble
     val dls = stats.filterNot(_.isNullAt(2)).map(_.getDouble(2))
-    val avgdl: D = if (dls.isEmpty) null else dls.sum / dls.length
+    val avgdl = if (dls.isEmpty) null else dls.sum / dls.length
     val df = hits.groupBy(_.getString(0)).map { case (t, rs) => t -> rs.length.toDouble }
-    def score(r: Row): D = {
-      val (tf, dl, dfr) = (dbl(r, 3), dbl(r, 2), df(r.getString(0)))
-      val idf = DriverRank.log(divide((n - dfr) + 0.5, dfr + 0.5, ansi) + 1.0)
-      val norm = divide(times(B, dl), avgdl, ansi)
-      val denom: D = if (tf == null || norm == null) null
-        else tf + K1 * ((1.0 - B) + norm)
-      divide(times(times(idf, tf), K1 + 1.0), denom, ansi)
+    val scoreIn = StructType(postings.schema.fields.tail ++ Seq("df", "n", "avgdl")
+      .map(StructField(_, DoubleType)))
+    val scores = DriverRank.local(spark, scoreIn, hits.toSeq.map(r =>
+        Row(r.get(1), r.get(2), r.get(3), df(r.getString(0)), stats.length.toDouble, avgdl)))
+      .select(col("doc_id"), termScore.as("s")).collect()
+    // Spark's sum: NULL terms skipped, NULL when every term is
+    val sums = scores.groupBy(_.get(0)).toSeq.map { case (id, rs) =>
+      val s = rs.filterNot(_.isNullAt(1)).map(_.getDouble(1))
+      Row(id, if (s.isEmpty) null else s.sum)
     }
-    val ranked = hits.groupBy(_.get(1)).toSeq.map { case (id, rs) =>
-      val scores = rs.map(score).filter(_ != null)
-      (id, DriverRank.round(
-        if (scores.isEmpty) null else scores.map(_.doubleValue).sum, 6))
-    }.sortWith { case ((ia, a), (ib, b)) => DriverRank.before(idKind)(ia, a, ib, b) }
-    val schema = StructType(Seq(postings.schema("doc_id"),
-      StructField("bm25", DoubleType, nullable = true)))
+    val ranked = DriverRank.local(spark, StructType(Seq(postings.schema("doc_id"),
+        StructField("s", DoubleType))), sums)
+      .select(col("doc_id"), round(col("s"), 6).as("bm25"))
     // the limit keeps Spark's check on k: a negative k fails as it does
     // in the distributed plan
-    spark.createDataFrame(java.util.Arrays.asList(
-      ranked.take(math.max(k, 0)).map { case (id, s) => Row(id, s) }: _*), schema)
+    DriverRank.localCatalyst(spark, ranked.schema, DriverRank.topPerPartition(ranked,
+        Nil, Seq(desc("bm25"), col("doc_id")), k).flatten)
       .limit(k)
   }
 }

@@ -1,87 +1,62 @@
 package graft.ext
 
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{RowOrdering, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Spark's SQL semantics for the driver arms of [[Bm25Index.topK]] and
-  * [[Ivf.searchIndex]], which rank rows in Scala that the distributed
-  * plans rank with Catalyst expressions, and must return the same rows
-  * in the same order. A nullable double is a boxed `java.lang.Double`,
-  * NULL being `null`.
+/** Ranking for the driver arms of [[Bm25Index.topK]] and
+  * [[Ivf.searchIndex]], which must return the rows the distributed plans
+  * return, in the same order. The arms score rows with the distributed
+  * plans' own Column expressions in a `select` over a local relation,
+  * which the optimizer evaluates on the driver (ConvertToLocalRelation)
+  * without a job; this object sorts them with the sort orders Catalyst
+  * resolves for the same `ORDER BY`, so arithmetic, NULL and NaN order
+  * and key collation are Spark's.
   */
 private[ext] object DriverRank {
 
-  type D = java.lang.Double
+  /** `rows` under `schema` as a local relation. */
+  def local(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
-  /** Spark's double `/`: NULL when either side is NULL; on a zero
-    * divisor NULL, or under ANSI mode the DIVIDE_BY_ZERO error (the
-    * divisor is checked first, so a NULL dividend over zero is NULL). */
-  def divide(a: D, b: D, ansi: Boolean): D =
-    if (b == null || (!ansi && b.doubleValue == 0.0) || a == null) null
-    else if (b.doubleValue == 0.0) throw org.apache.spark.sql.graft.ColumnBridge.divideByZero()
-    else a.doubleValue / b.doubleValue
+  /** Catalyst rows `rows` under `schema` as a local relation. */
+  def localCatalyst(spark: SparkSession, schema: StructType,
+                    rows: Seq[InternalRow]): DataFrame =
+    ColumnBridge.localFrame(spark, schema, rows)
 
-  /** Spark's `log`: StrictMath.log, NULL at or below zero. */
-  def log(x: D): D =
-    if (x == null || x.doubleValue <= 0.0) null else StrictMath.log(x.doubleValue)
+  /** `rows` of `schema` in Catalyst's unsafe form, each converted once,
+    * so relations built from them share their arrays. */
+  def internal(schema: StructType, rows: Seq[Row]): Seq[InternalRow] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val unsafe = UnsafeProjection.create(schema)
+    rows.map(r => unsafe(toCatalyst(r).asInstanceOf[InternalRow]).copy())
+  }
 
-  /** `a · b`, NULL when either side is. */
-  def times(a: D, b: D): D =
-    if (a == null || b == null) null else a.doubleValue * b.doubleValue
-
-  /** Spark's `desc` on doubles: NaN first, NULL last, 0.0 equal to
-    * -0.0 (SQLOrderingUtil.compareDoubles). */
-  private def compareDesc(a: D, b: D): Int =
-    if (a == null) { if (b == null) 0 else 1 }
-    else if (b == null) -1
-    else {
-      val (x, y) = (a.doubleValue, b.doubleValue)
-      if (x == y) 0 else java.lang.Double.compare(y, x)
+  /** The rows of `df` — a frame the optimizer folds into a local
+    * relation — that `row_number() OVER (PARTITION BY part ORDER BY
+    * order) <= n` keeps, in Catalyst form under `df.schema`: one run
+    * per partition, runs in `part` order, each in `order`. */
+  def topPerPartition(df: DataFrame, part: Seq[Column], order: Seq[Column],
+                      n: Int): Seq[Seq[InternalRow]] = {
+    val (sortOrder, lr) = df.orderBy(part ++ order: _*).queryExecution.optimizedPlan match {
+      case Sort(o, true, lr: LocalRelation, _) => (o, lr)
+      // Catalyst drops the sort of an empty or one-row relation
+      case lr: LocalRelation if lr.data.length <= 1 => (Nil, lr)
+      case p => throw new IllegalArgumentException(s"not a driver-resident frame:\n$p")
     }
-
-  /** Key columns the driver arms rank and compare: the integral types,
-    * compared as longs, and the binary-collated string. */
-  sealed trait KeyKind
-  private case object Integral extends KeyKind
-  private case object Utf8 extends KeyKind
-
-  def keyKind(dt: DataType): Option[KeyKind] = dt match {
-    case ByteType | ShortType | IntegerType | LongType => Some(Integral)
-    case StringType => Some(Utf8)
-    case _ => None
-  }
-
-  /** Spark's ascending order on a key of `kind`, NULL first. Strings
-    * compare by their UTF-8 bytes, as Spark's do. */
-  def compareKeys(kind: KeyKind)(a: Any, b: Any): Int =
-    if (a == null) { if (b == null) 0 else -1 }
-    else if (b == null) 1
-    else kind match {
-      case Integral => java.lang.Long.compare(asLong(a), asLong(b))
-      case Utf8 => UTF8String.fromString(a.toString)
-        .compareTo(UTF8String.fromString(b.toString))
+    val rows = lr.data.toArray.sorted(RowOrdering.create(sortOrder, lr.output))
+    val samePart = RowOrdering.create(sortOrder.take(part.length), lr.output)
+    val runs = Seq.newBuilder[Seq[InternalRow]]
+    var i = 0
+    while (i < rows.length) {
+      var j = i + 1
+      while (j < rows.length && samePart.compare(rows(i), rows(j)) == 0) j += 1
+      runs += rows.slice(i, math.min(j, i + math.max(n, 0))).toSeq
+      i = j
     }
-
-  /** `true` when (key `ka`, score `sa`) ranks before (`kb`, `sb`) in
-    * `ORDER BY score DESC, key` — the order of every window and top-k
-    * the driver arms replace. */
-  def before(kind: KeyKind)(ka: Any, sa: D, kb: Any, sb: D): Boolean = {
-    val c = compareDesc(sa, sb)
-    if (c != 0) c < 0 else compareKeys(kind)(ka, kb) < 0
+    runs.result()
   }
-
-  /** Spark's `=` on two non-NULL keys of `kind`. */
-  def sameKey(kind: KeyKind)(a: Any, b: Any): Boolean = kind match {
-    case Integral => asLong(a) == asLong(b)
-    case Utf8 => a == b
-  }
-
-  private def asLong(v: Any): Long = v.asInstanceOf[Number].longValue
-
-  /** Spark's `round(x, scale)` on a double (HALF_UP through the
-    * decimal rendering; NaN and infinities pass through). */
-  def round(x: D, scale: Int): D =
-    if (x == null || x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x.doubleValue)
-      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue
 }

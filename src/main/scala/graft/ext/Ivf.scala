@@ -6,7 +6,7 @@ import graft.plans.GraftFunctions
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** IVF (inverted-file) approximate nearest-neighbor search — the real
   * quantizer behind the scale path that `ann_ivf_bucketed` demonstrates
@@ -284,11 +284,9 @@ object Ivf {
              centroids: DataFrame, topK: Int, nProbe: Int): DataFrame = {
     GraftFunctions.register(spark)
     val probes = queries.crossJoin(broadcast(centroids))
-      .withColumn("score",
-        expr("graft_dot(qemb, centroid)")
-          / (expr("graft_norm(qemb)") * expr("graft_norm(centroid)")))
+      .withColumn("score", cosine("qemb", "centroid"))
       .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("score").desc, col("cell"))))
+        Window.partitionBy("qid").orderBy(probeOrder: _*)))
       .filter(col("rn") <= nProbe)
       .select(col("qid"), col("qemb"), col("cell"))
     // probes is query-batch-sized × nProbe — ALWAYS the small side, but
@@ -298,14 +296,21 @@ object Ivf {
     // map-side probe (searchPq already carried it)
     corpusWithCells.join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos",
-        expr("graft_dot(qemb, embedding)")
-          / (expr("graft_norm(qemb)") * expr("graft_norm(embedding)")))
+      .withColumn("cos", cosine("qemb", "embedding"))
       .withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))))
+        Window.partitionBy("qid").orderBy(hitOrder: _*)))
       .filter(col("rank") <= topK)
       .select("qid", "rank", "vec_id", "cos")
   }
+
+  /** The cosine of two `array<float>` columns (graft functions
+    * registered). */
+  private def cosine(a: String, b: String): Column =
+    expr(s"graft_dot($a, $b)") / (expr(s"graft_norm($a)") * expr(s"graft_norm($b)"))
+
+  /** A query's probe order over the cells, and its hit order. */
+  private val probeOrder = Seq(col("score").desc, col("cell"))
+  private val hitOrder = Seq(col("cos").desc, col("vec_id"))
 
   // ------------------------------------------------------------------
   // Persisted index: build once, search many, append incrementally.
@@ -319,9 +324,10 @@ object Ivf {
   // daily-ingest shape at 100 TB: index build is one corpus pass, a
   // day's append costs O(batch + touched buckets), search reads the
   // stored assignment instead of recomputing it per query batch. While
-  // the corpus table fits the localize bounds, a search runs on the
-  // driver: the probes come from the localized centroids and one scan
-  // job reads only the probed cells' rows (see searchIndex).
+  // the corpus table fits the localize bounds and a query batch would
+  // score few corpus rows, a search runs on the driver: the probes come
+  // from the localized centroids and one scan job reads only the probed
+  // cells' rows (see searchIndex).
   //
   // A re-train (new centroids) is a NEW index root by design:
   // centroids define what a cell id means, so mixing quantizer
@@ -493,15 +499,17 @@ object Ivf {
     * [[search]] over the live corpus and centroids, columns
     * (qid, rank, vec_id, cos).
     *
-    * When the query batch fits the localize byte bound by its plan
-    * statistics, the centroids are localized and the corpus table fits
-    * the localize bounds ([[graft.lake.FileStats.withinLocalizeBounds]]),
-    * the search is EAGER: it collects the queries (no job for a
-    * LocalRelation), picks each query's probes on the driver from the
-    * localized centroids, runs one scan job here for the corpus rows in
-    * the probed cells, ranks them on the driver and returns a local
-    * relation ordered by (qid, rank). Past the bounds it returns the
-    * distributed plan, which runs at the caller's action. */
+    * When the centroids are localized, the corpus table fits the
+    * localize bounds ([[graft.lake.FileStats.localizableRows]]), the
+    * query plan bounds its row count (a local relation or a limit) and
+    * the (query, corpus row) pairs to score, estimated from the average
+    * cell, stay under [[DriverMaxPairs]], the search is EAGER: it
+    * collects the queries (no job for a local relation), picks each
+    * query's probes on the driver from the localized centroids, runs
+    * one scan job here for the corpus rows in the probed cells, ranks
+    * them on the driver and returns a local relation ordered by
+    * (qid, rank). Otherwise it returns the distributed plan, which
+    * runs at the caller's action. */
   def searchIndex(spark: SparkSession, root: String, queries: DataFrame,
                   topK: Int, nProbe: Int): DataFrame =
     searchIndexBounded(spark, root, queries, topK, nProbe, FileStats.LocalizeMaxBytes)
@@ -518,82 +526,64 @@ object Ivf {
       .getOrElse(search(spark, corpus, queries, centroids, topK, nProbe))
   }
 
+  /** The most (query, corpus row) pairs [[searchIndex]]'s driver arm
+    * scores, by its estimate. Timed on 4 vCPU with 32-dim vectors in 16
+    * cells, the driver arm took 0.5 of the distributed plan's time at
+    * 1,250 pairs, 0.9 at 30,000–40,000, and 1.3 at 60,000–80,000. */
+  private val DriverMaxPairs = 1L << 15
+
   /** The driver arm of [[searchIndex]], or None when its inputs do not
-    * fit it. The probe and hit windows of [[search]] run in Scala: the
-    * cosine through the shared [[graft.plans.VectorKernel]] and Spark's
-    * `/`, NaN first and NULL last in descending order, ties by cell and
-    * by vec_id, the self-match dropped, and every query row sharing a
-    * qid ranked in one window. */
+    * fit it: [[search]]'s probe and hit windows over driver-side rows,
+    * scored with the same [[cosine]] and ranked in the same order by
+    * [[DriverRank]]. */
   private def searchOnDriver(spark: SparkSession, corp: String, corpus: DataFrame,
                              queries: DataFrame, centroids: DataFrame, topK: Int,
                              nProbe: Int, localMaxBytes: Long): Option[DataFrame] = {
-    import DriverRank.{divide, times}
-    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-    import org.apache.spark.sql.types._
-    def field(df: DataFrame, name: String) = df.schema.find(_.name == name)
-    val floats = (f: Option[StructField]) =>
-      f.exists(_.dataType.isInstanceOf[ArrayType]) &&
-        f.get.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    val (qidF, vecIdF) = (field(queries, "qid"), field(corpus, "vec_id"))
-    val kind = for {
-      q <- qidF; v <- vecIdF
-      qk <- DriverRank.keyKind(q.dataType); vk <- DriverRank.keyKind(v.dataType)
-      if qk == vk
-    } yield qk
-    val cellKind = field(centroids, "cell").flatMap(f => DriverRank.keyKind(f.dataType))
-    val fits = kind.nonEmpty && cellKind.nonEmpty && floats(field(queries, "qemb")) &&
-      floats(field(corpus, "embedding")) && floats(field(centroids, "centroid")) &&
-      queries.queryExecution.optimizedPlan.stats.sizeInBytes <= localMaxBytes
-    val cents = if (fits) FileStats.localRows(centroids.select("cell", "centroid")) else None
-    if (cents.isEmpty ||
-        !FileStats.withinLocalizeBounds(spark, BucketedUpsert.dataDirs(spark, corp),
-          localMaxBytes)) return None
-
-    val ansi = spark.sessionState.conf.ansiEnabled
-    final class Vec(v: Any) {
-      val data: ArrayData = v match {
-        case null => null
-        case s: scala.collection.Seq[_] => new GenericArrayData(s.toArray[Any])
-      }
-      val ok = data != null && !graft.plans.VectorKernel.hasNullElem(data)
-      val norm: DriverRank.D = if (ok) graft.plans.VectorKernel.norm(data) else null
-      def cos(o: Vec): DriverRank.D = divide(
-        if (ok && o.ok) graft.plans.VectorKernel.dot(data, o.data) else null,
-        times(norm, o.norm), ansi)
-    }
-    val cellVecs = cents.get.map(r => (r.get(0), new Vec(r.get(1))))
-    val byQid = queries.select("qid", "qemb").collect()
-      .groupBy(r => Option(r.get(0))).toSeq
-      .sortWith((a, b) => DriverRank.compareKeys(kind.get)(a._1.orNull, b._1.orNull) < 0)
-    // each qid's probes: (query vector, cell), best nProbe of its rows × cells
-    val probes = byQid.map { case (qid, qs) =>
-      qid -> qs.toSeq.flatMap { r =>
-        val q = new Vec(r.get(1))
-        cellVecs.map { case (cell, c) => (q, cell, q.cos(c)) }
-      }.sortWith { case ((_, ca, a), (_, cb, b)) => DriverRank.before(cellKind.get)(ca, a, cb, b)
-      }.take(math.max(nProbe, 0)).map { case (q, cell, _) => (q, cell) }
-    }
-    val probed = probes.flatMap(_._2.map(_._2)).distinct
-    val inCell = corpus.filter(col("cell").isin(probed: _*))
-      .select("vec_id", "cell", "embedding").collect()
-      .groupBy(_.get(1)).map { case (cell, rs) =>
-        cell -> rs.toSeq.map(r => (r.get(0), new Vec(r.get(2)))) }
-    val rows = probes.flatMap {
-      case (None, _) => Nil // vec_id <> NULL is never true
-      case (Some(qid), ps) =>
-        ps.flatMap { case (q, cell) =>
-          inCell.getOrElse(cell, Nil).collect {
-            case (id, e) if id != null && !DriverRank.sameKey(kind.get)(id, qid) =>
-              (id, q.cos(e))
-          }
-        }.sortWith { case ((ia, a), (ib, b)) => DriverRank.before(kind.get)(ia, a, ib, b)
-        }.take(math.max(topK, 0)).zipWithIndex.map { case ((id, s), i) =>
-          Row(qid, i + 1, id, s)
-        }
-    }
-    val schema = StructType(Seq(qidF.get, StructField("rank", IntegerType, nullable = false),
-      vecIdF.get, StructField("cos", DoubleType, nullable = true)))
-    Some(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.JoinedRow
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val cents = FileStats.localRows(centroids.select("cell", "centroid"),
+      FileStats.LocalizeMaxRows).filter(_.nonEmpty).getOrElse(return None)
+    // the (query, corpus row) pairs the driver scores, by the average
+    // cell: each query probes min(nProbe, cells) cells
+    val pairs = for {
+      nq <- queries.queryExecution.optimizedPlan.maxRows
+      rows <- FileStats.localizableRows(spark, BucketedUpsert.dataDirs(spark, corp),
+        localMaxBytes)
+    } yield nq * math.min(math.max(nProbe, 0), cents.length) *
+      math.ceil(rows.toDouble / cents.length)
+    if (!pairs.exists(_ <= DriverMaxPairs)) return None
+    GraftFunctions.register(spark)
+    // every vector is converted to Catalyst's form once; the probe and
+    // hit relations pair those rows without copying them
+    val (q, c) = (queries.select("qid", "qemb"), centroids.select("cell", "centroid"))
+    val (qs, cs) = (DriverRank.internal(q.schema, q.collect().toSeq),
+      DriverRank.internal(c.schema, cents.toSeq))
+    val probes = DriverRank.topPerPartition(
+      DriverRank.localCatalyst(spark, StructType(q.schema ++ c.schema),
+          for (a <- qs; b <- cs) yield new JoinedRow(a, b))
+        .withColumn("score", cosine("qemb", "centroid")),
+      Seq(col("qid")), probeOrder, nProbe).flatten
+    // each probe as (its query's (qid, qemb), the probed cell)
+    val probeOf = probes.map(p => (InternalRow(p.get(0, q.schema(0).dataType), p.getArray(1)),
+      p.getInt(2)))
+    val e = corpus.filter(col("cell").isin(probeOf.map(_._2).distinct: _*))
+      .select("vec_id", "cell", "embedding")
+    val inCell = DriverRank.internal(e.schema, e.collect().toSeq).groupBy(_.getInt(1))
+    val hits = DriverRank.localCatalyst(spark, StructType(q.schema ++ e.schema), for {
+        (qr, cell) <- probeOf; r <- inCell.getOrElse(cell, Nil)
+      } yield new JoinedRow(qr, r))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id"), cosine("qemb", "embedding").as("cos"))
+    val schema = StructType(Seq(hits.schema("qid"),
+      StructField("rank", IntegerType, nullable = false), hits.schema("vec_id"),
+      hits.schema("cos")))
+    val rows = DriverRank.topPerPartition(hits, Seq(col("qid")), hitOrder, topK)
+      .flatMap(_.zipWithIndex.map { case (r, i) =>
+        InternalRow(r.get(0, schema(0).dataType), i + 1, r.get(1, schema(2).dataType),
+          r.get(2, schema(3).dataType))
+      })
+    Some(DriverRank.localCatalyst(spark, schema, rows))
   }
 
   // ------------------------------------------------------------------

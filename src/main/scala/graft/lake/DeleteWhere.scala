@@ -89,14 +89,8 @@ object DeleteWhere {
     val cols = parts.head.columns
     val aligned = parts.map(p => p.select(cols.map(col): _*))
     val schema = aligned.head.schema
-    def localRows(df: DataFrame): Option[Array[org.apache.spark.sql.Row]] =
-      df.queryExecution.optimizedPlan match {
-        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-            if lr.data.length <= 100000 => Some(df.collect())
-        case _ => None
-      }
     val rowSets =
-      if (LocalParquet.supported(schema)) aligned.map(localRows)
+      if (LocalParquet.supported(schema)) aligned.map(FileStats.localRows(_, 100000))
       else Seq(None)
     if (rowSets.forall(_.isDefined))
       LocalParquet.overwrite(spark, dir, schema,

@@ -278,10 +278,11 @@ object FileStats {
   // Safety: the memo key is the dir's LISTING (name, len, mtime of
   // every live parquet file), so any rewrite — even of a flat
   // non-pointer dir — misses the memo and re-reads.
-  // The same two bounds ([[withinLocalizeBounds]]) also pick the
-  // driver arm of the index searches (`Bm25Index.topK`,
-  // `Ivf.searchIndex`): a search whose tables fit them collects its
-  // inputs in one scan and ranks them on the driver.
+  // The same two bounds ([[localizableRows]]) also gate the driver arm
+  // of the index searches (`Bm25Index.topK`, `Ivf.searchIndex`): a
+  // search whose tables fit them, and whose ranking work estimated
+  // from their row counts is small, collects its inputs in one scan
+  // and ranks them on the driver.
 
   private[graft] val LocalizeMaxBytes = 8L << 20
   /** Row bound on localization (ADVICE r21, medium): compressed bytes
@@ -348,23 +349,19 @@ object FileStats {
       .sorted.mkString(","), listed))
   }
 
-  /** `true` when `files` hold at most `maxBytes` listed bytes and at
-    * most [[LocalizeMaxRows]] rows by their footers (opened only when
-    * the bytes fit). */
-  private def fitsBounds(spark: SparkSession,
-                         files: Seq[org.apache.hadoop.fs.FileStatus],
-                         maxBytes: Long): Boolean =
-    files.map(_.getLen).sum <= maxBytes &&
-      footerRows(spark, files) <= LocalizeMaxRows
-
-  /** `true` when the parquet dirs `dirs` TOGETHER fit the localize
-    * bounds — the test [[localizedRows]] applies to one dir, made from
-    * one listing of each dir and its footers, with no Spark job.
-    * `maxBytes` is the byte bound: [[LocalizeMaxBytes]], or lower in
-    * tests (0 fails every non-empty dir). */
-  private[graft] def withinLocalizeBounds(spark: SparkSession, dirs: Seq[String],
-                                          maxBytes: Long): Boolean =
-    fitsBounds(spark, listDirs(spark, dirs), maxBytes)
+  /** The rows of the parquet dirs `dirs` together when they fit the
+    * localize bounds — the test [[localizedRows]] applies to one dir,
+    * made from one listing of each dir and its footers (opened only
+    * when the bytes fit; counts memoized, [[footerRowMemo]]), with no
+    * Spark job — else None. `maxBytes` is the byte bound:
+    * [[LocalizeMaxBytes]], or lower in tests (0 fails every non-empty
+    * dir). */
+  private[graft] def localizableRows(spark: SparkSession, dirs: Seq[String],
+                                     maxBytes: Long): Option[Long] = {
+    val files = listDirs(spark, dirs)
+    if (files.map(_.getLen).sum > maxBytes) None
+    else Some(memoFooterRows(spark, files)).filter(_ <= LocalizeMaxRows)
+  }
 
   private def remember(key: String,
                        schema: org.apache.spark.sql.types.StructType,
@@ -388,7 +385,8 @@ object FileStats {
     if (localTooBig.contains(key)) return None
     val hit = localMemo.get(key)
     if (hit != null) return Some(hit)
-    if (!fitsBounds(spark, listed, LocalizeMaxBytes)) {
+    if (listed.map(_.getLen).sum > LocalizeMaxBytes ||
+        footerRows(spark, listed) > LocalizeMaxRows) {
       localTooBig.add(key)
       return None
     }
@@ -416,13 +414,16 @@ object FileStats {
     }
 
   /** The rows of `df` when it is driver-resident — a LocalRelation, or
-    * one under a repartition such as a caller's `coalesce(1)` — read
-    * without a Spark job; None for any other plan. */
-  private[graft] def localRows(df: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
+    * one under a repartition such as a caller's `coalesce(1)` — of at
+    * most `maxRows` rows, read without a Spark job; None for any other
+    * plan or a larger relation, whose rows are then never converted. */
+  private[graft] def localRows(df: DataFrame, maxRows: Long)
+      : Option[Array[org.apache.spark.sql.Row]] = {
     import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
     df.queryExecution.optimizedPlan match {
-      case _: LocalRelation => Some(df.collect()) // LocalTableScan: no job
-      case Repartition(_, _, lr: LocalRelation) =>
+      case lr: LocalRelation if lr.data.length <= maxRows =>
+        Some(df.collect()) // LocalTableScan: no job
+      case Repartition(_, _, lr: LocalRelation) if lr.data.length <= maxRows =>
         // collecting through the repartition would run a job
         val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
           .createToScalaConverter(lr.schema)
@@ -438,7 +439,7 @@ object FileStats {
     * [[deltaOf]]'s pure-driver classification. Distributed frames
     * keep the ordinary distinct. */
   private[lake] def localDistinct(df: DataFrame): DataFrame =
-    localRows(df).fold(df.distinct())(rows =>
+    localRows(df, Long.MaxValue).fold(df.distinct())(rows =>
       df.sparkSession.createDataFrame(
         java.util.Arrays.asList(rows.distinct: _*), df.schema))
 
@@ -446,7 +447,7 @@ object FileStats {
     * LocalRelations (a count() plans an Aggregate — a Spark job even
     * over driver-resident rows). */
   private[lake] def localCount(df: DataFrame): Long =
-    localRows(df).fold(df.count())(_.length.toLong)
+    localRows(df, Long.MaxValue).fold(df.count())(_.length.toLong)
 
   /** Exact row count of complete parquet dirs (or files) from their
     * FOOTERS — a driver-side metadata read replacing a `df.count()`
@@ -474,7 +475,33 @@ object FileStats {
 
   /** Σ footer record counts of `files`. */
   private def footerRows(spark: SparkSession,
-                         files: Seq[org.apache.hadoop.fs.FileStatus]): Long = {
+                         files: Seq[org.apache.hadoop.fs.FileStatus]): Long =
+    footerCounts(spark, files).sum
+
+  /** Footer record counts by file (path, length, mtime), for choosing
+    * an arm by size: a stale count can only pick the other arm of a
+    * search, never change its answer. Cleared whole past 64k files. */
+  private val footerRowMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** [[footerRows]] through [[footerRowMemo]]: only files not seen
+    * before are opened. */
+  private def memoFooterRows(spark: SparkSession,
+                             files: Seq[org.apache.hadoop.fs.FileStatus]): Long = {
+    def key(st: org.apache.hadoop.fs.FileStatus) =
+      s"${st.getPath}|${st.getLen}|${st.getModificationTime}"
+    val known = files.flatMap(st =>
+      Option(footerRowMemo.get(key(st))).map(key(st) -> _.longValue)).toMap
+    val miss = files.filterNot(st => known.contains(key(st)))
+    if (footerRowMemo.size + miss.length > (1 << 16)) footerRowMemo.clear()
+    val fresh = miss.map(key).zip(footerCounts(spark, miss)).toMap
+    fresh.foreach { case (k, n) => footerRowMemo.put(k, n) }
+    (known ++ fresh).values.sum
+  }
+
+  /** The footer record count of each of `files`. */
+  private def footerCounts(spark: SparkSession,
+                           files: Seq[org.apache.hadoop.fs.FileStatus]): Seq[Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
     // footer opens in parallel on the shared pool: one footer per file
     // is metadata-priced but not free serially — a 16-bucket rewrite
@@ -487,7 +514,7 @@ object FileStats {
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
           try r.getRecordCount finally r.close()
         }
-      }, scala.concurrent.duration.Duration(10, "min")).sum
+      }, scala.concurrent.duration.Duration(10, "min"))
   }
 
   /** Publish the next manifest version: `write` lands parquet into a

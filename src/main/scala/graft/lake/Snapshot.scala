@@ -130,7 +130,7 @@ object Snapshot {
       // new snapshot pays no job; plain-primitive ones also write
       // WITHOUT a Spark job (r21 — see [[LocalParquet]]). Data-sized or
       // distributed frames keep the ordinary distributed write.
-      val localRows = FileStats.localRows(df).filter(_.length <= 10000)
+      val localRows = FileStats.localRows(df, 10000)
       localRows match {
         case Some(rows) if LocalParquet.supported(df.schema) =>
           LocalParquet.overwrite(df.sparkSession, dir, df.schema, rows.toSeq)

@@ -39,12 +39,13 @@ private object VectorExpressions {
 }
 
 /** The scalar dot/norm kernel behind `graft_dot` and `graft_norm`'s
-  * interpreted eval and the driver-side IVF ranker
-  * ([[graft.ext.Ivf.searchIndex]]), so a vector scored on the driver
-  * gets the same bits as one scored in a task. The codegen templates in
-  * [[DotProductF]] and [[NormF]] emit the same loops.
+  * interpreted eval, which also scores the driver arm of
+  * [[graft.ext.Ivf.searchIndex]] (a `select` the optimizer folds into a
+  * local relation), so a vector scored on the driver gets the same bits
+  * as one scored in a task. The codegen templates in [[DotProductF]] and
+  * [[NormF]] emit the same loops.
   */
-object VectorKernel {
+private[plans] object VectorKernel {
 
   /** NULL array elements make the whole result NULL — the same policy
     * GeomKernels.hasNullElem establishes, for the same reason: getFloat

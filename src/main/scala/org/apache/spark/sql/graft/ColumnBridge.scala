@@ -1,7 +1,10 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.StructType
 
@@ -16,8 +19,7 @@ import org.apache.spark.sql.types.StructType
   * ingest's dimension lookups: a map literal whose type is known only at
   * run time (`typedLit` needs it at compile time) and `KnownNotNull`.
   * Everything else in this repo goes through the public Column/functions
-  * API (plus `StructType.asNullable` and Spark's divide-by-zero error,
-  * also hidden).
+  * API (plus `StructType.asNullable` and `Dataset.ofRows`, also hidden).
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -25,8 +27,12 @@ object ColumnBridge {
   /** `s` with every field and nested element nullable — the schema a
     * parquet read reports for files written from `s` (`private[spark]`). */
   def asNullable(s: StructType): StructType = s.asNullable
-  /** The error Spark's `/` raises on a zero divisor under ANSI mode, for
-    * driver-side code that evaluates a `/` the same way. */
-  def divideByZero(): ArithmeticException =
-    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+  /** A frame over Catalyst rows already on the driver: a local relation
+    * of `rows` under `schema`, built without converting each value from
+    * its external form as `createDataFrame` does. */
+  def localFrame(spark: SparkSession, schema: StructType,
+                 rows: Seq[InternalRow]): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 }

@@ -287,6 +287,15 @@ class IvfIndexSpec extends SparkSpec {
     assert(sameArms(root, q).nonEmpty)
   }
 
+  test("searchIndex keeps the distributed plan for a query batch of unbounded size") {
+    val all = emb.select(col("vec_id").as("qid"), col("embedding").as("qemb"))
+    val df = Ivf.searchIndex(spark, built, all, topK = 3, nProbe = 2)
+    assert(!df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "a query frame with no row bound gives no pair estimate")
+    assert(sameArms(built, all.limit(8)).nonEmpty)
+  }
+
   test("searchIndex's arms agree on the ann_ivf_persist fixture's own queries") {
     val d = sf()
     val q = graft.Tables.t(spark, d, "embeddings")
